@@ -107,12 +107,12 @@ object GraftConfig {
   /** Sink-connection settings parsed from a `ch://user:pass@host:port` URL —
     * the reference's `ConnectClickHouse` URL handling
     * (`connection/connection.go:31-38`) plus its fixed client settings
-    * (`:46,55-60`), surfaced as writer options a JDBC/connector sink would
-    * consume. */
+    * (`:55-60`), surfaced as writer options a JDBC/connector sink would
+    * consume. The 30 s dial ceiling (`:46`) is fixed in the sink's wire
+    * transports. */
   final case class SinkConn(user: String, password: String,
       host: String, port: Int,
-      dialTimeoutSec: Int = 30, maxExecutionTimeSec: Int = 60,
-      compression: String = "lz4") {
+      maxExecutionTimeSec: Int = 60, compression: String = "lz4") {
 
     /** The client settings as sink options for
       * `graft.sinks.BatchInsertSinkProvider`: pass via
@@ -122,8 +122,7 @@ object GraftConfig {
       * pipeline streams parquet via foreachBatch instead. */
     def writerOptions: Map[String, String] = Map(
       "compression" -> compression,
-      "maxExecutionTimeSec" -> maxExecutionTimeSec.toString,
-      "dialTimeoutSec" -> dialTimeoutSec.toString)
+      "maxExecutionTimeSec" -> maxExecutionTimeSec.toString)
   }
 
   def parseSinkUrl(url: String): Either[String, SinkConn] = {

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import java.io.{BufferedWriter, FileOutputStream, IOException, OutputStreamWriter}
+import java.io.{BufferedOutputStream, ByteArrayOutputStream, FileOutputStream, IOException}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.collection.mutable.ArrayBuffer
@@ -14,62 +14,62 @@ import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactor
 import org.apache.spark.sql.types.{BinaryType, BooleanType, DoubleType, IntegerType, LongType, StringType, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.config.GraftConfig
+
 /** DataSource V2 streaming sink (SURVEY §2.4 K1/K2): the local stand-in
   * for the reference's batched ClickHouse INSERT protocol
   * (`main.go:153-212`, clickhouse-go `PrepareBatch`/`Append`/`Send`),
   * carrying the reference connection's client settings
-  * (`connection/connection.go:46-76`):
+  * (`connection/connection.go:46-76`).
   *
-  *  - K1 batched insert: each task buffers rows and flushes them as one
-  *    block file (the columnar insert block analogue); `batchSize` rows
-  *    per flush mirrors the reference's 1000-row blocks.
-  *  - K2 ack-after-write: task outputs land in a staging directory;
-  *    ONLY the driver-side `commit(epochId, …)` publishes them into the
-  *    table directory (atomic renames). A failed epoch leaves nothing
-  *    visible and replays — the same at-least-once contract as ack-only-
-  *    after-successful-`Send`. Re-publishing an epoch overwrites its own
-  *    files (names are (epoch, partition, attempt-agnostic)), so replayed
-  *    epochs don't duplicate.
-  *  - `compression=lz4` (default, `connection.go:58-60`): blocks are
-  *    LZ4-framed on the wire; here each block file is written through
-  *    `LZ4BlockOutputStream` (the codec Spark ships) as `.jsonl.lz4`.
-  *  - `maxExecutionTimeSec` (default 60, `connection.go:55-57`): the
-  *    server-side query ceiling becomes a writer-side ceiling — a task
-  *    whose writer lifetime exceeds it aborts the epoch at the next
-  *    block-flush boundary (the same contract as the reference, where an
-  *    over-limit INSERT fails and the unacked batch replays; size epochs
-  *    under the ceiling, or raise it, for legitimately long writes).
-  *  - ping-on-open (`connection.go:69-72`): the write path is probed when
-  *    the write is built, so an unreachable/unwritable target fails the
-  *    query at start, not at first epoch commit.
+  * ONE task-side writer ([[BlockWriter]]) runs the reference's
+  * `Append`×N → `Send` loop for every target: it buffers row copies,
+  * sends each `batchSize`-row buffer as one block (the final partial
+  * block at commit), enforces `maxExecutionTimeSec`, and counts blocks
+  * and rows. Where a block goes is its transport, selected by options:
   *
-  * Rows serialize as JSON lines (schema-driven; string/long/int/double/
-  * boolean/timestamp/binary).
+  *  - file (no `url`): each partition's blocks append to one staged
+  *    JSON-lines file; ONLY the driver-side `commit(epochId, …)` publishes
+  *    it into the table directory (atomic rename) — ack-after-write (K2).
+  *    A failed epoch leaves nothing visible and replays; published names
+  *    are (epoch, partition), attempt-agnostic, so a replay overwrites
+  *    itself. `compression=lz4` writes the file through
+  *    `LZ4BlockOutputStream` as `.jsonl.lz4`.
+  *  - HTTP (`url` = `ch://user:pass@host:port`, `wire=http`, + `table`):
+  *    each block is POSTed to the ClickHouse HTTP interface as
+  *    `INSERT INTO <table> FORMAT <insertFormat>` (`JSONEachRow` or the
+  *    byte-exact `RowBinary`). Credentials ride as
+  *    `X-ClickHouse-User`/`X-ClickHouse-Key`, `max_execution_time` as a
+  *    query setting, and `compression=lz4` frames each body
+  *    (`Content-Encoding: lz4`, `connection.go:58-60`).
+  *  - native (`wire=native`): each block is one INSERT on the ClickHouse
+  *    native TCP protocol — the reference's own wire
+  *    (`connection.go:44-60`), always LZ4-framed — over a connection
+  *    opened lazily at the first block and held for the writer's life.
   *
-  * TWO wire paths, selected by options:
+  * On the wires, blocks are Sent task-side (clickhouse-go commits per
+  * `Send`, `main.go:205-210`); the epoch commit is what lets the SOURCE
+  * advance its offsets, which is the ack. Replayed epochs re-send their
+  * blocks (at-least-once, as in the reference; Replicated* engines
+  * deduplicate identical re-inserted blocks by checksum).
   *
-  *  - default (no `url`): blocks land as LZ4-framed local files via
-  *    stage-then-rename — the file-backed stand-in.
-  *  - `url` = a `ch://user:pass@host:port` DSN (+ `table`): each block
-  *    is POSTed over the PUBLIC ClickHouse HTTP interface as
-  *    `INSERT INTO <table> FORMAT JSONEachRow` — a real wire path a
-  *    real ClickHouse accepts (point the DSN at the HTTP port, 8123).
-  *    Credentials ride as `X-ClickHouse-User`/`X-ClickHouse-Key`
-  *    headers, `max_execution_time` as a query setting (the server-side
-  *    ceiling `connection.go:55-57` configures), and `compression=lz4`
-  *    frames each body (`Content-Encoding: lz4`, which the HTTP
-  *    interface decompresses server-side — the LZ4-on-the-wire contract
-  *    of `connection.go:58-60`). Ping-on-open probes `GET /ping`.
-  *    Replayed epochs re-POST their blocks (at-least-once — the same
-  *    contract as the reference; ClickHouse's Replicated* engines
-  *    deduplicate identical re-inserted blocks by checksum).
+  *  - `maxExecutionTimeSec` (default 60, `connection.go:55-57`): a task
+  *    whose writer outlives it fails the epoch before its next block is
+  *    sent (an in-thread check cannot interrupt a send blocked in the OS
+  *    — the guarantee is bounded epochs, not bounded syscalls).
+  *  - ping-on-open (`connection.go:69-72`): the target is probed when the
+  *    write is built (`GET /ping`, native Ping/Pong, or a probe file), so
+  *    an unreachable target fails the query at start, not at first commit.
+  *  - a `wire`, `compression` or `insertFormat` outside its choices, a
+  *    `batchSize` ≤ 0, or `compression=none` on the native wire fails
+  *    `start()` with an IllegalArgumentException.
   *
   * Usage:
   * {{{
   * df.writeStream.format("graft.sinks.BatchInsertSinkProvider")
   *   .option("path", dir).option("batchSize", 1000)
   *   .options(sinkConn.writerOptions)   // from a ch:// URL
-  *   // add for the HTTP wire path:
+  *   // add for a wire transport (wire = http | native):
   *   .option("url", "ch://user:pass@host:8123").option("table", "t")
   *   .option("checkpointLocation", cp).start()
   * }}}
@@ -79,16 +79,33 @@ class BatchInsertSinkProvider extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     new StructType()
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table =
+      properties: java.util.Map[String, String]): Table = {
+    def opt(key: String, default: String): String =
+      Option(properties.get(key)).getOrElse(default)
+    /** A closed-choice option in its canonical spelling; a typo must not
+      * silently select a different behaviour. */
+    def oneOf(key: String, default: String, choices: String*): String = {
+      val v = opt(key, default)
+      choices.find(_.equalsIgnoreCase(v)).getOrElse(
+        throw new IllegalArgumentException(
+          s"sink option $key='$v' (expected one of ${choices.mkString(", ")})"))
+    }
+    val batchSize = opt("batchSize", "1000").toInt
+    require(batchSize > 0, s"sink option batchSize=$batchSize (expected > 0)")
+    val compression = oneOf("compression", "lz4", "lz4", "none")
+    val wire = oneOf("wire", "http", "http", "native")
+    require(wire != "native" || compression == "lz4",
+      "sink option compression=none: the native wire always LZ4-frames its blocks")
     new BatchInsertTable(
       properties.get("path"),
-      Option(properties.get("batchSize")).map(_.toInt).getOrElse(1000),
-      Option(properties.get("compression")).getOrElse("lz4"),
-      Option(properties.get("maxExecutionTimeSec")).map(_.toInt).getOrElse(60),
+      batchSize,
+      compression,
+      opt("maxExecutionTimeSec", "60").toInt,
       Option(properties.get("url")),
-      Option(properties.get("table")).getOrElse("nats_data_all_streams"),
-      Option(properties.get("insertFormat")).getOrElse("JSONEachRow"),
-      Option(properties.get("wire")).getOrElse("http"))
+      opt("table", "nats_data_all_streams"),
+      oneOf("insertFormat", "JSONEachRow", "JSONEachRow", "RowBinary"),
+      wire)
+  }
 }
 
 final class BatchInsertTable(path: String, batchSize: Int,
@@ -104,43 +121,21 @@ final class BatchInsertTable(path: String, batchSize: Int,
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write = new Write {
-        override def toStreaming: StreamingWrite = url match {
-          case Some(dsn) if wire.equalsIgnoreCase("native") =>
-            // The reference's ACTUAL wire: native TCP protocol, LZ4
-            // compressed blocks (`connection/connection.go:44-60`).
-            val conn = graft.config.GraftConfig.parseSinkUrl(dsn)
-              .fold(e => throw new IOException(e), identity)
-            val target = NativeTarget(conn.host, conn.port, chTable,
-              conn.user, conn.password)
-            target.ping() // handshake + Ping/Pong (connection.go:69-72)
-            new BatchInsertStreamingWrite(path, batchSize, compression,
-              maxExecutionTimeSec, info.schema(), None, insertFormat,
-              Some(target))
-          case Some(dsn) =>
-            val conn = graft.config.GraftConfig.parseSinkUrl(dsn)
-              .fold(e => throw new IOException(e), identity)
-            val target = HttpTarget(
-              s"http://${conn.host}:${conn.port}", chTable,
-              conn.user, conn.password)
-            // Ping (connection.go:69-72): GET /ping — a live ClickHouse
-            // answers 200 "Ok."; fail the query at start() otherwise.
-            target.ping()
-            new BatchInsertStreamingWrite(path, batchSize, compression,
-              maxExecutionTimeSec, info.schema(), Some(target), insertFormat)
-          case None =>
-            // Ping: prove the target accepts writes BEFORE any epoch runs
-            // — create the dir and round-trip a probe file.
-            val dir = Paths.get(path)
-            try {
-              Files.createDirectories(dir)
-              val probe = Files.createTempFile(dir, "_ping", "")
-              Files.delete(probe)
-            } catch {
-              case e: Exception =>
-                throw new IOException(s"sink ping failed for $path: $e")
-            }
-            new BatchInsertStreamingWrite(path, batchSize, compression,
-              maxExecutionTimeSec, info.schema(), None)
+        override def toStreaming: StreamingWrite = {
+          val conn = url.map(dsn => GraftConfig.parseSinkUrl(dsn)
+            .fold(e => throw new IOException(e), identity))
+          val (http, native) = conn match {
+            case Some(c) if wire == "native" =>
+              (None, Some(NativeTarget(c.host, c.port, chTable, c.user, c.password)))
+            case Some(c) =>
+              (Some(HttpTarget(s"http://${c.host}:${c.port}", chTable,
+                c.user, c.password)), None)
+            case None => (None, None)
+          }
+          val factory = BlockWriterFactory(path, batchSize, compression,
+            maxExecutionTimeSec, info.schema(), http, insertFormat, native)
+          factory.ping()
+          new BatchInsertStreamingWrite(factory)
         }
       }
     }
@@ -206,7 +201,7 @@ final case class HttpTarget(endpoint: String, table: String,
   private def open(u: String): java.net.HttpURLConnection = {
     val c = java.net.URI.create(u).toURL.openConnection()
       .asInstanceOf[java.net.HttpURLConnection]
-    c.setConnectTimeout(30000) // dial ceiling (connection.go:46)
+    c.setConnectTimeout(BlockTransport.DialTimeoutMs)
     c.setReadTimeout(120000)
     c
   }
@@ -223,32 +218,24 @@ object HttpTarget {
 final case class BlockFileCommit(stagedPath: String, fileName: String)
     extends WriterCommitMessage
 
-/** HTTP-path commit message: blocks were already POSTed task-side. */
+/** Wire commit message (HTTP or native): blocks were already Sent
+  * task-side. */
 final case class HttpBlocksCommit(blocks: Int, rows: Long)
     extends WriterCommitMessage
 
-final class BatchInsertStreamingWrite(path: String, batchSize: Int,
-    compression: String, maxExecutionTimeSec: Int,
-    schema: StructType, http: Option[HttpTarget],
-    insertFormat: String = "JSONEachRow",
-    native: Option[NativeTarget] = None) extends StreamingWrite {
+final class BatchInsertStreamingWrite(factory: BlockWriterFactory)
+    extends StreamingWrite {
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : StreamingDataWriterFactory =
-    BlockWriterFactory(path, batchSize, compression, maxExecutionTimeSec,
-      schema, http, insertFormat, native)
+      : StreamingDataWriterFactory = factory
 
-  /** The single ack point: rename every staged block into the table dir.
-    * Until this runs, nothing is visible (ack-after-write). On the HTTP
-    * path tasks already Sent their blocks (clickhouse-go commits per
-    * `Send`, `main.go:205-210`, before the batcher acks) — the epoch
-    * commit is what lets the SOURCE advance its offsets, which is the
-    * ack; nothing to publish here. */
+  /** The single ack point: rename every staged block file into the table
+    * dir. Until this runs, nothing is visible (ack-after-write). The
+    * wires have nothing staged to publish. */
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    // wire paths (http/native) pass no `path` and have nothing staged
     val staged = messages.collect { case m: BlockFileCommit => m }
     if (staged.nonEmpty) {
-      val dir = Paths.get(path)
+      val dir = Paths.get(factory.path)
       Files.createDirectories(dir)
       staged.foreach { case BlockFileCommit(stagedPath, name) =>
         Files.move(Paths.get(stagedPath), dir.resolve(name),
@@ -257,9 +244,8 @@ final class BatchInsertStreamingWrite(path: String, batchSize: Int,
     }
   }
 
-  /** A failed epoch deletes its staged files (file path); HTTP blocks
-    * already sent cannot be unsent — the epoch replays and re-POSTs
-    * (at-least-once; Replicated* engines dedup identical blocks). */
+  /** A failed epoch deletes its staged files; blocks already sent on a
+    * wire cannot be unsent — the epoch replays and re-sends them. */
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
       case BlockFileCommit(staged, _) => Files.deleteIfExists(Paths.get(staged))
@@ -268,61 +254,72 @@ final class BatchInsertStreamingWrite(path: String, batchSize: Int,
 }
 
 /** Serializable factory shipped to tasks (must not capture the
-  * driver-side StreamingWrite). */
+  * driver-side StreamingWrite). The target is `native` if set, else
+  * `http` if set, else the staged files under `path`. */
 final case class BlockWriterFactory(path: String, batchSize: Int,
     compression: String, maxExecutionTimeSec: Int, schema: StructType,
     http: Option[HttpTarget], insertFormat: String = "JSONEachRow",
     native: Option[NativeTarget] = None)
     extends StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : DataWriter[InternalRow] = (native, http) match {
-    case (Some(target), _) =>
-      new NativeBlockWriter(target, batchSize, maxExecutionTimeSec, schema)
-    case (None, Some(target)) =>
-      new HttpBlockWriter(target, batchSize, compression,
-        maxExecutionTimeSec, schema, insertFormat)
+
+  /** Ping-on-open (`connection.go:69-72`), run driver-side when the write
+    * is built; the file target must accept a probe file. */
+  def ping(): Unit = (native, http) match {
+    case (Some(target), _) => target.ping()
+    case (None, Some(target)) => target.ping()
     case (None, None) =>
-      new BlockWriter(path, batchSize, compression, maxExecutionTimeSec,
-        schema, partitionId, taskId, epochId)
+      try {
+        val dir = Files.createDirectories(Paths.get(path))
+        Files.delete(Files.createTempFile(dir, "_ping", ""))
+      } catch {
+        case e: Exception =>
+          throw new IOException(s"sink ping failed for $path: $e")
+      }
+  }
+
+  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
+      : DataWriter[InternalRow] = {
+    val lz4 = compression.equalsIgnoreCase("lz4")
+    val transport = (native, http) match {
+      case (Some(target), _) =>
+        new NativeTransport(target, schema, maxExecutionTimeSec)
+      case (None, Some(target)) =>
+        val serializer =
+          if (insertFormat.equalsIgnoreCase("RowBinary"))
+            new RowBinarySerializer(schema)
+          else new JsonLineSerializer(schema)
+        new HttpTransport(target, serializer, lz4, maxExecutionTimeSec)
+      case (None, None) =>
+        new FileTransport(path, new JsonLineSerializer(schema), lz4,
+          partitionId, taskId, epochId)
+    }
+    new BlockWriter(transport, batchSize, maxExecutionTimeSec)
   }
 }
 
-/** Task-side native-wire writer: buffer row copies up to `batchSize`,
-  * send each full buffer as ONE native columnar block over a lazily
-  * opened, writer-lifetime connection (the `Append`×N → `Send` loop of
-  * the reference, `main.go:153-212`, on its actual protocol). LZ4
-  * framing is inherent to the wire (compression byte in the Query
-  * packet), not an option here. */
-final class NativeBlockWriter(target: NativeTarget, batchSize: Int,
-    maxExecutionTimeSec: Int, schema: StructType)
+/** The task-side writer for every target: buffer row copies up to
+  * `batchSize`, send each full buffer as ONE block (the `Append`×N →
+  * `Send` loop, `main.go:153-212`), send the final partial block on
+  * commit, and fail the epoch before any block once the writer has
+  * outlived `maxExecutionTimeSec`. */
+final class BlockWriter private[sinks] (transport: BlockTransport,
+    batchSize: Int, maxExecutionTimeSec: Int)
     extends DataWriter[InternalRow] {
 
-  private var conn: NativeConnection = null
   private val buffer = new ArrayBuffer[InternalRow](batchSize)
   private var blocks = 0
   private var rows = 0L
   private val startNanos = System.nanoTime()
 
-  private def checkDeadline(): Unit = {
+  private def flush(): Unit = if (buffer.nonEmpty) {
     val elapsedSec = (System.nanoTime() - startNanos) / 1e9
     if (elapsedSec > maxExecutionTimeSec) {
-      // graceful teardown: Cancel packet first (the server stops any
-      // in-flight query promptly), THEN close — not a bare socket abort
-      if (conn != null) {
-        try conn.cancel() catch { case _: IOException => () }
-        try conn.close() catch { case _: IOException => () }
-        conn = null
-      }
+      transport.teardown()
       throw new IOException(
         s"max_execution_time (${maxExecutionTimeSec}s) exceeded after " +
         f"$elapsedSec%.1fs on block $blocks")
     }
-  }
-
-  private def flush(): Unit = if (buffer.nonEmpty) {
-    checkDeadline()
-    if (conn == null) conn = target.connect()
-    conn.insert(target.table, schema, buffer.toSeq, maxExecutionTimeSec)
+    transport.send(buffer.toSeq)
     blocks += 1
     rows += buffer.size
     buffer.clear()
@@ -335,68 +332,103 @@ final class NativeBlockWriter(target: NativeTarget, batchSize: Int,
 
   override def commit(): WriterCommitMessage = {
     flush()
-    HttpBlocksCommit(blocks, rows)
+    transport.commit(blocks, rows)
   }
 
-  override def abort(): Unit = buffer.clear()
+  override def abort(): Unit = {
+    buffer.clear()
+    transport.abort()
+  }
+
+  override def close(): Unit = transport.close()
+}
+
+/** Where a [[BlockWriter]]'s blocks go: one block per [[send]], in order. */
+private[sinks] trait BlockTransport {
+  def send(rows: Seq[InternalRow]): Unit
+  /** The writer's deadline fired: release the target before failing. */
+  def teardown(): Unit = ()
+  /** Wires have Sent every block already; only the count is reported. */
+  def commit(blocks: Int, rows: Long): WriterCommitMessage =
+    HttpBlocksCommit(blocks, rows)
+  def abort(): Unit = ()
+  def close(): Unit = ()
+}
+
+private[sinks] object BlockTransport {
+  /** Dial ceiling of both wires (`connection.go:46`). */
+  val DialTimeoutMs = 30000
+}
+
+/** Native TCP: one INSERT per block over a connection opened at the first
+  * block. The deadline sends the Cancel packet (the server stops any
+  * in-flight query promptly), THEN closes — not a bare socket abort. */
+private final class NativeTransport(target: NativeTarget, schema: StructType,
+    maxExecutionTimeSec: Int) extends BlockTransport {
+  private var conn: NativeConnection = null
+
+  def send(rows: Seq[InternalRow]): Unit = {
+    if (conn == null) conn = target.connect()
+    conn.insert(target.table, schema, rows, maxExecutionTimeSec)
+  }
+
+  override def teardown(): Unit = if (conn != null) {
+    try conn.cancel() catch { case _: IOException => () }
+    try conn.close() catch { case _: IOException => () }
+    conn = null
+  }
+
   override def close(): Unit = if (conn != null) conn.close()
 }
 
-/** Task-side HTTP writer: buffer up to `batchSize` rows, POST each full
-  * buffer as ONE insert block (the `Append`×N → `Send` loop over the
-  * wire), final partial block on commit. `insertFormat` selects the wire
-  * encoding: `JSONEachRow` (debuggable) or `RowBinary` (the
-  * columnar-block-efficiency analogue of the reference's native-protocol
-  * blocks, `connection/connection.go:58-60` — no field names, no text
-  * numbers, varint-length strings). */
-final class HttpBlockWriter(target: HttpTarget, batchSize: Int,
-    compression: String, maxExecutionTimeSec: Int, schema: StructType,
-    insertFormat: String = "JSONEachRow")
-    extends DataWriter[InternalRow] {
+/** HTTP: one POST per block, rows serialized back to back. */
+private final class HttpTransport(target: HttpTarget,
+    serializer: RowSerializer, lz4: Boolean, maxExecutionTimeSec: Int)
+    extends BlockTransport {
+  private val body = new ByteArrayOutputStream()
 
-  private val lz4 = compression.equalsIgnoreCase("lz4")
-  private val serializer: RowSerializer =
-    if (insertFormat.equalsIgnoreCase("RowBinary"))
-      new RowBinarySerializer(schema)
-    else new JsonLineSerializer(schema)
-  private val buffer = new java.io.ByteArrayOutputStream()
-  private var buffered = 0
-  private var blocks = 0
-  private var rows = 0L
-  private val startNanos = System.nanoTime()
+  def send(rows: Seq[InternalRow]): Unit = {
+    body.reset()
+    rows.foreach { r => val b = serializer.rowBytes(r); body.write(b, 0, b.length) }
+    target.post(body.toByteArray, lz4, maxExecutionTimeSec, serializer.format)
+  }
+}
 
-  private def checkDeadline(): Unit = {
-    val elapsedSec = (System.nanoTime() - startNanos) / 1e9
-    if (elapsedSec > maxExecutionTimeSec)
-      throw new IOException(
-        s"max_execution_time (${maxExecutionTimeSec}s) exceeded after " +
-        f"$elapsedSec%.1fs on block $blocks")
+/** Staged file: every block appends JSON lines to one file per task
+  * attempt, optionally through one LZ4 block stream; the driver's epoch
+  * commit publishes it. */
+private final class FileTransport(path: String, serializer: RowSerializer,
+    lz4: Boolean, partitionId: Int, taskId: Long, epochId: Long)
+    extends BlockTransport {
+  private val ext = if (lz4) "jsonl.lz4" else "jsonl"
+
+  /** Published (attempt-agnostic) block name: replayed epochs overwrite. */
+  private val published = f"epoch-$epochId%06d-part-$partitionId%05d.$ext"
+
+  /** Staged per-ATTEMPT (taskId) so a retried/speculative attempt never
+    * clobbers another attempt's file, and abort() deletes only its own. */
+  private val staging = {
+    val d = Paths.get(path, "_staging")
+    Files.createDirectories(d)
+    d.resolve(f"epoch-$epochId%06d-part-$partitionId%05d-task-$taskId.$ext")
+  }
+  private val out = {
+    val raw = new FileOutputStream(staging.toFile)
+    new BufferedOutputStream(if (lz4) new LZ4BlockOutputStream(raw) else raw)
   }
 
-  private def flush(): Unit = if (buffered > 0) {
-    checkDeadline()
-    target.post(buffer.toByteArray, lz4, maxExecutionTimeSec,
-      serializer.format)
-    blocks += 1
-    rows += buffered
-    buffer.reset()
-    buffered = 0
+  def send(rows: Seq[InternalRow]): Unit =
+    rows.foreach(r => out.write(serializer.rowBytes(r)))
+
+  override def commit(blocks: Int, rows: Long): WriterCommitMessage = {
+    out.close()
+    BlockFileCommit(staging.toString, published)
   }
 
-  override def write(row: InternalRow): Unit = {
-    val b = serializer.rowBytes(row)
-    buffer.write(b, 0, b.length)
-    buffered += 1
-    if (buffered >= batchSize) flush()
+  override def abort(): Unit = {
+    out.close()
+    Files.deleteIfExists(staging)
   }
-
-  override def commit(): WriterCommitMessage = {
-    flush()
-    HttpBlocksCommit(blocks, rows)
-  }
-
-  override def abort(): Unit = { buffer.reset(); buffered = 0 }
-  override def close(): Unit = ()
 }
 
 /** One row → wire bytes, under a named ClickHouse FORMAT. */
@@ -508,71 +540,4 @@ final class RowBinarySerializer(schema: StructType) extends RowSerializer {
     var i = 0
     while (i < 8) { out.write(((v >>> (8 * i)) & 0xff).toInt); i += 1 }
   }
-}
-
-/** Task-side writer: buffer up to `batchSize` rows, flush each full buffer
-  * as one serialized block (the `Append`×N → `Send` loop), optionally
-  * LZ4-framed, aborting if the task outlives `maxExecutionTimeSec`. */
-final class BlockWriter(path: String, batchSize: Int, compression: String,
-    maxExecutionTimeSec: Int, schema: StructType,
-    partitionId: Int, taskId: Long, epochId: Long)
-    extends DataWriter[InternalRow] {
-
-  private val lz4 = compression.equalsIgnoreCase("lz4")
-  private val ext = if (lz4) "jsonl.lz4" else "jsonl"
-
-  /** Published (attempt-agnostic) block name: replayed epochs overwrite. */
-  private val published = f"epoch-$epochId%06d-part-$partitionId%05d.$ext"
-
-  /** Staged per-ATTEMPT (taskId) so a retried/speculative attempt never
-    * clobbers another attempt's file, and abort() deletes only its own. */
-  private val staging = {
-    val d = Paths.get(path, "_staging")
-    Files.createDirectories(d)
-    d.resolve(f"epoch-$epochId%06d-part-$partitionId%05d-task-$taskId.$ext")
-  }
-  private val out = {
-    val raw = new FileOutputStream(staging.toFile)
-    val stream = if (lz4) new LZ4BlockOutputStream(raw) else raw
-    new BufferedWriter(new OutputStreamWriter(stream, StandardCharsets.UTF_8))
-  }
-  private val buffer = new ArrayBuffer[String](batchSize)
-  private val startNanos = System.nanoTime()
-
-  /** max_execution_time (connection.go:55-57), checked at each block
-    * flush and at commit (an in-thread check cannot interrupt a write
-    * blocked inside the OS — the guarantee is bounded EPOCHS, not
-    * bounded syscalls). */
-  private def checkDeadline(): Unit = {
-    val elapsedSec = (System.nanoTime() - startNanos) / 1e9
-    if (elapsedSec > maxExecutionTimeSec)
-      throw new IOException(
-        s"max_execution_time (${maxExecutionTimeSec}s) exceeded after " +
-        f"$elapsedSec%.1fs writing block $published")
-  }
-
-  private val serializer = new JsonLineSerializer(schema)
-
-  private def flush(): Unit = {
-    checkDeadline()
-    buffer.foreach { l => out.write(l); out.newLine() }
-    buffer.clear()
-  }
-
-  override def write(row: InternalRow): Unit = {
-    buffer += serializer.jsonLine(row)
-    if (buffer.size >= batchSize) flush()
-  }
-
-  override def commit(): WriterCommitMessage = {
-    flush(); out.close()
-    BlockFileCommit(staging.toString, published)
-  }
-
-  override def abort(): Unit = {
-    out.close()
-    Files.deleteIfExists(staging)
-  }
-
-  override def close(): Unit = ()
 }

@@ -337,7 +337,7 @@ object NativeBlockCodec {
   * header → data → EndOfStream cycle (one block per statement — the
   * sink's flush unit, like the HTTP path's per-block POST). */
 final class NativeConnection(host: String, port: Int, user: String,
-    password: String, database: String, connectTimeoutMs: Int = 30000,
+    password: String, database: String, connectTimeoutMs: Int = BlockTransport.DialTimeoutMs,
     readTimeoutMs: Int = 120000) extends AutoCloseable {
   import NativeProto._
 

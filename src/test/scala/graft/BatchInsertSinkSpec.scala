@@ -240,6 +240,31 @@ class BatchInsertSinkSpec extends SparkSpec {
     } finally ch.close()
   }
 
+  test("ch:// HTTP wire path: an over-deadline write fails the epoch before any POST") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val ch = new StubClickHouse()
+    try {
+      val cp = Files.createTempDirectory("graft_http_to_cp").toString
+      val src = MemoryStream[Env]
+      src.addData(envs(0, 5): _*)
+      val q = src.toDF().writeStream
+        .format("graft.sinks.BatchInsertSinkProvider")
+        .option("url", s"ch://writer:secret@127.0.0.1:${ch.port}")
+        .option("table", "t").option("maxExecutionTimeSec", -1)
+        .option("checkpointLocation", cp)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.awaitTermination()
+      }
+      assert(err.getMessage.contains("max_execution_time") ||
+        Option(err.getCause).exists(_.toString.contains("max_execution_time")))
+      assert(ch.pings.get() >= 1)
+      assert(ch.inserts.isEmpty)
+    } finally ch.close()
+  }
+
   test("RowBinary serialization is byte-exact: LEB128 strings, little-endian " +
       "fixed-width, Nullable flags (the reference's columnar-block efficiency)") {
     import org.apache.spark.sql.catalyst.InternalRow
@@ -349,6 +374,62 @@ class BatchInsertSinkSpec extends SparkSpec {
       intercept[IllegalArgumentException] {
         HttpTarget("http://h:8123", bad, "", "")
       }
+  }
+
+  /** Starts a sink query over a two-row stream with `opts` on top of a
+    * fresh file target; the query is stopped if it starts at all. */
+  private def startSink(opts: (String, String)*): Unit = {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val src = MemoryStream[Env]
+    src.addData(envs(0, 2): _*)
+    val q = src.toDF().writeStream
+      .format("graft.sinks.BatchInsertSinkProvider")
+      .option("path", Files.createTempDirectory("graft_sink_opts").toString)
+      .option("checkpointLocation",
+        Files.createTempDirectory("graft_sink_opts_cp").toString)
+      .options(opts.toMap)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.stop()
+  }
+
+  test("wire option: anything but http or native fails at start") {
+    val e = intercept[IllegalArgumentException] {
+      startSink("url" -> "ch://writer:secret@127.0.0.1:9000", "wire" -> "natve")
+    }
+    assert(e.getMessage.contains("wire='natve'"))
+  }
+
+  test("compression option: anything but lz4 or none fails at start") {
+    val e = intercept[IllegalArgumentException] {
+      startSink("compression" -> "zstd")
+    }
+    assert(e.getMessage.contains("compression='zstd'"))
+  }
+
+  test("insertFormat option: anything but JSONEachRow or RowBinary fails at start") {
+    val e = intercept[IllegalArgumentException] {
+      startSink("insertFormat" -> "Native")
+    }
+    assert(e.getMessage.contains("insertFormat='Native'"))
+  }
+
+  test("batchSize option: zero or negative fails at start") {
+    for (bad <- Seq("0", "-5")) {
+      val e = intercept[IllegalArgumentException] {
+        startSink("batchSize" -> bad)
+      }
+      assert(e.getMessage.contains(s"batchSize=$bad"))
+    }
+  }
+
+  test("compression=none on the native wire fails at start") {
+    val e = intercept[IllegalArgumentException] {
+      startSink("url" -> "ch://writer:secret@127.0.0.1:9000",
+        "wire" -> "native", "compression" -> "none")
+    }
+    assert(e.getMessage.contains("native wire always LZ4"))
   }
 
   test("ch:// HTTP wire path: no server behind the DSN fails at start (ping)") {

@@ -73,7 +73,6 @@ class GraftConfigSpec extends AnyFunSuite {
     assert(c.password === "password")
     assert(c.host === "localhost")
     assert(c.port === 9000)
-    assert(c.dialTimeoutSec === 30)
     assert(c.maxExecutionTimeSec === 60)
     assert(c.compression === "lz4")
     assert(GraftConfig.parseSinkUrl("not a url").isLeft)

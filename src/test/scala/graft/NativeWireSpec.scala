@@ -308,13 +308,14 @@ class NativeWireSpec extends SparkSpec {
   }
 
   test("writer deadline: Cancel packet rides out before the close") {
-    import graft.sinks.NativeBlockWriter
+    import graft.sinks.BlockWriterFactory
     val stub = new NativeStubServer(envSchema)
     try {
       val target = NativeTarget("localhost", stub.port, "nats_data_all_streams",
         "writer", "secret")
-      val w = new NativeBlockWriter(target, batchSize = 1,
-        maxExecutionTimeSec = 1, schema = envSchema)
+      val w = BlockWriterFactory("", batchSize = 1, compression = "lz4",
+        maxExecutionTimeSec = 1, schema = envSchema, http = None,
+        native = Some(target)).createWriter(0, 0L, 0L)
       def row(i: Int) = new GenericInternalRow(Array[Any](
         UTF8String.fromString(s"globex.supprt.u$i"),
         UTF8String.fromString(s"""{"n":$i}"""),

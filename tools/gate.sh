@@ -24,6 +24,12 @@ fi
 # shift broke 15 queries at ANALYSIS time and nothing here noticed;
 # this step turns that class of outage into a non-zero gate exit.
 sbt -batch Test/compile
+# The benchmark harness (perfbench/) compiles src/main/scala together with
+# its own sources and calls sink/config signatures directly; compile it
+# too, so a signature break fails here instead of in the benchmark build.
+# Like perfbench/run.py, it needs SPARK_HOME for Spark's jars.
+: "${SPARK_HOME:?gate: SPARK_HOME must point at the Spark install perfbench compiles against}"
+(cd perfbench && sbt -batch compile)
 sbt -batch "runMain graft.Analyze /root/testdata/sf0.001"
 # Driver-scrape simulation (VERDICT r13 #2): the driver's BENCH artifact
 # is json.loads of the LAST 2000 chars of RAW sbt stdout. Rounds 11-13
