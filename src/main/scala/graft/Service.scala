@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 import graft.config.GraftConfig
 import graft.pipeline.Ingest
-import graft.streaming.NatsLikeStream
+import graft.streaming.{CheckpointCommits, NatsLikeStream}
 
 
 /** The reference service's `main` (`main.go:30-104`), assembled from this
@@ -109,6 +109,12 @@ object Service {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // Every query below checkpoints under the warehouse: on a local one,
+    // commit checkpoint files with rename(2) instead of FileContext's
+    // fork-per-file rename. A manager already set in the conf wins.
+    if (spark.conf.getOption(CheckpointCommits.ManagerConf).isEmpty)
+      CheckpointCommits.managerFor(warehouse, spark.sparkContext.hadoopConfiguration)
+        .foreach(spark.conf.set(CheckpointCommits.ManagerConf, _))
 
     // Q9: the reference's init.sql bootstrap — idempotent CREATE TABLE IF
     // NOT EXISTS over the warehouse layout plus the Q2-Q4 MV cascade as

@@ -1,7 +1,10 @@
 package graft.sources
 
-import java.io.{BufferedReader, FileReader}
-import java.nio.file.{Files, Paths}
+import java.io.{BufferedReader, FileInputStream, InputStreamReader}
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import java.time.OffsetDateTime
 import java.util.concurrent.TimeUnit
 import scala.jdk.CollectionConverters._
@@ -33,6 +36,8 @@ import graft.model.Schemas
   *    each trigger admits at most `maxRowsPerTrigger` rows.
   *  - ack-after-write (K2) → `commit(offset)` is called only after the
   *    sink epoch commits; an uncommitted epoch replays — at-least-once.
+  *
+  * Backlog files are UTF-8 JSON lines, as [[NatsCapture]] writes them.
   *
   * Scale shape: the driver only counts lines per file (metadata pass);
   * rows are read executor-side, one [[InputPartition]] per file slice. A
@@ -95,12 +100,7 @@ final class ReplayMicroBatchStream(path: String, maxRows: Int)
           .sortBy(_.getFileName.toString)
         finally stream.close()
       } else Seq(p)
-    all.map { f =>
-      var n = 0L
-      val r = new BufferedReader(new FileReader(f.toFile))
-      try { while (r.readLine() != null) n += 1 } finally r.close()
-      (f.toString, n)
-    }
+    all.map(f => (f.toString, ReplayMicroBatchStream.countLines(f)))
   }
   private lazy val totalRows: Long = files.map(_._2).sum
 
@@ -163,6 +163,48 @@ final class ReplayMicroBatchStream(path: String, maxRows: Int)
   override def stop(): Unit = ()
 }
 
+object ReplayMicroBatchStream {
+
+  /** The number of lines `BufferedReader.readLine` returns for `f`, counted
+    * on the raw bytes without decoding them: `\n`, `\r\n` and a lone `\r`
+    * each end a line, and a last line without a terminator counts too. In
+    * UTF-8 the bytes 0x0A and 0x0D occur only as those characters, and the
+    * reader's decoder replaces a malformed sequence without consuming a
+    * following terminator, so the counts agree on any bytes. Readers skip
+    * to their slice with `readLine`, so the two must never disagree. */
+  def countLines(f: Path): Long = {
+    val ch = FileChannel.open(f, StandardOpenOption.READ)
+    try {
+      val buf = ByteBuffer.allocate(1 << 16)
+      val bytes = buf.array()
+      var n = 0L
+      var afterCr = false // the previous byte was a '\r'
+      var open = false    // bytes seen since the last terminator
+      var got = ch.read(buf)
+      while (got >= 0) {
+        var i = 0
+        while (i < got) {
+          val b = bytes(i)
+          if (b == '\n') { if (!afterCr) n += 1; afterCr = false; open = false }
+          else if (b == '\r') { n += 1; afterCr = true; open = false }
+          else { afterCr = false; open = true }
+          i += 1
+        }
+        buf.clear()
+        got = ch.read(buf)
+      }
+      if (open) n + 1 else n
+    } finally ch.close()
+  }
+
+  /** A line reader over a backlog file. Malformed bytes decode to U+FFFD
+    * instead of failing the read, so one bad line fails only its own parse
+    * (P1). */
+  def reader(file: String): BufferedReader =
+    new BufferedReader(new InputStreamReader(
+      new FileInputStream(file), StandardCharsets.UTF_8))
+}
+
 final case class ReplayPartition(file: String, skip: Long, take: Long)
     extends InputPartition
 
@@ -171,7 +213,7 @@ final case class ReplayPartition(file: String, skip: Long, take: Long)
   * row-level error tolerance (P1, `main.go:162-166`). */
 final class ReplayReader(p: ReplayPartition) extends PartitionReader[InternalRow] {
   private val mapper = new ObjectMapper()
-  private val reader = new BufferedReader(new FileReader(p.file))
+  private val reader = ReplayMicroBatchStream.reader(p.file)
   private var skipped = 0L
   while (skipped < p.skip && reader.readLine() != null) skipped += 1
   private var emitted = 0L

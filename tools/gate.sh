@@ -18,6 +18,17 @@ if [ "$1" = "--sf1" ]; then
   shift
   exec python3 tools/scale_gate.py "$@"
 fi
+# Backlogs, configs and payloads are UTF-8, and the platform's default
+# charset need not be (JVMs that sbt forks can run with US-ASCII, which
+# turns every non-ASCII byte into U+FFFD). Fail on a file reader or writer
+# in src/main/scala built without an explicit charset.
+implicit_charset=$(grep -rnE 'new ([a-z.]*\.)?(FileReader|FileWriter)\(|Source\.fromFile\(' src/main/scala \
+  | grep -vE 'StandardCharsets|Charset|Codec|"UTF-8"' || true)
+if [ -n "$implicit_charset" ]; then
+  echo "gate: file reader/writer without an explicit charset:"
+  echo "$implicit_charset"
+  exit 1
+fi
 # Compile (main + test), then the analysis-only smoke: resolve every
 # query plan + entry() at sf0.001 (graft.Analyze -- df.schema only, no
 # execution, ~30 s warm). Round 7's events/timestamp_ntz environment
