@@ -1,58 +1,45 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, StreamingQueryException, Trigger}
 import graft.config.GraftConfig
+import graft.logging.GraftLogger
 import graft.pipeline.Ingest
-import graft.streaming.{CheckpointCommits, NatsLikeStream}
+import graft.streaming.{CheckpointCommits, CorpusStream, NatsLikeStream, SessionStream, TopKStream}
 
 
 /** The reference service's `main` (`main.go:30-104`), assembled from this
   * library's parts: config load (+env overrides) → source connect →
-  * continuous pipeline → batched sink → block until termination.
-  *
-  * Usage:
-  * {{{
-  * sbt "runMain graft.Service --config nats.yml --backlog <jsonl dir> \
-  *   --warehouse <out dir> [--sink parquet|blocks|http|native] [--once] \
-  *   [--capture] [--sessions] [--topk] [--delta <baseDocsParquet>]"
-  * }}}
+  * continuous pipeline → batched sink → block until termination. Flags:
+  * [[Service.Usage]]; run it with `sbt "runMain graft.Service …"`.
   *
   * `--sink parquet` (default) streams the raw + analytics MV cascade as
   * month-partitioned parquet. `--sink blocks` streams raw rows through
-  * [[graft.sinks.BatchInsertSinkProvider]] with the connection settings
-  * parsed from the config's `ch://` URL — LZ4 blocks, execution deadline,
-  * ping-on-open — i.e. the reference's batched-INSERT path end to end.
-  * `--sink http` is the same sink pointed at a LIVE ClickHouse HTTP
-  * endpoint: the config's `ch://` DSN selects the real wire path
-  * (`INSERT … FORMAT JSONEachRow` POSTs, lz4 Content-Encoding, /ping
-  * probe — point the DSN's port at the HTTP interface, 8123).
-  * `--sink native` speaks the ClickHouse NATIVE TCP protocol — the wire
-  * the reference's clickhouse-go driver actually uses
-  * (`connection/connection.go:44-60`): hello handshake, INSERT query
-  * packets, LZ4-compressed columnar blocks with CityHash128 checksums
-  * (point the DSN's port at the native interface, 9000).
+  * [[graft.sinks.BatchInsertSinkProvider]] with the settings of the
+  * config's `ch://` URL (LZ4 blocks, execution deadline, ping-on-open):
+  * the reference's batched-INSERT path end to end. `--sink http` points
+  * that sink at a LIVE ClickHouse HTTP interface (port 8123: `INSERT …
+  * FORMAT JSONEachRow` POSTs, lz4 Content-Encoding, /ping probe);
+  * `--sink native` speaks the NATIVE TCP protocol the reference's
+  * clickhouse-go driver uses (port 9000, `connection/connection.go:44-60`:
+  * hello handshake, INSERT query packets, LZ4-compressed columnar blocks
+  * with CityHash128 checksums).
   *
-  * `--sessions` additionally runs x72 gap-sessionization over the same
-  * envelope stream ([[graft.streaming.SessionStream.sessionizeEnvelopes]])
-  * and appends closed sessions to `<warehouse>/sessions` under an
-  * independent checkpoint.
-  *
-  * `--topk` additionally runs x85 windowed heavy hitters over the same
-  * envelope stream ([[graft.streaming.TopKStream.windowTopKEnvelopes]] —
-  * payload `event_type`, subject fallback) and appends each window's
-  * final ranking to `<warehouse>/window_topk` under an independent
-  * checkpoint.
-  *
-  * `--delta <baseDocsParquet>` additionally runs x104 at-ingest near-dup
-  * over the same envelope stream
-  * ([[graft.streaming.CorpusStream.deltaDedupEnvelopes]] — payload
-  * `doc_id`/`text`, streamSeq fallback id): each envelope is MinHash-
-  * probed against the static base corpus index built once from the
-  * given parquet, and its verdict row (match count, best base partner,
-  * the τ drop decision) appends to `<warehouse>/delta_verdicts` under
-  * an independent checkpoint. Verdicts are FINAL (one watermark-closed
-  * window per doc), so the parquet appends are exactly-once.
+  * Side streams run over the same envelopes, each under its own
+  * checkpoint. `--sessions` appends x72 closed gap-sessions
+  * ([[graft.streaming.SessionStream.sessionizeEnvelopes]]) to
+  * `<warehouse>/sessions`; `--topk` appends each window's final x85
+  * heavy-hitter ranking ([[graft.streaming.TopKStream.windowTopKEnvelopes]]
+  * — payload `event_type`, subject fallback) to `<warehouse>/window_topk`.
+  * Both are plain per-epoch parquet appends, so an epoch replayed after a
+  * crash between its write and its commit log appends its rows again:
+  * at-least-once. `--delta <baseDocsParquet>` MinHash-probes each
+  * envelope's payload doc (`doc_id`/`text`, streamSeq fallback id;
+  * [[graft.streaming.CorpusStream.deltaDedupEnvelopes]]) against the
+  * static base corpus index built once from the given parquet; each doc's
+  * FINAL verdict (match count, best base partner, the τ drop decision)
+  * goes through the parquet file sink to `<warehouse>/delta_verdicts`,
+  * whose commit log makes it exactly-once.
   *
   * `--capture` makes the config's `nats://` URL a REAL dial: drain the
   * subscription ([[graft.sources.NatsCapture]] — socket handshake,
@@ -60,30 +47,45 @@ import graft.streaming.{CheckpointCommits, NatsLikeStream}
   * into the backlog directory the DSv2 source replays; once under
   * `--once`, a daemon re-dial loop otherwise. Without the flag the
   * backlog directory alone feeds the stream (replay mode).
+  *
+  * Lifecycle (`main.go:56-62`, one consumer under one cancellable
+  * context): the service waits on all its streams at once. Under `--once`
+  * it returns when all have drained; when one fails, it stops the rest,
+  * logs the failed stream and rethrows that stream's exception.
   */
 object Service {
-  def main(args: Array[String]): Unit = {
-    // Fold-based flag parsing: only value-taking keys consume the next
-    // token, so the valueless --once/--capture work in ANY position (a
-    // pairwise sliding would mis-pair everything after a non-trailing
-    // valueless flag).
-    val valueKeys = Set("config", "backlog", "warehouse", "sink", "delta")
-    val opts = {
-      @annotation.tailrec
-      def loop(rest: List[String], acc: Map[String, String]): Map[String, String] =
-        rest match {
-          case k :: v :: tail if k.startsWith("--") && valueKeys(k.drop(2)) =>
-            loop(tail, acc + (k.drop(2) -> v))
-          case "--once" :: tail => loop(tail, acc + ("once" -> "true"))
-          case "--capture" :: tail => loop(tail, acc + ("capture" -> "true"))
-          case "--sessions" :: tail => loop(tail, acc + ("sessions" -> "true"))
-          case "--topk" :: tail => loop(tail, acc + ("topk" -> "true"))
-          case _ :: tail => loop(tail, acc)
-          case Nil => acc
-        }
-      loop(args.toList, Map.empty)
-    }
+  private val ValueFlags = Set("config", "backlog", "warehouse", "sink", "delta")
+  private val Flags = Set("once", "capture", "sessions", "topk")
+  val Usage = "usage: graft.Service [--config <yml>] [--backlog <jsonl dir>] " +
+    "[--warehouse <dir>] [--sink parquet|blocks|http|native] [--once] " +
+    "[--capture] [--sessions] [--topk] [--delta <baseDocsParquet>]"
 
+  /** Flag name → value (`"true"` for a valueless flag) over the backlog,
+    * warehouse and sink defaults; `Left` on an unknown token or sink and
+    * on a value flag without a value. Only value flags consume the next
+    * token, so the valueless ones work in any position. */
+  def parseArgs(args: Seq[String]): Either[String, Map[String, String]] = {
+    @annotation.tailrec
+    def loop(rest: List[String], acc: Map[String, String]): Either[String, Map[String, String]] =
+      rest match {
+        case Nil => Right(acc)
+        case s"--$k" :: tail if Flags(k) => loop(tail, acc + (k -> "true"))
+        case s"--$k" :: v :: tail if ValueFlags(k) && !v.startsWith("--") =>
+          loop(tail, acc + (k -> v))
+        case s"--$k" :: _ if ValueFlags(k) => Left(s"--$k needs a value")
+        case k :: _ => Left(s"unknown argument '$k'")
+      }
+    loop(args.toList, Map("backlog" -> "/tmp/graft_backlog",
+        "warehouse" -> "/tmp/graft_warehouse", "sink" -> "parquet"))
+      .filterOrElse(o => Set("parquet", "blocks", "http", "native")(o("sink")),
+        "unknown --sink (expected parquet|blocks|http|native)")
+  }
+
+  def main(args: Array[String]): Unit = {
+    val opts = parseArgs(args.toSeq) match {
+      case Right(o) => o
+      case Left(err) => System.err.println(s"$err\n$Usage"); sys.exit(2)
+    }
     val cfg = opts.get("config") match {
       case Some(path) => GraftConfig.load(path) match {
         case Right(c) => c
@@ -92,13 +94,12 @@ object Service {
       case None => GraftConfig("", "", "text", "info",
         Seq("globex.supprt.>", "globex.crmabc.>"))
     }
-    val backlog = opts.getOrElse("backlog", "/tmp/graft_backlog")
-    val warehouse = opts.getOrElse("warehouse", "/tmp/graft_warehouse")
+    val warehouse = opts("warehouse")
 
     // logger.Init + ConfigBanner (logger.go:18-52): format/level from config
-    val log = graft.logging.GraftLogger.init(cfg)
+    val log = GraftLogger.init(cfg)
     log.configBanner(cfg)
-    log.info("pipeline paths", "backlog" -> backlog, "warehouse" -> warehouse)
+    log.info("pipeline paths", "backlog" -> opts("backlog"), "warehouse" -> warehouse)
 
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
@@ -115,6 +116,20 @@ object Service {
     if (spark.conf.getOption(CheckpointCommits.ManagerConf).isEmpty)
       CheckpointCommits.managerFor(warehouse, spark.sparkContext.hadoopConfiguration)
         .foreach(spark.conf.set(CheckpointCommits.ManagerConf, _))
+    try run(spark, cfg, opts, log) finally spark.stop()
+  }
+
+  /** One streaming query: its name, its checkpoint directory under the
+    * warehouse, and how it writes up to the checkpoint, trigger and start. */
+  private final case class Stream(name: String, checkpoint: String, writer: DataStreamWriter[_])
+
+  /** Bootstrap, capture, then every stream the options ask for, started
+    * from one table and awaited together on `spark`, which the caller owns
+    * and stops. Throws the first failed stream's exception. */
+  def run(spark: SparkSession, cfg: GraftConfig, opts: Map[String, String],
+      log: GraftLogger): Unit = {
+    val backlog = opts("backlog")
+    val warehouse = opts("warehouse")
 
     // Q9: the reference's init.sql bootstrap — idempotent CREATE TABLE IF
     // NOT EXISTS over the warehouse layout plus the Q2-Q4 MV cascade as
@@ -131,25 +146,20 @@ object Service {
     // (fail-fast on a dead broker, like the reference's ConnectNATS);
     // a daemon re-dial loop with backoff in continuous mode.
     if (opts.contains("capture")) {
-      val subject = cfg.subjects.headOption.getOrElse("globex.>")
       // the reference's durable push consumer (`main.go:86`): created on
       // the first run via $JS.API, resumed (cursor intact) on restarts;
       // against a core-NATS-only broker capture falls back to plain SUB
-      val durable = Some("nats-clickhouse-durable")
-      if (opts.contains("once")) {
-        val n = graft.sources.NatsCapture.capture(cfg.natsUrl, subject,
-          backlog, durable = durable)
-        log.info("nats capture", "url" -> cfg.natsUrl, "rows" -> n)
-      } else {
+      def capture(maxWaitMs: Long) = graft.sources.NatsCapture.capture(
+        cfg.natsUrl, cfg.subjects.headOption.getOrElse("globex.>"), backlog,
+        maxWaitMs = maxWaitMs, durable = Some("nats-clickhouse-durable"))
+      if (opts.contains("once"))
+        log.info("nats capture", "url" -> cfg.natsUrl, "rows" -> capture(2000))
+      else {
         val t = new Thread(() => while (true) {
-          try {
-            val n = graft.sources.NatsCapture.capture(cfg.natsUrl, subject,
-              backlog, maxWaitMs = 5000, durable = durable)
-            if (n > 0) log.info("nats capture", "rows" -> n)
-          } catch {
-            case e: Exception =>
-              log.error(s"nats capture failed, retrying: ${e.getMessage}")
-              Thread.sleep(5000)
+          try { val n = capture(5000); if (n > 0) log.info("nats capture", "rows" -> n) }
+          catch { case e: Exception =>
+            log.error(s"nats capture failed, retrying: ${e.getMessage}")
+            Thread.sleep(5000)
           }
         }, "nats-capture")
         t.setDaemon(true)
@@ -157,120 +167,82 @@ object Service {
       }
     }
 
-    val envelopes = spark.readStream
-      .format("graft.sources.ReplayStreamProvider")
-      .option("path", backlog)
-      .option("maxRowsPerTrigger", NatsLikeStream.MaxRowsPerTrigger)
-      .load()
-    val trigger =
-      if (opts.contains("once")) Trigger.AvailableNow()
-      else NatsLikeStream.BatchTimeout
-    val query = opts.getOrElse("sink", "parquet") match {
-      case mode @ ("blocks" | "http" | "native") =>
+    val envelopes = spark.readStream.format("graft.sources.ReplayStreamProvider")
+      .option("path", backlog).option("maxRowsPerTrigger", NatsLikeStream.MaxRowsPerTrigger).load()
+    val trigger = if (opts.contains("once")) Trigger.AvailableNow() else NatsLikeStream.BatchTimeout
+    // --sessions/--topk: plain parquet appends, so an epoch replayed after a
+    // crash between write and commit log appends again (at-least-once)
+    def appendParquet[T](ds: Dataset[T], mode: String, dir: String) =
+      ds.writeStream.outputMode(mode).foreachBatch { (b: Dataset[T], _: Long) =>
+        b.write.mode("append").parquet(s"$warehouse/$dir"); ()
+      }
+
+    val mainStream = opts("sink") match {
+      case "parquet" => Stream("parquet", "_checkpoint", NatsLikeStream.writer(envelopes, warehouse))
+      case mode =>
         // the ch:// URL's client settings drive the block sink; a bad URL
-        // exits like the reference's DSN parse failure (connection.go:31-38)
-        val conn = GraftConfig.parseSinkUrl(cfg.clickhouseUrl) match {
-          case Right(c) => c
-          case Left(err) => log.error(err); sys.exit(1)
-        }
-        log.info("block sink", "mode" -> mode,
-          "compression" -> conn.compression,
+        // fails like the reference's DSN parse (connection.go:31-38)
+        val conn = GraftConfig.parseSinkUrl(cfg.clickhouseUrl).fold(
+          err => { log.error(err); throw new IllegalArgumentException(err) }, identity)
+        log.info("block sink", "mode" -> mode, "compression" -> conn.compression,
           "maxExecutionTimeSec" -> conn.maxExecutionTimeSec)
-        val base = NatsLikeStream.dedupedRaw(
+        // own checkpoint: the parquet pipeline's offsets/state are a
+        // DIFFERENT query graph — sharing its checkpoint would skip
+        // already-committed offsets (blocks silently never written)
+        Stream(mode, "_checkpoint_blocks", NatsLikeStream.dedupedRaw(
             Ingest.subjectFilter(envelopes, NatsLikeStream.SubjectPrefix))
           .writeStream
           .format("graft.sinks.BatchInsertSinkProvider")
           .option("path", s"$warehouse/blocks")
           .option("batchSize", NatsLikeStream.MaxRowsPerTrigger)
           .options(conn.writerOptions)
-          // own checkpoint: the parquet pipeline's offsets/state are a
-          // DIFFERENT query graph — sharing its checkpoint would skip
-          // already-committed offsets (blocks silently never written)
-          .option("checkpointLocation", s"$warehouse/_checkpoint_blocks")
-          .trigger(trigger)
-        // http/native: the DSN selects a REAL wire path — blocks go to
-        // the ClickHouse HTTP interface or the native TCP protocol
-        // (the reference's actual wire) instead of staging as files
-        (if (mode == "http" || mode == "native")
-          base.option("url", cfg.clickhouseUrl)
-            .option("table", graft.pipeline.Ddl.AllStreams)
-            .option("wire", mode)
-        else base).start()
-      case "parquet" =>
-        NatsLikeStream.start(
-          envelopes, warehouse, s"$warehouse/_checkpoint", trigger)
-      case other =>
-        log.error(s"unknown --sink '$other' (expected parquet|blocks|http|native)")
-        sys.exit(2)
+          // http/native: the DSN selects a REAL wire path — blocks go to
+          // the ClickHouse HTTP interface or the native TCP protocol
+          // (the reference's actual wire) instead of staging as files
+          .options(if (mode == "blocks") Map.empty[String, String] else Map(
+            "url" -> cfg.clickhouseUrl, "table" -> graft.pipeline.Ddl.AllStreams, "wire" -> mode)))
     }
-
-    // x72 through the service (--sessions): the SAME envelope stream
-    // gap-sessionizes alongside the main sink — emitted rows are FINAL
-    // (each session closes exactly once, by in-stream gap or watermark
-    // timeout), so per-micro-batch parquet appends are exactly-once
-    // under the query's own checkpoint.
-    val sessionQuery = if (opts.contains("sessions")) Some {
-      graft.streaming.SessionStream.sessionizeEnvelopes(spark, envelopes)
-        .writeStream
-        .outputMode("update")
-        .option("checkpointLocation", s"$warehouse/_checkpoint_sessions")
-        .trigger(trigger)
-        .foreachBatch {
-          (ds: org.apache.spark.sql.Dataset[graft.streaming.SessionRow],
-           _: Long) =>
-            ds.write.mode("append").parquet(s"$warehouse/sessions"); ()
-        }
-        .start()
-    } else None
-
-    // x85 through the service (--topk): per-window heavy hitters over
-    // the same envelope stream — a window's ranking emits exactly once
-    // at watermark close, so per-micro-batch parquet appends are
-    // exactly-once under the query's own checkpoint.
-    val topkQuery = if (opts.contains("topk")) Some {
-      graft.streaming.TopKStream.windowTopKEnvelopes(spark, envelopes)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$warehouse/_checkpoint_topk")
-        .trigger(trigger)
-        .foreachBatch {
-          (ds: org.apache.spark.sql.Dataset[graft.streaming.WindowTopK],
-           _: Long) =>
-            ds.write.mode("append").parquet(s"$warehouse/window_topk"); ()
-        }
-        .start()
-    } else None
-
-    // x104 through the service (--delta): at-ingest near-dup of every
-    // envelope against the static base corpus index (built ONCE from the
-    // given parquet at query start and persisted — a deployment swaps in
-    // a freshly compacted index by restarting the query). Verdict rows
-    // are final watermark-closed windows, so per-micro-batch parquet
-    // appends under the query's own checkpoint are exactly-once.
-    val deltaQuery = opts.get("delta").map { basePath =>
-      val baseDocs = spark.read.parquet(basePath).select("doc_id", "text")
-      log.info("delta dedup", "base" -> basePath)
-      graft.streaming.CorpusStream.deltaDedupEnvelopes(spark, envelopes, baseDocs)
-        .writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", s"$warehouse/delta_verdicts")
-        .option("checkpointLocation", s"$warehouse/_checkpoint_delta")
-        .trigger(trigger)
-        .start()
-    }
+    val streams = Seq(
+      Some(mainStream),
+      // x72: each session closes once, by in-stream gap or watermark timeout
+      Option.when(opts.contains("sessions"))(Stream("sessions", "_checkpoint_sessions",
+        appendParquet(SessionStream.sessionizeEnvelopes(spark, envelopes), "update", "sessions"))),
+      // x85: a window's ranking emits once, at watermark close
+      Option.when(opts.contains("topk"))(Stream("topk", "_checkpoint_topk",
+        appendParquet(TopKStream.windowTopKEnvelopes(spark, envelopes), "append", "window_topk"))),
+      // x104: the base index is built ONCE at query start and persisted (a
+      // deployment swaps in a freshly compacted index by restarting); final
+      // verdicts go through the file sink, whose commit log makes them
+      // exactly-once
+      opts.get("delta").map { basePath =>
+        val baseDocs = spark.read.parquet(basePath).select("doc_id", "text")
+        log.info("delta dedup", "base" -> basePath)
+        Stream("delta", "_checkpoint_delta", CorpusStream.deltaDedupEnvelopes(spark, envelopes,
+          baseDocs).writeStream.outputMode("append").format("parquet")
+          .option("path", s"$warehouse/delta_verdicts"))
+      }).flatten
 
     // B4: SIGTERM/SIGINT → graceful stop; checkpoint replays the tail.
-    sys.addShutdownHook {
-      if (query.isActive) query.stop()
-      sessionQuery.foreach(q => if (q.isActive) q.stop())
-      topkQuery.foreach(q => if (q.isActive) q.stop())
-      deltaQuery.foreach(q => if (q.isActive) q.stop())
+    @volatile var started = List.empty[(String, StreamingQuery)]
+    def stopAll(): Unit = started.foreach { case (_, q) => if (q.isActive) q.stop() }
+    val hook = sys.addShutdownHook(stopAll())
+    // a query that ended earlier in this session must not end this wait
+    spark.streams.resetTerminated()
+    try {
+      streams.foreach { s => started ::= s.name -> s.writer.queryName(s.name)
+        .option("checkpointLocation", s"$warehouse/${s.checkpoint}").trigger(trigger).start() }
+      def failed = started.find(_._2.exception.isDefined)
+      while (failed.isEmpty && started.exists(_._2.isActive)) {
+        try spark.streams.awaitAnyTermination() catch { case _: StreamingQueryException => }
+        spark.streams.resetTerminated()
+      }
+      failed.foreach { case (name, q) =>
+        log.error("stream failed", "stream" -> name, "error" -> q.exception.get.getMessage)
+        throw q.exception.get
+      }
+    } finally {
+      stopAll()
+      try hook.remove() catch { case _: IllegalStateException => } // JVM exiting
     }
-    query.awaitTermination()
-    sessionQuery.foreach(_.awaitTermination())
-    topkQuery.foreach(_.awaitTermination())
-    deltaQuery.foreach(_.awaitTermination())
-    spark.stop()
   }
 }

@@ -1128,21 +1128,11 @@ object Curation {
     // checkpoint storage exactly (no registry diff), so a concurrent
     // barrier cannot be mis-released. This shares nothing across
     // queries — both builds belong to this one operator invocation.
-    val s1Pool = java.util.concurrent.Executors.newSingleThreadExecutor()
-    val s1F = s1Pool.submit(new java.util.concurrent.Callable[DataFrame] {
-      override def call(): DataFrame = OperatorCaches.materializeTruncated(
-        Dedup.normalizedDedupCore(train)
-          .select(col("doc_id"), col("is_canonical").as("s1_norm_kept")))
-    })
-    // the component solve runs on THIS thread, concurrently with s1
-    val comp =
-      try Dedup.dupComponents(spark, sfDir)
-      catch { case t: Throwable => s1Pool.shutdownNow(); throw t }
-    val s1 =
-      try s1F.get()
-      catch { case e: java.util.concurrent.ExecutionException =>
-        throw e.getCause }
-      finally s1Pool.shutdown()
+    val (s1, comp) = graft.util.Overlap.run(spark)(
+      OperatorCaches.materializeTruncated(Dedup.normalizedDedupCore(train)
+        .select(col("doc_id"), col("is_canonical").as("s1_norm_kept"))))(
+      // the component solve runs on THIS thread, concurrently with s1
+      Dedup.dupComponents(spark, sfDir))
     val s1k = s1.filter(col("s1_norm_kept")).select("doc_id")
     // s2: full-corpus component labels restricted to s1 survivors,
     // x102's argmax keep policy re-run among the survivors

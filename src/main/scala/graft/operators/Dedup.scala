@@ -1099,19 +1099,10 @@ object Dedup {
     // checkpoint is output-sized. The materialized truth is sort-free
     // ([[ngramJaccardCoreFromSh]]) — [[lshRecallFrom]] re-aggregates,
     // so x3's determinism orderBy would be dead work here.
-    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
-    val truthF = pool.submit(new java.util.concurrent.Callable[DataFrame] {
-      override def call(): DataFrame = OperatorCaches.materializeTruncated(
-        ngramJaccardCoreFromSh(sh).select("doc_a", "doc_b", "jaccard"))
-    })
-    val pred =
-      try pairTable(spark, sfDir)
-      catch { case t: Throwable => pool.shutdownNow(); throw t }
-    val truth =
-      try truthF.get()
-      catch { case e: java.util.concurrent.ExecutionException =>
-        throw e.getCause }
-      finally pool.shutdown()
+    val (truth, pred) = graft.util.Overlap.run(spark)(
+      OperatorCaches.materializeTruncated(
+        ngramJaccardCoreFromSh(sh).select("doc_a", "doc_b", "jaccard")))(
+      pairTable(spark, sfDir))
     lshRecallFrom(truth, pred)
   }
 

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import graft.model.Schemas
 import graft.pipeline.{Ingest, Views}
 
@@ -83,9 +83,16 @@ object NatsLikeStream {
   def start(envelopes: DataFrame, warehouse: String, checkpoint: String,
       trigger: Trigger = BatchTimeout,
       variantAnalytics: Boolean = true): StreamingQuery =
-    envelopes.writeStream
+    writer(envelopes, warehouse, variantAnalytics)
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
+      .start()
+
+  /** [[start]]'s writer before its trigger, checkpoint and start: what
+    * `Service` completes alongside its other streams. */
+  def writer(envelopes: DataFrame, warehouse: String,
+      variantAnalytics: Boolean = true): DataStreamWriter[Row] =
+    envelopes.writeStream
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         val raw = Ingest.envelopeToRaw(
           Ingest.subjectFilter(batch, SubjectPrefix))
@@ -100,7 +107,6 @@ object NatsLikeStream {
         } finally raw.unpersist()
         ()
       }
-      .start()
 
   /** B5 upgrade the reference can't express: drop replayed duplicates by
     * stream sequence within an event-time watermark — turns the sink from

@@ -29,6 +29,16 @@ if [ -n "$implicit_charset" ]; then
   echo "$implicit_charset"
   exit 1
 fi
+# Operators and queries overlap builds through graft.util.Overlap, which
+# tags the helper's jobs and cancels them when either side throws; a
+# hand-rolled pool or thread there would orphan its jobs on failure.
+raw_threads=$(grep -rnE 'Executors\.new|new Thread\(' \
+  src/main/scala/graft/operators src/main/scala/graft/queries || true)
+if [ -n "$raw_threads" ]; then
+  echo "gate: thread or pool outside graft.util.Overlap:"
+  echo "$raw_threads"
+  exit 1
+fi
 # Compile (main + test), then the analysis-only smoke: resolve every
 # query plan + entry() at sf0.001 (graft.Analyze -- df.schema only, no
 # execution, ~30 s warm). Round 7's events/timestamp_ntz environment
