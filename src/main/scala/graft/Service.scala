@@ -51,7 +51,9 @@ import graft.streaming.{CheckpointCommits, CorpusStream, NatsLikeStream, Session
   * Lifecycle (`main.go:56-62`, one consumer under one cancellable
   * context): the service waits on all its streams at once. Under `--once`
   * it returns when all have drained; when one fails, it stops the rest,
-  * logs the failed stream and rethrows that stream's exception.
+  * logs the failed stream and rethrows that stream's exception. Either
+  * way it returns only after every stream it started has terminated, so
+  * listeners see each stream's end before the session stops.
   */
 object Service {
   private val ValueFlags = Set("config", "backlog", "warehouse", "sink", "delta")
@@ -242,6 +244,11 @@ object Service {
       }
     } finally {
       stopAll()
+      // a query turns inactive before Spark posts its QueryTerminatedEvent;
+      // join each one so listeners see its end before the caller stops the
+      // session (a failure is rethrown above)
+      started.foreach { case (_, q) =>
+        try q.awaitTermination() catch { case _: StreamingQueryException => } }
       try hook.remove() catch { case _: IllegalStateException => } // JVM exiting
     }
   }

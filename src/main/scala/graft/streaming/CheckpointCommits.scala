@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 
 /** How streaming checkpoints commit their files.
   *
@@ -11,12 +10,13 @@ import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedChe
   * write-then-rename. Spark's default manager renames through Hadoop's
   * `FileContext`; on a local path that looks up the link status of both
   * rename ends, and without libhadoop each lookup forks a `readlink`
-  * process (again for every file's `.crc` twin). On a local path Spark's
-  * `FileSystemBasedCheckpointFileManager` gives the same guarantee —
-  * check that the destination is absent, then rename(2), which is atomic —
-  * without forking. Checksums (`.crc`) are written and verified either
-  * way, and the checkpoint holds the same files, so a checkpoint written
-  * under one manager resumes under the other.
+  * process (again for every file's `.crc` twin), and every created file
+  * forks a `chmod`. On a local path [[LocalCheckpointFileManager]] gives
+  * the same guarantee — check that the destination is absent, then
+  * rename(2), which is atomic — and sets modes with chmod(2), so a commit
+  * forks nothing. Checksums (`.crc`) are written and verified either way,
+  * and the checkpoint holds the same files with the same modes, so a
+  * checkpoint written under one manager resumes under the other.
   */
 object CheckpointCommits {
 
@@ -25,7 +25,7 @@ object CheckpointCommits {
     * the session's Hadoop conf. */
   val ManagerConf = "spark.sql.streaming.checkpointFileManagerClass"
 
-  /** The manager for checkpoints under `path`: the FileSystem-based one
+  /** The manager for checkpoints under `path`: [[LocalCheckpointFileManager]]
     * when `path` resolves to the local file system, `None` (Spark's
     * `FileContext` default, atomic rename on hdfs, s3a, …) otherwise. The
     * scheme is read from the path or the default FS without instantiating
@@ -33,7 +33,7 @@ object CheckpointCommits {
   def managerFor(path: String, hadoopConf: Configuration): Option[String] = {
     val scheme = Option(new Path(path).toUri.getScheme)
       .getOrElse(FileSystem.getDefaultUri(hadoopConf).getScheme)
-    if (scheme == "file") Some(classOf[FileSystemBasedCheckpointFileManager].getName)
+    if (scheme == "file") Some(classOf[LocalCheckpointFileManager].getName)
     else None
   }
 }

@@ -319,7 +319,16 @@ object CorpusStream {
     *
     * 100 TB note: per-micro-batch cost is the x104 probe cost plus a
     * narrow gate projection; the only additions to x104's proven shape
-    * are two boolean carry columns and one few-row broadcast. */
+    * are two boolean carry columns and one few-row broadcast.
+    *
+    * Restarting from an old checkpoint: s1's `flatMapGroupsWithState`
+    * now also outputs the three gate signals (`n_tokens`, `max_chunk`,
+    * `n_luhn_valid`), computed ahead of the state exchange. Its state
+    * encoder is unchanged, but a query restarted from a checkpoint written
+    * by the earlier topology (five output columns) cannot rebind the new
+    * output schema, so such a restart needs a fresh checkpoint directory.
+    * [[deltaDedupEnvelopes]] (`Service --delta`) runs no
+    * `flatMapGroupsWithState`, so this does not apply to it. */
   def corpusBuildStream(spark: SparkSession, streamDocs: DataFrame,
       baseDocs: DataFrame,
       watermarkDelay: String = "10 seconds",

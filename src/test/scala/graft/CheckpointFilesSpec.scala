@@ -1,22 +1,25 @@
 package graft
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
+import java.nio.file.attribute.PosixFilePermissions
 import scala.jdk.CollectionConverters._
 
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
+import org.apache.hadoop.fs.ChecksumException
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.{CheckpointCommits, NatsLikeStream}
+import graft.streaming.{CheckpointCommits, LocalCheckpointFileManager, NatsLikeStream}
 
 /** Local checkpoints committed through the manager [[CheckpointCommits]]
   * picks: the deduplicated stream recovers exactly as under Spark's default
-  * manager, writes the same files, and forks no `readlink` per commit. */
+  * manager, writes the same files with the same modes, still verifies their
+  * checksums, and forks no process per commit. */
 class CheckpointFilesSpec extends SparkSpec {
 
-  private val Local = Some(classOf[FileSystemBasedCheckpointFileManager].getName)
+  private val Local = Some(classOf[LocalCheckpointFileManager].getName)
 
   private def line(seq: Int): String = {
     val sec = f"${seq % 60}%02d"
@@ -74,8 +77,8 @@ class CheckpointFilesSpec extends SparkSpec {
     assert(sequences(out) === (0L until 28L))
   }
 
-  /** `readlink` processes the JVM forks while `body` runs. */
-  private def readlinkForks(body: => Unit): Int = {
+  /** Command lines of the processes the JVM forks while `body` runs. */
+  private def forks(body: => Unit): Seq[String] = {
     val rec = new Recording()
     try {
       rec.enable("jdk.ProcessStart")
@@ -84,12 +87,20 @@ class CheckpointFilesSpec extends SparkSpec {
       val dump = Files.createTempFile("graft_ckpt", ".jfr")
       try {
         rec.dump(dump)
-        RecordingFile.readAllEvents(dump).asScala.count { e =>
-          Option(e.getString("command")).exists(
-            _.trim.split("\\s+").head.endsWith("readlink"))
-        }
+        RecordingFile.readAllEvents(dump).asScala.toSeq.flatMap(e => Option(e.getString("command")))
       } finally Files.delete(dump)
     } finally rec.close()
+  }
+
+  private def isReadlink(command: String): Boolean =
+    command.trim.split("\\s+").head.endsWith("readlink")
+
+  /** Every file and directory under `root`, relative to it, with its mode. */
+  private def modes(root: Path): Map[String, String] = {
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.map(p => root.relativize(p).toString ->
+      PosixFilePermissions.toString(Files.getPosixFilePermissions(p))).toMap
+    finally walk.close()
   }
 
   private def relativeFiles(root: Path): Set[String] = {
@@ -111,9 +122,9 @@ class CheckpointFilesSpec extends SparkSpec {
   test("the local manager writes the default's files and forks no readlink") {
     val (dir, out, cp) = tempDirs()
     writeBacklog(dir, "part-000.jsonl", 0 until 25)
-    val localForks = readlinkForks(drain(dir, out, cp, Local))
+    val localForks = forks(drain(dir, out, cp, Local)).count(isReadlink)
     val (_, defaultOut, defaultCp) = tempDirs()
-    val defaultForks = readlinkForks(drain(dir, defaultOut, defaultCp, None))
+    val defaultForks = forks(drain(dir, defaultOut, defaultCp, None)).count(isReadlink)
     // the control: the recording does see the default manager's forks
     assert(defaultForks > 0)
     assert(localForks === 0)
@@ -123,6 +134,56 @@ class CheckpointFilesSpec extends SparkSpec {
     val partition0 = files.filter(_.startsWith("state/0/0/")).map(_.stripPrefix("state/0/0/"))
     // Hadoop's checksum twin beside each delta, and Spark's state checksum
     assert(Seq("1.delta", ".1.delta.crc", "1.delta.crc").forall(partition0), partition0)
+  }
+
+  test("the local manager forks no process for any checkpoint file") {
+    val (dir, out, cp) = tempDirs()
+    writeBacklog(dir, "part-000.jsonl", 0 until 25)
+    // offsets, commits, metadata and state deltas, each with its `.crc`;
+    // the parquet sink's part files and Spark's own cleanup are not ours
+    def underCheckpoint(root: Path)(command: String) = command.contains(s"${root.toRealPath()}/")
+    val local = forks(drain(dir, out, cp, Local)).filter(underCheckpoint(cp))
+    val (_, defaultOut, defaultCp) = tempDirs()
+    val default = forks(drain(dir, defaultOut, defaultCp, None)).filter(underCheckpoint(defaultCp))
+    // the control: the recording does see the default manager's forks
+    assert(default.exists(_.startsWith("chmod")), default)
+    assert(local === Nil)
+  }
+
+  test("the local manager gives every checkpoint file and directory the default's mode") {
+    val (dir, out, cp) = tempDirs()
+    writeBacklog(dir, "part-000.jsonl", 0 until 25)
+    val (_, defaultOut, defaultCp) = tempDirs()
+    // a Hadoop umask unlike the process's, so a mode left unset shows
+    spark.conf.set("fs.permissions.umask-mode", "027")
+    try {
+      drain(dir, out, cp, Local)
+      drain(dir, defaultOut, defaultCp, None)
+    } finally spark.conf.unset("fs.permissions.umask-mode")
+    val local = modes(cp)
+    assert(local === modes(defaultCp))
+    assert(local("state/0/0/1.delta") === "rw-r-----")
+    assert(local("state/0/0") === "rwxr-x---")
+  }
+
+  test("a restart under the local manager verifies checksums") {
+    val (dir, out, cp) = tempDirs()
+    writeBacklog(dir, "part-000.jsonl", 0 until 25)
+    drain(dir, out, cp, Local)
+    // flip the low bit of a timestamp digit in the latest offsets entry: the
+    // entry still parses, so only its `.crc` twin can catch the change
+    val offsets = cp.resolve("offsets")
+    val latest = offsets.resolve(
+      offsets.toFile.list().filter(_.forall(_.isDigit)).maxBy(_.toLong))
+    val bytes = Files.readAllBytes(latest)
+    val at = new String(bytes, StandardCharsets.ISO_8859_1)
+      .indexOf("\"batchTimestampMs\":") + "\"batchTimestampMs\":".length
+    assert(Character.isDigit(bytes(at)), new String(bytes, StandardCharsets.UTF_8))
+    bytes(at) = (bytes(at) ^ 1).toByte
+    Files.write(latest, bytes)
+    val e = intercept[Exception](drain(dir, out, cp, Local))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ChecksumException]), e)
   }
 
   test("only a local warehouse switches the manager") {

@@ -3,16 +3,21 @@ package graft
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
+import scala.jdk.CollectionConverters._
 import graft.config.GraftConfig
 import graft.logging.GraftLogger
 import graft.pipeline.Ddl
+import org.apache.spark.sql.execution.streaming.runtime.{StreamExecution, StreamingQueryWrapper}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
+import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.SpanSugar._
 
 /** `Service`'s flag parser and its stream lifecycle, driven through
   * `Service.run` on the shared session: the service returns only when
-  * every stream it started has drained, and the first stream to fail
-  * stops the others and surfaces its exception. */
+  * every stream it started has drained and terminated, and the first
+  * stream to fail stops the others and surfaces its exception. */
 class ServiceLifecycleSpec extends SparkSpec with TimeLimits {
   // a run that never returns fails its test instead of hanging the suite
   private implicit val signaler: Signaler = ThreadSignaler
@@ -70,6 +75,39 @@ class ServiceLifecycleSpec extends SparkSpec with TimeLimits {
 
   private def activeIds = spark.streams.active.map(_.id).toSet
 
+  /** A local port nothing listens on. */
+  private def deadPort(): Int = {
+    val dead = new java.net.ServerSocket(0)
+    try dead.getLocalPort finally dead.close()
+  }
+
+  /** The queries `body` starts. Spark delivers `QueryStartedEvent` to
+    * session listeners synchronously on the stream thread, so each query is
+    * captured before it can terminate. */
+  private def startedQueries(body: => Unit): Seq[StreamingQuery] = {
+    val started = new ConcurrentLinkedQueue[StreamingQuery]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.add(spark.streams.get(e.id))
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try body finally spark.streams.removeListener(listener)
+    started.asScala.toSeq
+  }
+
+  /** Whether `q` has terminated, with or without an exception, read without
+    * waiting. Spark marks a query inactive before it posts the query's
+    * `QueryTerminatedEvent`, and releases the query's termination latch only
+    * after; `awaitTermination(1)` waits out most of that gap, so the latch
+    * is read directly. */
+  private def terminated(q: StreamingQuery): Boolean = {
+    val latch = classOf[StreamExecution].getDeclaredField("terminationLatch")
+    latch.setAccessible(true)
+    latch.get(q.asInstanceOf[StreamingQueryWrapper].streamingQuery)
+      .asInstanceOf[CountDownLatch].getCount == 0
+  }
+
   test("flags: valueless flags in any position, defaults for the rest") {
     assert(Service.parseArgs(Seq("--once", "--backlog", "b", "--sessions",
         "--warehouse", "w", "--topk", "--delta", "base", "--capture")) === Right(Map(
@@ -111,11 +149,26 @@ class ServiceLifecycleSpec extends SparkSpec with TimeLimits {
     assert(topk.toSeq === Seq((1L, "a", 2L), (2L, "b", 1L)))
   }
 
+  test("--once returns only after each query it started has terminated") {
+    (1 to 20).foreach { i =>
+      val queries = startedQueries(new Run()("--once"))
+      assert(queries.size === 1)
+      assert(queries.forall(terminated), s"drain $i returned before its query terminated")
+    }
+  }
+
+  test("a failed run returns only after every query it started has terminated") {
+    (1 to 5).foreach { i =>
+      val run = new Run(deadPort())
+      val queries = startedQueries(failAfter(30.seconds)(
+        intercept[Exception](run("--sink", "http", "--sessions"))))
+      assert(queries.size === 2)
+      assert(queries.forall(terminated), s"run $i returned before its queries terminated")
+    }
+  }
+
   test("a main query that fails after start() ends run and stops the side streams") {
-    val dead = new java.net.ServerSocket(0)
-    val port = dead.getLocalPort
-    dead.close()
-    val run = new Run(port)
+    val run = new Run(deadPort())
     val before = activeIds
     // no --once: the sessions stream would run forever on its own
     val e = failAfter(30.seconds)(intercept[Exception](run("--sink", "http", "--sessions")))

@@ -39,6 +39,16 @@ if [ -n "$raw_threads" ]; then
   echo "$raw_threads"
   exit 1
 fi
+# No code path starts a process: a fork per checkpoint file once dominated
+# the service's checkpoint commits (streaming/LocalCheckpointFileManager.scala).
+# Fail on a process started from src/main/scala.
+process_starts=$(grep -rnE 'ProcessBuilder|sys\.process|Runtime\.getRuntime(\(\))?\.exec|Shell\.(exec|execCommand)\b|ShellCommandExecutor' \
+  src/main/scala || true)
+if [ -n "$process_starts" ]; then
+  echo "gate: process started from src/main/scala:"
+  echo "$process_starts"
+  exit 1
+fi
 # Compile (main + test), then the analysis-only smoke: resolve every
 # query plan + entry() at sf0.001 (graft.Analyze -- df.schema only, no
 # execution, ~30 s warm). Round 7's events/timestamp_ntz environment
