@@ -1,4 +1,6 @@
 package graft
+import scala.collection.mutable
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 object Bench {
   /** Millisecond-precision JSON rendering: the driver's BENCH artifact
@@ -6,51 +8,121 @@ object Bench {
     * pushed the 146-query line past the scrape window ("parsed": null,
     * the complete record surviving only in the file copies). 4 decimals
     * is ~40% fewer bytes and far below measurement noise. */
-  private def f4(d: Double): String =
-    if (d.isNaN || d.isInfinite) "null" // raw NaN/Infinity tokens are invalid JSON
-    else BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
+  private def f4(d: Double): String = fN(d, 4)
 
   /** Fixed-decimals rendering for the compact scraped line (see below). */
   private def fN(d: Double, decimals: Int): String =
-    if (d.isNaN || d.isInfinite) "null"
+    if (d.isNaN || d.isInfinite) "null" // raw NaN/Infinity tokens are invalid JSON
     else BigDecimal(d).setScale(decimals, BigDecimal.RoundingMode.HALF_UP).toString
+
+  /** A JSON object of already-rendered values. */
+  private def obj(fields: Iterable[(String, String)]): String =
+    fields.map { case (k, v) => util.JsonText.quote(k) + ":" + v }.mkString("{", ",", "}")
+
+  /** Local property naming the query a timed run belongs to. A thread the
+    * run starts inherits it, so `Overlap.run`'s side jobs count too. */
+  private val QueryProperty = "graft.bench.query"
+
+  /** Runs `body` with the jobs it starts attributed to `query`. */
+  def attributed[T](spark: SparkSession, query: String)(body: => T): T = {
+    spark.sparkContext.setLocalProperty(QueryProperty, query)
+    try body finally spark.sparkContext.setLocalProperty(QueryProperty, null)
+  }
+
+  /** A completed stage's totals over its tasks. */
+  final case class StageStats(id: Int, tasks: Int, runMs: Long, cpuNs: Long, inputBytes: Long,
+      shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long)
+  final case class JobStats(id: Int, label: String, startMs: Long, endMs: Long,
+      stages: Seq[StageStats])
+
+  /** The jobs of each query's [[attributed]] runs and their completed
+    * stages, as the listener bus delivers them: off the timed path, and
+    * complete once the session has stopped. */
+  final class Profiler extends SparkListener {
+    private val jobs = mutable.LinkedHashMap.empty[Int, (String, JobStats)]
+    private val stageJob = mutable.Map.empty[Int, Int]
+
+    override def onJobStart(js: SparkListenerJobStart): Unit = synchronized {
+      Option(js.properties).flatMap(p => Option(p.getProperty(QueryProperty))).foreach { q =>
+        val desc = Option(js.properties.getProperty("callSite.short"))
+          .orElse(Option(js.properties.getProperty("spark.job.description"))).getOrElse("")
+        // AQE materializes each shuffle stage as its own job with no call
+        // site: the stage names (deduped) are the attribution
+        val stages = js.stageInfos.map(_.name.takeWhile(_ != '\n')).distinct.mkString(" | ")
+        val label = if (desc.nonEmpty) s"$desc  [$stages]" else s"[$stages]"
+        jobs(js.jobId) = q -> JobStats(js.jobId, label, js.time, js.time, Vector.empty)
+        js.stageIds.foreach(stageJob.getOrElseUpdate(_, js.jobId))
+      }
+    }
+
+    override def onJobEnd(je: SparkListenerJobEnd): Unit = synchronized {
+      jobs.updateWith(je.jobId)(_.map { case (q, j) => q -> j.copy(endMs = je.time) })
+    }
+
+    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = synchronized {
+      val si = sc.stageInfo
+      for (jobId <- stageJob.get(si.stageId); m <- Option(si.taskMetrics)) {
+        val st = StageStats(si.stageId, si.numTasks, m.executorRunTime, m.executorCpuTime,
+          m.inputMetrics.bytesRead, m.shuffleReadMetrics.totalBytesRead,
+          m.shuffleWriteMetrics.bytesWritten, m.memoryBytesSpilled + m.diskBytesSpilled)
+        jobs.updateWith(jobId)(_.map { case (q, j) => q -> j.copy(stages = j.stages :+ st) })
+      }
+    }
+
+    def jobsOf(query: String): Seq[JobStats] = synchronized {
+      jobs.values.collect { case (`query`, j) => j }.toSeq
+    }
+
+    /** Per query: its runs' wall time (`walls`), task run time and CPU,
+      * utilization, and each job with its stages. */
+    def json(walls: Seq[(String, Seq[Double])], cores: Int, sfDir: String): String = {
+      def mb(bytes: Long) = f4(bytes / 1e6)
+      def stage(st: StageStats) = obj(Seq("id" -> st.id.toString, "tasks" -> st.tasks.toString,
+        "run_s" -> f4(st.runMs / 1e3), "cpu_s" -> f4(st.cpuNs / 1e9), "in_mb" -> mb(st.inputBytes),
+        "shuffle_read_mb" -> mb(st.shuffleReadBytes),
+        "shuffle_write_mb" -> mb(st.shuffleWriteBytes), "spill_mb" -> mb(st.spillBytes)))
+      def job(j: JobStats) = obj(Seq("id" -> j.id.toString,
+        "wall_s" -> f4((j.endMs - j.startMs) / 1e3), "label" -> util.JsonText.quote(j.label),
+        "stages" -> j.stages.map(stage).mkString("[", ",", "]")))
+      val queries = walls.map { case (q, ws) =>
+        val js = jobsOf(q)
+        val runMs = js.flatMap(_.stages).map(_.runMs).sum
+        // utilization = Σ executorRunTime / (wall × cores)
+        q -> obj(Seq("runs" -> ws.size.toString, "wall_s" -> f4(ws.sum),
+          "run_time_s" -> f4(runMs / 1e3), "util" -> f4(runMs / (ws.sum * 1000 * cores)),
+          "task_cpu_s" -> f4(js.flatMap(_.stages).map(_.cpuNs).sum / 1e9),
+          "jobs" -> js.map(job).mkString("[", ",", "]")))
+      }
+      obj(Seq("cores" -> cores.toString, "sf" -> util.JsonText.quote(sfDir),
+        "queries" -> obj(queries)))
+    }
+  }
+
+  /** Initial partition count of AQE's coalescing for an input of
+    * `sfBytes`. Exchanges START wide only when the corpus is big enough to
+    * need it, and AQE coalesces them to its advisory target from measured
+    * sizes (the PLANS.md deployment sizing). At sf >= 1 a corpus-scale
+    * exchange (e.g. x3's budgeted pair volume, ~3e8 rows at sf10) lands
+    * ~1M rows per final-aggregation task instead of ~10M: the per-task hash
+    * map stays under the task memory slice and the sort-fallback spill
+    * (measured 47 GB of temp_local at sf10 under 32 fixed partitions — 3x
+    * the exchange itself) never starts. At sf <= 0.1 the wide start is NOT
+    * free, round-11's flat 512 measured it: multi-stage iterative queries
+    * (x73's 8 power steps, the 3-round Lloyd family) paid 512-reducer
+    * startup per exchange — 1.9-3.4x on exactly that family — so small
+    * inputs keep the cpu-count default. The cut is input SIZE (sf1 is
+    * ~180 MB, sf0.1 ~18 MB). */
+  def initialPartitions(sfBytes: Long, cores: String): String =
+    if (sfBytes >= 100L * 1024 * 1024) "512" else cores
+
+  def conf(cores: String, sfBytes: Long): Seq[(String, String)] = Session.conf(cores,
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
+      initialPartitions(sfBytes, cores))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Exchanges START wide only when the corpus is big enough to need
-    // it, and AQE coalesces them to its advisory target from measured
-    // sizes (the PLANS.md deployment sizing). At sf >= 1 a corpus-scale
-    // exchange (e.g. x3's budgeted pair volume, ~3e8 rows at sf10)
-    // lands ~1M rows per final-aggregation task instead of ~10M: the
-    // per-task hash map stays under the task memory slice and the
-    // sort-fallback spill (measured 47 GB of temp_local at sf10 under
-    // 32 fixed partitions — 3x the exchange itself) never starts. At
-    // sf <= 0.1 the wide start is NOT free, round-11's flat 512
-    // measured it: multi-stage iterative queries (x73's 8 power steps,
-    // the 3-round Lloyd family) paid 512-reducer startup per exchange —
-    // 1.9-3.4x on exactly that family — so small inputs keep the
-    // cpu-count default. The cut is input SIZE (sf1 is ~180 MB, sf0.1
-    // ~18 MB), env-overridable for deployments that know better.
-    val sfBytes =
-      try {
-        val s = java.nio.file.Files.walk(java.nio.file.Paths.get(sfDir))
-        try s.filter(p => java.nio.file.Files.isRegularFile(p))
-          .mapToLong(p => java.nio.file.Files.size(p)).sum()
-        finally s.close()
-      } catch { case scala.util.control.NonFatal(_) => 0L }
-    val initialPartitions = sys.env.getOrElse(
-      "SPARK_GRAFT_INITIAL_PARTITIONS",
-      if (sfBytes >= 100L * 1024 * 1024) "512" else cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initialPartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cores(sys.env)
+    val spark = Session.build(conf(cpus, queries.Tables.corpusBytes(sfDir).getOrElse(0L)), "WARN")
     // Honest measurement: execute the MATERIALIZED plan via the built-in
     // noop sink — every operator runs, including each query's final
     // orderBy (a bare .count() would let EliminateSorts prune it, under-
@@ -104,8 +176,7 @@ object Bench {
         n -> (System.nanoTime() - t0) / 1e9
       }
       util.OperatorCaches.release(spark)
-      val qsJson = timed.map { case (k, v) => s"\"" + k + "\":" + f4(v) }
-        .mkString("{", ",", "}")
+      val qsJson = obj(timed.map { case (k, v) => k -> f4(v) })
       println(s"""{"metric":"shared_session","value":${f4(timed.map(_._2).sum)},"unit":"sec","queries":$qsJson,"sf":"$sfDir"}""")
       spark.stop()
       return
@@ -115,25 +186,20 @@ object Bench {
     // recorded as a ~0.06 s success. Every failure now lands in the
     // emitted JSON ("errors") and flips the exit code.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def errMsg(e: Throwable): String = {
-      val m = Option(e.getMessage).getOrElse("").trim
-      val s = if (m.nonEmpty) m else e.getClass.getName
-      s.linesIterator.next().take(300)
-    }
+    val profiler = new Profiler
+    spark.sparkContext.addSparkListener(profiler)
     // Analysis pre-check (plan only, no execution): a query broken at
     // analysis time — the round-7 failure mode — is caught in
     // milliseconds here and excluded from the timed battery instead of
     // polluting it with sub-100ms "successes".
-    val analyzed = selected.toSeq.sortBy(_._1).filter { case (name, fn) =>
-      try { fn(spark, sfDir).schema; true }
-      catch { case e: Throwable => errors(name) = errMsg(e); false }
-    }
+    errors ++= Analyze.failures(spark, sfDir, selected.keys)
+    val analyzed = selected.toSeq.sortBy(_._1).filterNot(q => errors.contains(q._1))
     // Warm the JVM/codegen/scan paths on one of the queries actually under
     // measurement, so the first timed query isn't billed for session init.
     // A warmup-only execution failure is still a failure — record it.
     analyzed.headOption.foreach { case (name, fn) =>
       try { run(fn) }
-      catch { case e: Throwable => errors.getOrElseUpdate(name, errMsg(e)) }
+      catch { case e: Throwable => errors.getOrElseUpdate(name, Analyze.firstLine(e)) }
       util.OperatorCaches.release(spark)
     }
     // Report min of two runs per query: steady-state cost, de-noised from
@@ -145,8 +211,8 @@ object Bench {
         : Double = {
       if (errors.contains(name)) return Double.NaN // don't re-run known-broken
       val t0 = System.nanoTime()
-      try { run(fn) }
-      catch { case e: Throwable => errors(name) = errMsg(e) }
+      try attributed(spark, name)(run(fn))
+      catch { case e: Throwable => errors(name) = Analyze.firstLine(e) }
       val dt = (System.nanoTime() - t0) / 1e9
       // Drop operator-level persist() caches THROUGH the CacheManager
       // (Dataset.unpersist clears the plan→cache mapping; a raw-RDD
@@ -170,7 +236,7 @@ object Bench {
     val sorted = analyzed
     val pass1 = sorted.map { case (name, fn) => name -> one(name, fn) }.toMap
     val pass2 = sorted.map { case (name, fn) => name -> one(name, fn) }.toMap
-    val medians = scala.collection.mutable.Map.empty[String, Double]
+    val samples = scala.collection.mutable.Map.empty[String, List[Double]]
     val firstPass = sorted.map { case (name, fn) =>
       val t3 = one(name, fn)
       (name, fn, List(pass1(name), pass2(name), t3), System.nanoTime())
@@ -238,25 +304,15 @@ object Bench {
         measuredAt = System.nanoTime()
         retries += 1
       }
-      medians(name) = medOf(ss)
+      samples(name) = ss
       name -> ss.min
     }.filterNot { case (name, _) => errors.contains(name) }
-    def jsonEsc(s: String): String = s.flatMap {
-      case '"'            => "\\\""
-      case '\\'           => "\\\\"
-      case c if c < ' '   => f"\\u${c.toInt}%04x"
-      case c              => c.toString
-    }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + f4(v) }
-      .mkString("{", ",", "}")
-    val qsMed = results.map { case (k, _) => s"\"" + k + "\":" + f4(medians(k)) }
-      .mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) =>
-      "\"" + k + "\":\"" + jsonEsc(v) + "\""
-    }.mkString("{", ",", "}")
+    val qs = obj(results.map { case (k, v) => k -> f4(v) })
+    val qsMed = obj(results.map { case (k, _) => k -> f4(medOf(samples(k))) })
+    val errJson = obj(errors.map { case (k, v) => k -> util.JsonText.quote(v) })
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val totalMed =
-      if (results.nonEmpty) results.map(r => medians(r._1)).sum else 0.0
+      if (results.nonEmpty) results.map(r => medOf(samples(r._1))).sum else 0.0
     val line = s"""{"metric":"total","value":${f4(total)},"unit":"sec","queries":$qs,"queries_median":$qsMed,"total_median":${f4(totalMed)},"failed":${errors.size},"errors":$errJson,"sf":"$sfDir"}"""
     // The file copy is the complete, machine-readable record regardless
     // of scrape limits, and is written FIRST: if compact-line assembly
@@ -270,12 +326,11 @@ object Bench {
     val outFiles = sys.env.get("SPARK_GRAFT_BENCH_OUT")
       .map(Seq(_))
       .getOrElse(Seq("BENCH_LATEST.json", s"BENCH_LATEST_$sfLabel.json"))
-    outFiles.foreach { outFile =>
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(outFile), line + "\n")
+    def write(file: String, text: String): Unit =
+      try java.nio.file.Files.writeString(java.nio.file.Paths.get(file), text + "\n")
       catch { case e: Throwable =>
-        System.err.println(s"[bench] could not write $outFile: ${e.getMessage}") }
-    }
+        System.err.println(s"[bench] could not write $file: ${e.getMessage}") }
+    outFiles.foreach(write(_, line))
     // The driver's BENCH artifact is json.loads of the LAST 2000 CHARS
     // of raw sbt stdout: the full 148-query line is ~7.8 KB, so every
     // round through r12 recorded "parsed": null (the tail starts
@@ -293,9 +348,7 @@ object Bench {
       val pairs =
         if (collide) results
         else results.map { case (k, v) => k.takeWhile(_ != '_') -> v }
-      val qsShort = pairs
-        .map { case (k, v) => "\"" + k + "\":" + fN(v, decimals) }
-        .mkString("{", ",", "}")
+      val qsShort = obj(pairs.map { case (k, v) => k -> fN(v, decimals) })
       s"""{"metric":"total","value":${fN(total, decimals)},"unit":"sec","keys":"id-prefix; full names in BENCH_LATEST file","queries":$qsShort,"total_median":${fN(totalMed, decimals)},"failed":${errors.size},"sf":"$sfDir"}"""
     }
     val scraped = Iterator(2, 1, 0).map(compactLine)
@@ -303,8 +356,13 @@ object Bench {
       .getOrElse(compactLine(0))
     // Stop Spark BEFORE the scraped line: a sporadic shutdown-time WARN
     // on stdout after the line would re-enter the driver's 2000-char
-    // window and break the parse.
+    // window and break the parse. Stopping also drains the listener bus,
+    // so the profile below has every job and stage of the timed runs.
     spark.stop()
+    // Beside each record file, <record>.profile.json: each query's timed
+    // runs, job by job and stage by stage (Profiler).
+    val profile = profiler.json(results.map { case (k, _) => k -> samples(k) }, cpus.toInt, sfDir)
+    outFiles.foreach(f => write(f.stripSuffix(".json") + ".profile.json", profile))
     // Newline-pad so stdout's final 2000 chars are whitespace + the
     // compact line and nothing else (json.loads tolerates leading
     // whitespace; anything earlier on stdout — Spark warnings, progress

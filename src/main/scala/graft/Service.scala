@@ -83,6 +83,11 @@ object Service {
         "unknown --sink (expected parquet|blocks|http|native)")
   }
 
+  /** `SPARK_MASTER` (else `local[4]`) with `SPARK_GRAFT_CPUS` shuffle partitions. */
+  def conf(env: Map[String, String]): Seq[(String, String)] = Session.conf(Session.cores(env),
+    "spark.master" -> env.getOrElse("SPARK_MASTER", "local[4]"),
+    "spark.app.name" -> "graft-service")
+
   def main(args: Array[String]): Unit = {
     val opts = parseArgs(args.toSeq) match {
       case Right(o) => o
@@ -103,15 +108,7 @@ object Service {
     log.configBanner(cfg)
     log.info("pipeline paths", "backlog" -> opts("backlog"), "warehouse" -> warehouse)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-service")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(conf(sys.env), "WARN")
     // Every query below checkpoints under the warehouse: on a local one,
     // commit checkpoint files with rename(2) instead of FileContext's
     // fork-per-file rename. A manager already set in the conf wins.

@@ -1,18 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** Quick local smoke of the driver contract: entry() rows>0 plus a few
-  * semantic spot-checks. Not part of the driver protocol. */
+/** Quick local smoke of the driver contract (the driver's t1): entry()
+  * rows>0 plus a few semantic spot-checks. */
 object Smoke {
+  /** `local[4]`, whatever `SPARK_GRAFT_CPUS` says. */
+  val conf: Seq[(String, String)] = Session.conf("4")
+
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build(conf, "ERROR")
     val df = SparkEntry.entry(spark)
     println("ENTRY_ROWS=" + df.count())
     df.show(3, 48)

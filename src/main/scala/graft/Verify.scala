@@ -1,26 +1,40 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  val Usage = "usage: graft.Verify <sfDir> <outDir> [query ...] [--exclude=<query>,...]"
+
+  // wide initial exchanges + AQE coalesce — see Bench.scala (the sf10
+  // battery's large-SF spill fix; a no-op at the small SFs)
+  def conf(cores: String): Seq[(String, String)] = Session.conf(cores,
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "512")
+
+  /** sfDir, outDir and the names of the queries to run, or `Left` on fewer
+    * than two arguments or an unknown query name. Optional trailing names
+    * select a query subset (fast re-verification of individual operators
+    * after an oracle/plan change). `--exclude=a,b` drops names instead —
+    * the big-SF gate uses it to not spend Spark time materializing queries
+    * whose oracle is on the rows-only skip list anyway. */
+  def parseArgs(args: Seq[String]): Either[String, (String, String, Seq[String])] =
+    args match {
+      case sfDir +: outDir +: rest =>
+        val (exArgs, incArgs) = rest.partition(_.startsWith("--exclude="))
+        val exclude = exArgs.flatMap(_.stripPrefix("--exclude=").split(","))
+          .filter(_.nonEmpty).toSet
+        val subset = incArgs.toSet
+        val unknown = (subset ++ exclude) -- SparkEntry.queries.keySet
+        if (unknown.nonEmpty) Left(s"unknown queries: ${unknown.mkString(", ")}")
+        else Right((sfDir, outDir, SparkEntry.queries.keys.toSeq
+          .filter(n => (subset.isEmpty || subset(n)) && !exclude(n))))
+      case _ => Left("missing <sfDir> <outDir>")
+    }
+
   def main(args: Array[String]): Unit = {
-    // optional trailing names select a query subset (fast re-verification
-    // of individual operators after an oracle/plan change); unknown names
-    // fail fast like graft.Bench. `--exclude=a,b` drops names instead —
-    // the big-SF gate uses it to not spend Spark time materializing
-    // queries whose oracle is on the rows-only skip list anyway.
-    val Array(sfDir, outDir) = args.take(2)
-    val (exArgs, incArgs) = args.drop(2).partition(_.startsWith("--exclude="))
-    val exclude = exArgs.flatMap(_.stripPrefix("--exclude=").split(","))
-      .filter(_.nonEmpty).toSet
-    val subset = incArgs.toSet
-    val unknown = (subset ++ exclude) -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val selected0 =
-      if (subset.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(subset).toMap
-    val selected = selected0.view.filterKeys(!exclude.contains(_)).toMap
+    val (sfDir, outDir, selected) = parseArgs(args.toSeq) match {
+      case Right(parsed) => parsed
+      case Left(err) => System.err.println(s"$err\n$Usage"); sys.exit(2)
+    }
     // Single-file output (coalesce(1)) is the driver-compatible default.
     // At sf10 the one-task sort+encode tail DOMINATES row-heavy queries
     // (measured: the 10M-row analytics MV took 6 min of its ~6.5 min
@@ -29,21 +43,11 @@ object Verify {
     // sort order, and DuckDB's glob reads them back in name order, so
     // tools/check.py's row-order compare is unchanged.
     val wideWrite = sys.env.get("SPARK_GRAFT_VERIFY_WIDE").contains("1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // wide initial exchanges + AQE coalesce — see Bench.scala (the
-      // sf10 battery's large-SF spill fix; a no-op at the small SFs)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", "512")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(conf(Session.cores(sys.env)), "WARN")
     new java.io.File(outDir).mkdirs()
-    selected.foreach { case (name, fn) =>
+    selected.foreach { name =>
       try {
-        val out = fn(spark, sfDir)
+        val out = SparkEntry.queries(name)(spark, sfDir)
         (if (wideWrite) out else out.coalesce(1)).write.mode("overwrite")
           .parquet(s"$outDir/$name")
       }

@@ -302,20 +302,9 @@ object Dedup {
       // (≥ 1 GiB input — sf10 and up; at the small SFs the build's
       // scratch is MBs and the cleaner's normal cadence suffices). On a
       // stat failure it nudges anyway — the safe side at scale.
-      if (corpusBytes(sfDir) >= 1024L * 1024 * 1024) System.gc()
+      if (Tables.corpusBytes(sfDir).forall(_ >= 1024L * 1024 * 1024)) System.gc()
       cp
     }
-
-  /** Total bytes under the corpus dir (driver-side file walk, no Spark
-    * job) — the scratch-pressure heuristic for [[pairTable]]'s GC nudge.
-    * `Long.MaxValue` on failure: an unstatable corpus gets the nudge. */
-  private def corpusBytes(sfDir: String): Long =
-    try {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(sfDir))
-      try s.filter(p => java.nio.file.Files.isRegularFile(p))
-        .mapToLong(p => java.nio.file.Files.size(p)).sum()
-      finally s.close()
-    } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
 
   /** Eager checkpoint with the build plan dereferenced — see
     * [[OperatorCaches.materializeTruncated]] (moved there so x117's

@@ -10,6 +10,16 @@ object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
+  /** Total bytes of the files under the corpus dir (a driver-side file
+    * walk, no Spark job); `None` when the walk fails. */
+  def corpusBytes(sfDir: String): Option[Long] =
+    try {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(sfDir))
+      try Some(s.filter(p => java.nio.file.Files.isRegularFile(p))
+        .mapToLong(p => java.nio.file.Files.size(p)).sum())
+      finally s.close()
+    } catch { case scala.util.control.NonFatal(_) => None }
+
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame = table(s, d, "customer")

@@ -49,6 +49,15 @@ if [ -n "$process_starts" ]; then
   echo "$process_starts"
   exit 1
 fi
+# Every main builds its session through graft.Session, the one place that
+# sets master, shuffle partitions, time zone, UI and log level. Fail on a
+# SparkSession.builder anywhere else in src/main/scala.
+builders=$(grep -rn 'SparkSession\.builder' src/main/scala | grep -v '^src/main/scala/graft/Session\.scala:' || true)
+if [ -n "$builders" ]; then
+  echo "gate: SparkSession.builder outside graft/Session.scala:"
+  echo "$builders"
+  exit 1
+fi
 # Compile (main + test), then the analysis-only smoke: resolve every
 # query plan + entry() at sf0.001 (graft.Analyze -- df.schema only, no
 # execution, ~30 s warm). Round 7's events/timestamp_ntz environment
@@ -69,6 +78,7 @@ sbt -batch "runMain graft.Analyze /root/testdata/sf0.001"
 # "[info] " prefix and "[success] Total time" footer sat inside the
 # window. This step runs a minimal bench exactly as the driver does and
 # asserts the tail parses — the artifact IS the acceptance test.
+rm -f /tmp/gate_bench_artifact.json /tmp/gate_bench_artifact.profile.json
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 \
 SPARK_GRAFT_BENCH_OUT=/tmp/gate_bench_artifact.json \
   sbt -batch "runMain graft.Bench r1_ingest_raw r2_subject_segments" \
@@ -84,4 +94,9 @@ except Exception as e:
                      f" -> {e}\ntail repr: {tail[-300:]!r}")
 assert rec.get("queries"), rec
 print("driver-scrape simulation OK:", rec["queries"])
+# Bench writes a per-query profile beside its record file.
+prof = json.load(open("/tmp/gate_bench_artifact.profile.json"))
+for q in ("r1_ingest_raw", "r2_subject_segments"):
+    assert prof["queries"].get(q, {}).get("jobs"), f"profile has no jobs for {q}"
+print("bench profile OK:", {q: len(v["jobs"]) for q, v in prof["queries"].items()})
 EOF
