@@ -213,10 +213,10 @@ object SparkEntry {
     "x100_nb_distill" -> (TextAnalysis.nbDistill _),
     "x101_dup_components" -> (Dedup.dupComponents _),
     "x102_canonical_keep" -> (Dedup.canonicalKeep _),
-    "x103_delta_dedup" -> (Dedup.deltaDedup _),
-    // batch flavor of the STREAMING base-index near-dup (same
-    // composition, watermark eliminated; StreamingSpec drives the
-    // online side) — same oracle as x103 by construction
+    // one delta-vs-base near-dup: the batch flavor of the STREAMING
+    // base-index operator (same composition, watermark eliminated;
+    // StreamingSpec drives the online side) serves both keys
+    "x103_delta_dedup" -> (graft.streaming.CorpusStream.deltaDedupBatch _),
     "x104_stream_delta_dedup" ->
       (graft.streaming.CorpusStream.deltaDedupBatch _),
     "x105_ivfpq_topk" -> (ProductQuantization.ivfPqTopK _),
@@ -528,6 +528,29 @@ object SparkEntry {
            |WHERE d.doc_id >= sp.split_id
            |ORDER BY d.doc_id""".stripMargin
   }
+
+  /** q14 / x72 shared oracle: gaps-and-islands sessions (a gap over
+    * 1800 s opens a session) per user, in (ts, event_id) order. */
+  private lazy val sessionizeSql: String =
+    """WITH flagged AS (
+      |  SELECT user_id, event_id, ts, value,
+      |    CASE WHEN lag(ts) OVER w IS NULL
+      |           OR CAST(epoch(date_trunc('second', ts)) AS BIGINT)
+      |            - CAST(epoch(date_trunc('second', lag(ts) OVER w)) AS BIGINT) > 1800
+      |         THEN 1 ELSE 0 END AS new_session
+      |  FROM events
+      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+      |), sessions AS (
+      |  SELECT user_id, event_id, ts, value,
+      |    CAST(SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
+      |  FROM flagged
+      |)
+      |SELECT user_id, session_seq, COUNT(*) AS n_events,
+      |  MIN(ts) AS session_start, MAX(ts) AS session_end,
+      |  V2D(SUM(DEC6(value))) AS sum_value
+      |FROM sessions GROUP BY user_id, session_seq
+      |ORDER BY user_id, session_seq""".stripMargin
 
   /** x3's DF-capped inverted-index Jaccard as a CTE ending in
     * `ngram_pairs` (appends to [[shingleCte]] or [[lshPairsCte]]) —
@@ -1074,26 +1097,7 @@ object SparkEntry {
         |  V2D(SUM(DEC6(value))) / CAST(COUNT(value) AS DOUBLE) AS avg_value
         |FROM events GROUP BY 1, 2 ORDER BY hour_start, event_type""".stripMargin,
 
-    "q14_sessionize" ->
-      """WITH flagged AS (
-        |  SELECT user_id, event_id, ts, value,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR CAST(epoch(date_trunc('second', ts)) AS BIGINT)
-        |            - CAST(epoch(date_trunc('second', lag(ts) OVER w)) AS BIGINT) > 1800
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), sessions AS (
-        |  SELECT user_id, event_id, ts, value,
-        |    CAST(SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
-        |  FROM flagged
-        |)
-        |SELECT user_id, session_seq, COUNT(*) AS n_events,
-        |  MIN(ts) AS session_start, MAX(ts) AS session_end,
-        |  V2D(SUM(DEC6(value))) AS sum_value
-        |FROM sessions GROUP BY user_id, session_seq
-        |ORDER BY user_id, session_seq""".stripMargin,
+    "q14_sessionize" -> sessionizeSql,
 
     "q17_pivot" ->
       """SELECT o_orderpriority,
@@ -2799,29 +2803,10 @@ object SparkEntry {
          |ORDER BY cnt DESC, w1, w2""".stripMargin,
 
     // x72 = q14's semantics through the streaming operator's batch path:
-    // the oracle is q14's window formulation verbatim — the stateful
+    // the oracle is q14's window formulation itself — the stateful
     // operator must reproduce it exactly (ordering, gap rule, decimal
     // sum) for the hash compare to hold.
-    "x72_stream_sessions" ->
-      """WITH flagged AS (
-        |  SELECT user_id, event_id, ts, value,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |           OR CAST(epoch(date_trunc('second', ts)) AS BIGINT)
-        |            - CAST(epoch(date_trunc('second', lag(ts) OVER w)) AS BIGINT) > 1800
-        |         THEN 1 ELSE 0 END AS new_session
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |), sessions AS (
-        |  SELECT user_id, event_id, ts, value,
-        |    CAST(SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_seq
-        |  FROM flagged
-        |)
-        |SELECT user_id, session_seq, COUNT(*) AS n_events,
-        |  MIN(ts) AS session_start, MAX(ts) AS session_end,
-        |  V2D(SUM(DEC6(value))) AS sum_value
-        |FROM sessions GROUP BY user_id, session_seq
-        |ORDER BY user_id, session_seq""".stripMargin,
+    "x72_stream_sessions" -> sessionizeSql,
 
     // Mirrors Quantization.pcaPower: the x38 exact-integer moment pass
     // (HUGEINT here ≡ DECIMAL(38,0) there), dense-matrix assembly, and
@@ -3914,8 +3899,8 @@ object SparkEntry {
         |  JOIN best b USING (component_rep)
         |ORDER BY l.doc_id""".stripMargin),
 
-    // Mirrors Dedup.deltaDedup AND CorpusStream.deltaDedupBatch (the
-    // batch carrier of the streaming flavor): base = doc_id below the
+    // Mirrors CorpusStream.deltaDedupBatch (the batch carrier of the
+    // streaming operator, behind both keys): base = doc_id below the
     // in-plan 80th percentile of the id space, per-doc band keys (same
     // md5-min scheme as x2's all_bands), buckets over MaxBandBucket
     // BASE members cut, delta probes only, fingerprint verify from the

@@ -56,9 +56,8 @@ object Verify {
       } finally {
         // release the operator-level persists so 50+ queries don't
         // accumulate cached signature tables in one session — scoped to
-        // THIS session's graft-registered caches (releaseAll would also
-        // drop another live session's registered caches, and clearCache
-        // any caller-owned ones, in an embedding process)
+        // THIS session's graft-registered caches (clearCache would also
+        // drop any caller-owned ones in an embedding process)
         graft.util.OperatorCaches.release(spark)
         // ...and nudge the ContextCleaner: finished queries' SHUFFLE
         // FILES are deleted only when their dependencies are GC'd, and

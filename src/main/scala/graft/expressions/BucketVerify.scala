@@ -332,8 +332,7 @@ case class SelfBucketPairs(child: Expression, tau: Double)
 
 /** A bucket's inverted fingerprint index as ONE struct row — the static
   * (base) side of the delta-vs-base probe verify
-  * ([[graft.operators.Dedup.deltaDedupFrom]] x103 /
-  * [[graft.streaming.CorpusStream.deltaDedupStream]] x104).
+  * ([[graft.streaming.CorpusStream.deltaDedupStream]], x103/x104/x118).
   *
   * Input: the bucket's `collect_list` aggregate —
   * array<struct<base_id long, fpa array<long>, n long>>. Output:

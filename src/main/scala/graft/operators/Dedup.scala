@@ -290,7 +290,7 @@ object Dedup {
       // consumer), not their sum. Same production stance as before
       // ("materialize the pair index once per compaction") — now with
       // the build's scratch actually RETURNED at the seam.
-      val cp = materializeTruncated(
+      val cp = OperatorCaches.materializeTruncated(
         minhashLsh(spark, sfDir).select("doc_a", "doc_b"))
       // The GC nudge exists so the ContextCleaner can delete the build's
       // corpus-scale shuffle files BEFORE consumer stages run (peak
@@ -305,12 +305,6 @@ object Dedup {
       if (Tables.corpusBytes(sfDir).forall(_ >= 1024L * 1024 * 1024)) System.gc()
       cp
     }
-
-  /** Eager checkpoint with the build plan dereferenced — see
-    * [[OperatorCaches.materializeTruncated]] (moved there so x117's
-    * stage barriers share it). */
-  private def materializeTruncated(dfIn: DataFrame): DataFrame =
-    OperatorCaches.materializeTruncated(dfIn)
 
   /** [[minhashLsh]] over an arbitrary persisted (doc_id, sh) relation —
     * the testable core (the skew spec drives it with a mass-duplicated
@@ -1378,125 +1372,13 @@ object Dedup {
         col("keep_doc"), (col("doc_id") === col("keep_doc")).as("kept"))
   }
 
-  /** Near-dup decision threshold for [[deltaDedup]]: a delta doc whose
-    * best verified base match reaches this Jaccard is dropped as a
-    * duplicate of the base corpus. Matches are still REPORTED from the
-    * x2 floor (0.02) so the operator's output carries the full evidence
-    * either decision policy would need. */
+  /** Near-dup decision threshold for the delta-vs-base near-dup
+    * ([[graft.streaming.CorpusStream.deltaDedupStream]], x103/x104/x118):
+    * a delta doc whose best verified base match reaches this Jaccard is
+    * dropped as a duplicate of the base corpus. Matches are still
+    * REPORTED from the x2 floor (0.02) so the operator's output carries
+    * the full evidence either decision policy would need. */
   val DeltaDupTau = 0.5
-
-  /** x103: INCREMENTAL (DELTA-vs-BASE) NEAR-DUP — the shape a 100 TB
-    * pipeline actually runs daily: dedup the new batch AGAINST the
-    * existing corpus without re-pairing the corpus with itself. The
-    * corpus split is derived in-plan (base = doc_id below the 80th
-    * percentile of the id space, a 1-row broadcast aggregate standing in
-    * for the real deployment's explicit snapshot boundary); base docs
-    * form the LSH index side (per-doc MinHash band keys, buckets over
-    * [[MaxBandBucket]] base members cut before any join), delta docs
-    * only PROBE it. Candidates verify exactly like x2 (60-bit md5
-    * fingerprint intersection, oracle-mirrored), and each delta doc
-    * reports its match count, best base partner (max Jaccard, ties to
-    * the smallest base id) and the [[DeltaDupTau]] drop decision —
-    * delta docs with no shingles or no candidates are reported with
-    * zero matches, never silently dropped.
-    *
-    * Scale shape: the base index is ONE scan of the base side into an
-    * O(N·bands) narrow key table (a production deployment materializes
-    * it as a bucketed table once and re-probes it every delta — derived
-    * in-plan here so the operator is self-contained); probe volume is
-    * ∝ |delta|·bands with the bucket cap bounding each key's fan-out;
-    * there is NO delta-delta or base-base self-join anywhere (the new
-    * batch's internal duplicates are x2's job at delta scale, and the
-    * base was deduped when it was ingested). Verify exchanges carry
-    * fingerprints, not shingle strings — the x2 sf10 lesson. */
-  def deltaDedup(spark: SparkSession, sfDir: String): DataFrame =
-    deltaDedupFrom(
-      Tables.documentsParallel(spark, sfDir).select("doc_id"),
-      Tables.documentsParallel(spark, sfDir).select("doc_id", "text"))
-
-  /** [[deltaDedup]] over arbitrary (doc_id) id and (doc_id, text)
-    * corpus relations — the testable seam (fixtures plant a delta
-    * near-dup of a base doc, an unmatched delta doc, and an empty-text
-    * delta doc). */
-  private[graft] def deltaDedupFrom(ids: DataFrame,
-      docs: DataFrame): DataFrame = {
-    val sh = shingleTableFrom(docs)
-    // the snapshot boundary: 1-row aggregate, broadcast to every probe
-    val split = ids.agg(
-      floor(max(col("doc_id")).cast("double") * 4.0 / 5.0)
-        .cast("long").as("split_id"))
-    val marked = OperatorCaches.persist(
-      sh.crossJoin(broadcast(split))
-        .select(col("doc_id"), col("sh"),
-          (col("doc_id") >= col("split_id")).as("is_delta")))
-    val bands = marked
-      .select(col("doc_id"), col("is_delta"),
-        posexplode(minhashSig(col("sh"), NumMinhashes)))
-      .toDF("doc_id", "is_delta", "band", "hs")
-      .select(col("doc_id"), col("is_delta"), col("band"),
-        conv(substring(col("hs"), 1, 15), 16, 10).cast("long").as("h"))
-    val baseBands = bands.filter(!col("is_delta"))
-    // cap counts BASE members only — the index side is what fans out
-    val keptBuckets = baseBands.groupBy("band", "h")
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") <= MaxBandBucket)
-      .select("band", "h")
-    def fpOf(arr: Column): Column = transform(arr,
-      s => conv(substring(md5(s), 1, 15), 16, 10).cast("long"))
-    val fps = marked.select(col("doc_id"), fpOf(col("sh")).as("fp"),
-      size(col("sh")).cast("long").as("n"))
-    // The base side is aggregated to ONE inverted-index row per kept
-    // bucket ([[graft.expressions.BuildBucketIndex]] — collect_list is
-    // bounded by the cap), and each delta probe verifies against it
-    // inside the join's map stage
-    // ([[graft.expressions.ProbeBucketIndex]]): the round-12 fix for
-    // the candidate fetch-join shape the round-11 sf10 gate flagged at
-    // 21.3×/decade, which shipped BOTH fingerprint arrays once per
-    // (delta, base) CANDIDATE across two exchanges. Now the probe array
-    // crosses once per band and the bucket index once per bucket; only
-    // τ-survivors leave the map stage. Values are bit-identical (same
-    // fingerprints, same IEEE arithmetic) — the oracle is untouched. A
-    // pair surfacing in k agreeing bands verifies k times with
-    // identical values; the per-pair max() below collapses them —
-    // same match set as the old candidate-level pair dedup.
-    val buckets = baseBands
-      .join(keptBuckets, Seq("band", "h"))
-      .join(fps, "doc_id")
-      .groupBy("band", "h")
-      .agg(collect_list(struct(col("doc_id"), col("fp"), col("n")))
-        .as("ms"))
-      .select(col("band"), col("h"),
-        GraftSql.column(graft.expressions.BuildBucketIndex(
-          GraftSql.expression(col("ms")))).as("idx"))
-    val ver = bands.filter(col("is_delta"))
-      .select(col("doc_id").as("delta_id"), col("band"), col("h"))
-      .join(fps.select(col("doc_id").as("delta_id"),
-        col("fp").as("fp_d"), col("n").as("nd")), "delta_id")
-      .join(buckets, Seq("band", "h"))
-      .select(col("delta_id"),
-        explode(GraftSql.column(graft.expressions.ProbeBucketIndex(
-          GraftSql.expression(col("fp_d")), GraftSql.expression(col("nd")),
-          GraftSql.expression(col("idx")), 0.02))).as("mt"))
-      .groupBy(col("delta_id"), col("mt.base_id").as("base_id"))
-      .agg(max(col("mt.jaccard")).as("jaccard"))
-    val perDelta = ver.groupBy("delta_id").agg(
-      count(lit(1)).as("n_matches"),
-      max(struct(col("jaccard").as("j"), (-col("base_id")).as("nid")))
-        .as("best"))
-      .select(col("delta_id").as("doc_id"), col("n_matches"),
-        (-col("best.nid")).as("best_base"),
-        col("best.j").as("best_jaccard"))
-    ids.crossJoin(broadcast(split))
-      .filter(col("doc_id") >= col("split_id"))
-      .select("doc_id")
-      .join(perDelta, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-        col("best_base"), col("best_jaccard"),
-        coalesce(col("best_jaccard") >= DeltaDupTau, lit(false))
-          .as("is_dup"))
-      .orderBy("doc_id")
-  }
 
   /** x116: tokens hashed at each document end for [[pageStitch]] — 5
     * matches the prefix-key width x1's relaxed variant uses. */

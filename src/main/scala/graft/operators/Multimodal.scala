@@ -179,8 +179,7 @@ object Multimodal {
     * bit-for-bit (the pair relation alone would be vacuously empty on a
     * dup-free corpus slice and check nothing), and `n_partners` (the
     * blob's Hamming ≤ 3 within-type degree, x92's pattern) carries the
-    * pairing semantics. [[mediaDupPairs]] exposes the pair relation a
-    * curation pass would semi-join against.
+    * pairing semantics.
     *
     * Scale shape: REUSES x5's banded machinery verbatim
     * ([[Dedup.bandedHammingPairs]]) — the signature table is O(N)-narrow
@@ -208,16 +207,6 @@ object Multimodal {
         coalesce(col("n_partners"), lit(0L)).as("n_partners"))
       .orderBy("doc_id")
   }
-
-  /** The within-type Hamming ≤ 3 pair relation behind [[mediaDups]] —
-    * what a curation pass semi-joins against to drop one side of each
-    * near-duplicate pair. */
-  private[graft] def mediaDupPairs(docs: DataFrame): DataFrame =
-    Dedup.bandedHammingPairs(mediaSignatures(docs), "ahash", "ahash",
-      Seq("media_type"))
-      .select("doc_a", "doc_b", "media_type", "ahash_a", "ahash_b",
-        "hamming")
-      .orderBy("doc_a", "doc_b")
 
   /** O(N)-small (doc_id, media_type, ahash) signature table — persisted
     * because both sides of the banded join (and the degree join-back)
@@ -341,8 +330,7 @@ object Multimodal {
     *
     * Output is per blob (the x95/x96 pattern): chunk/landmark counts,
     * the landmark-hash digest (Σ polyhash < 2⁶³, exact long), and the
-    * matched-partner degree. [[audioLandmarkPairs]] exposes the pair
-    * relation.
+    * matched-partner degree.
     *
     * Scale shape: chunk derivation is a map-side explode (running-sum
     * starts via a per-row `aggregate` over the ≤⌈len/32⌉-entry lengths
@@ -386,26 +374,6 @@ object Multimodal {
         col("lm_digest"),
         coalesce(col("n_partners"), lit(0L)).as("n_partners"))
       .orderBy("doc_id")
-  }
-
-  /** The matched-pair relation behind [[audioLandmarkDups]]. */
-  private[graft] def audioLandmarkPairs(docs: DataFrame): DataFrame = {
-    val marks = audioLandmarkChunks(docs)
-      .filter(col("len") >= MinLandmarkBytes)
-    val kept = marks.groupBy("lhash", "len").agg(count(lit(1)).as("df"))
-      .filter(col("df") <= Dedup.MaxBandBucket).select("lhash", "len")
-    val cut = marks.join(kept, Seq("lhash", "len"))
-    cut.select(col("lhash"), col("len"),
-        col("doc_id").as("doc_a"), col("start").as("start_a"))
-      .join(cut.select(col("lhash"), col("len"),
-        col("doc_id").as("doc_b"), col("start").as("start_b")),
-        Seq("lhash", "len"))
-      .filter(col("doc_a") < col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"),
-        (col("start_a") - col("start_b")).as("delta"))
-      .agg(count(lit(1)).as("votes"))
-      .filter(col("votes") >= LandmarkVotes)
-      .orderBy("doc_a", "doc_b", "delta")
   }
 
   /** Per-audio-blob CDC chunk relation (doc_id, start, len, lhash):

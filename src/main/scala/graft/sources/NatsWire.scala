@@ -343,8 +343,7 @@ object JetStreamApi {
 /** The `nats://` → replay-backlog bridge: dial, subscribe (queue-grouped
   * like the reference's durable consumer), drain deliveries into ONE
   * envelope JSONL file, atomically renamed into the backlog directory
-  * that [[ReplayStreamProvider]] / `NatsLikeStream.fileEnvelopeSource`
-  * streams from. Capture-then-stream keeps the DSv2 source's offset
+  * that [[ReplayStreamProvider]] streams from. Capture-then-stream keeps the DSv2 source's offset
   * contract (global line positions over complete files — a half-written
   * file is never visible) while making the dial path real code.
   *

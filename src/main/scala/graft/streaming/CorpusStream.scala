@@ -94,10 +94,13 @@ object CorpusStream {
       }
   }
 
-  /** x104: STREAMING NEAR-DUP AGAINST A STATIC BASE INDEX — the online
-    * flavor of x103's daily-batch shape, and the decision a crawl-ingest
-    * pipeline wants at ARRIVAL time: is this incoming document a
-    * near-copy of anything already in the corpus? Every streamed doc
+  /** x103/x104: NEAR-DUP AGAINST A STATIC BASE INDEX — the one delta-vs-
+    * base near-dup: it dedups a new batch (x103's daily batch) or an
+    * arriving stream (x104, `Service --delta`, x118) against the
+    * existing corpus without re-pairing the corpus with itself, and
+    * answers what a crawl-ingest pipeline asks at ARRIVAL time: is this
+    * incoming document a near-copy of anything already in the corpus?
+    * There is no delta-delta or base-base pairing. Every streamed doc
     * gets one verdict row (match count from the x2 verify floor, best
     * base partner, the τ = [[graft.operators.Dedup.DeltaDupTau]] drop
     * decision) — including no-candidate and empty/null-text docs, which
@@ -108,13 +111,13 @@ object CorpusStream {
     * per-row MinHash band keys + 60-bit probe fingerprints (narrow
     * projections, computed once per doc BEFORE the band explode) →
     * left equi-join against the base band index (bucket cap on BASE
-    * membership, x103's discipline) → `dropDuplicatesWithinWatermark`
+    * membership) → `dropDuplicatesWithinWatermark`
     * on (doc, base) (a pair surfaces once however many bands agree) →
     * one fingerprint verify per surviving PAIR → one watermarked
     * per-doc windowed aggregate. In BATCH mode the same
     * composition runs with plain `dropDuplicates` and the watermark
     * eliminated — [[deltaDedupBatch]] is the oracle-checkable carrier
-    * (`x104_stream_delta_dedup`, same oracle SQL as x103).
+    * (`x103_delta_dedup` and `x104_stream_delta_dedup`, one oracle SQL).
     *
     * 100 TB note: the static side is built once per query start and
     * persisted (a deployment materializes it as a bucketed table and
@@ -144,7 +147,7 @@ object CorpusStream {
     val baseFps = baseSh.select(col("doc_id").as("base_id"),
       fpOf(col("sh")).as("fp_b"), size(col("sh")).cast("long").as("nb"))
     // The static index is ONE inverted-fingerprint-index row per kept
-    // bucket ([[graft.expressions.BuildBucketIndex]] — x103's round-12
+    // bucket ([[graft.expressions.BuildBucketIndex]] — the round-12
     // shape): each probe verifies against the bucket row inside the
     // stream-static join's map stage
     // ([[graft.expressions.ProbeBucketIndex]]), so no candidate-level
@@ -248,24 +251,30 @@ object CorpusStream {
         get_json_object(col("data"), "$.text").as("text")),
       baseDocs, watermarkDelay)
 
-  /** [[deltaDedupStream]]'s batch carrier over the documents table:
-    * the same in-plan 80th-percentile id-space split as
-    * [[graft.operators.Dedup.deltaDedup]] (base below, delta at/above,
-    * event time = doc_id seconds), so the TWO implementations — the
-    * batch pipeline and the streaming composition — are checked against
-    * the SAME oracle SQL, and against each other in the spec. */
-  def deltaDedupBatch(spark: SparkSession, sfDir: String): DataFrame = {
+  /** The batch carriers' corpus split over the documents table: base =
+    * doc_id below the 80th percentile of the id space (a 1-row broadcast
+    * aggregate standing in for a deployment's snapshot boundary) as
+    * (doc_id, source, text); the arriving stream = doc_id at/above it as
+    * (doc_id, ts, source, text), event time = doc_id seconds. The
+    * x103/x104/x118 oracles derive the same split in SQL. */
+  private def splitDocs(spark: SparkSession,
+      sfDir: String): (DataFrame, DataFrame) = {
     val docs = graft.queries.Tables.documentsParallel(spark, sfDir)
-    val split = docs.agg(
+    val marked = docs.crossJoin(broadcast(docs.agg(
       floor(max(col("doc_id")).cast("double") * 4.0 / 5.0)
-        .cast("long").as("split_id"))
-    val base = docs.crossJoin(broadcast(split))
-      .filter(col("doc_id") < col("split_id"))
-      .select("doc_id", "text")
-    val delta = docs.crossJoin(broadcast(split))
-      .filter(col("doc_id") >= col("split_id"))
-      .select(col("doc_id"),
-        timestamp_seconds(col("doc_id")).as("ts"), col("text"))
+        .cast("long").as("split_id"))))
+    val base = marked.filter(col("doc_id") < col("split_id"))
+      .select("doc_id", "source", "text")
+    val delta = marked.filter(col("doc_id") >= col("split_id"))
+      .select(col("doc_id"), timestamp_seconds(col("doc_id")).as("ts"),
+        col("source"), col("text"))
+    (base, delta)
+  }
+
+  /** [[deltaDedupStream]]'s batch carrier over [[splitDocs]]'s split —
+    * what `x103_delta_dedup` and `x104_stream_delta_dedup` run. */
+  def deltaDedupBatch(spark: SparkSession, sfDir: String): DataFrame = {
+    val (base, delta) = splitDocs(spark, sfDir)
     deltaDedupStream(spark, delta, base).orderBy("doc_id")
   }
 
@@ -436,26 +445,13 @@ object CorpusStream {
       when(col("s1_exact_kept"), col("n_matches")).as("n_base_matches"))
   }
 
-  /** [[corpusBuildStream]]'s batch carrier over the documents table —
-    * the same in-plan 80th-percentile id-space split as
-    * [[deltaDedupBatch]] (base below, arriving stream at/above, event
-    * time = doc_id seconds), so the streaming composition is checked
+  /** [[corpusBuildStream]]'s batch carrier over the documents table, on
+    * [[splitDocs]]'s split, so the streaming composition is checked
     * against ANSI SQL composed from x103/x104's near-dup CTEs and x94's
     * gate CTEs, and the StreamingSpec restart test drives the same code
     * online. */
   def corpusBuildBatch(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = graft.queries.Tables.documentsParallel(spark, sfDir)
-    val split = docs.agg(
-      floor(max(col("doc_id")).cast("double") * 4.0 / 5.0)
-        .cast("long").as("split_id"))
-    val base = docs.crossJoin(broadcast(split))
-      .filter(col("doc_id") < col("split_id"))
-      .select("doc_id", "source", "text")
-    val delta = docs.crossJoin(broadcast(split))
-      .filter(col("doc_id") >= col("split_id"))
-      .select(col("doc_id"),
-        timestamp_seconds(col("doc_id")).as("ts"),
-        col("source"), col("text"))
+    val (base, delta) = splitDocs(spark, sfDir)
     corpusBuildStream(spark, delta, base, armTtl = false)
       .orderBy("doc_id")
   }

@@ -3,10 +3,9 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
-import graft.model.Schemas
 import graft.pipeline.{Ingest, Views}
 
-/** Typed envelope row (mirrors [[Schemas.envelope]]). */
+/** Typed envelope row (mirrors [[graft.model.Schemas.envelope]]). */
 case class EnvelopeRow(subject: String, data: String,
   metaTimestamp: java.sql.Timestamp, streamSeq: Long)
 
@@ -53,17 +52,6 @@ object NatsLikeStream {
   /** The subject pattern the service subscribes to (`nats.yml:8`,
     * `main.go:88` — only `Subjects[0]`). */
   val SubjectPrefix = "globex.supprt"
-
-  /** A file-based streaming source with the envelope schema — the local
-    * stand-in for the NATS JetStream subscription (S1): JSON files dropped
-    * into `dir` play the role of published messages; `maxFilesPerTrigger`
-    * plays the role of the bounded channel (B1/B2). */
-  def fileEnvelopeSource(spark: SparkSession, dir: String,
-      maxFilesPerTrigger: Int = 10): DataFrame =
-    spark.readStream
-      .schema(Schemas.envelope)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .json(dir)
 
   /** The full continuous pipeline: envelopes → subject filter (S2) → raw
     * rows (P1–P4) → raw table append (K1) → MV cascade to the analytics

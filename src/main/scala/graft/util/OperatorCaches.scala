@@ -13,12 +13,11 @@ import org.apache.spark.storage.StorageLevel
   * keyed by owning session; [[release]] unpersists one session's
   * relations through the CacheManager (clearing the plan→cache mapping,
   * so a later identical `persist()` re-materializes instead of silently
-  * no-opping), and [[releaseAll]] does so for every session. This lets
-  * a caller that runs operators repeatedly in one long-lived session —
-  * the in-repo drivers ([[graft.Verify]], [[graft.Bench]]) or an
-  * external library user — release per-batch without
-  * `spark.catalog.clearCache()`, which would also drop any unrelated
-  * caches the caller owns.
+  * no-opping). This lets a caller that runs operators repeatedly in one
+  * long-lived session — the in-repo drivers ([[graft.Verify]],
+  * [[graft.Bench]]) or an external library user — release per-batch
+  * without `spark.catalog.clearCache()`, which would also drop any
+  * unrelated caches the caller owns.
   *
   * Concurrency contract: release between batches, not mid-operator — a
   * release while another thread is still executing an operator in the
@@ -100,13 +99,6 @@ object OperatorCaches {
       memos.remove(spark)
       ()
     }
-
-  /** [[release]] for every session with registered handles. */
-  def releaseAll(blocking: Boolean = false): Unit = synchronized {
-    handles.valuesIterator.foreach(_.foreach(_.unpersist(blocking)))
-    handles.clear()
-    memos.clear()
-  }
 
   /** Number of currently-registered cache handles (test/monitoring aid). */
   def registered: Int = synchronized(handles.valuesIterator.map(_.size).sum)

@@ -1847,8 +1847,7 @@ class OperatorsSpec extends SparkSpec {
       "delta-delta or base-base pairs, empty-text delta rows survive " +
       "with zero matches, ties break to the smallest base id") {
     import spark.implicits._
-    import graft.operators.Dedup
-    // ids 0..11 → split = ⌊11·4/5⌋ = 8: base 0..7, delta 8..11.
+    // Base 0..7, delta 8..11 (x103's split of ids 0..11: ⌊11·4/5⌋ = 8).
     // Base docs 2 and 3 are identical; delta 8 copies them (best_base
     // must be 2, the smaller id at equal jaccard). Delta 9 and 10 share
     // a unique text — a delta-delta dup that must NOT match. Base 5 and
@@ -1868,9 +1867,8 @@ class OperatorsSpec extends SparkSpec {
       10L -> "delta only phrase never seen in base corpus",
       11L -> null.asInstanceOf[String])
     val docs = texts.toDF("doc_id", "text")
-    val ids = texts.map(_._1).toDF("doc_id")
-    val out = Dedup.deltaDedupFrom(ids, docs).collect()
-    graft.util.OperatorCaches.release(spark)
+    val out = deltaVerdicts(docs.filter($"doc_id" >= 8L),
+      docs.filter($"doc_id" < 8L))
     assert(out.map(_.getLong(0)).toSeq === Seq(8L, 9L, 10L, 11L),
       "exactly the delta ids, ordered")
     val byId = out.map(r => r.getLong(0) -> r).toMap
@@ -1879,29 +1877,38 @@ class OperatorsSpec extends SparkSpec {
     assert(r8.getLong(2) === 2L, "tie at jaccard 1.0 breaks to base 2")
     assert(r8.getDouble(3) === 1.0)
     assert(r8.getBoolean(4), "exact copy is a dup")
-    Seq(9L, 10L, 11L).foreach { d =>
-      val r = byId(d)
-      assert(r.getLong(1) === 0L, s"delta $d must have no base match")
-      assert(r.isNullAt(2) && r.isNullAt(3) && !r.getBoolean(4))
-    }
+    Seq(9L, 10L, 11L).foreach(d => assertNoMatch(byId(d)))
   }
 
-  test("x104 streaming delta dedup (batch flavor): row-identical to " +
-      "x103's batch pipeline on the same split") {
-    import graft.operators.Dedup
-    def snap(rows: Array[org.apache.spark.sql.Row]) = rows.map { r =>
-      (r.getLong(0), r.getLong(1),
-        if (r.isNullAt(2)) None else Some(r.getLong(2)),
-        if (r.isNullAt(3)) None else Some(r.getDouble(3)),
-        r.getBoolean(4))
-    }.toSeq
-    val batch = snap(Dedup.deltaDedup(spark, Sf).collect())
+  test("x103/x104 delta dedup over an empty base: every delta doc gets " +
+      "a 0-match verdict row") {
+    import spark.implicits._
+    val delta = Seq(
+      20L -> "the quick brown fox jumps over the lazy dog",
+      21L -> "the quick brown fox jumps over the lazy dog",
+      22L -> "",
+      23L -> null.asInstanceOf[String]).toDF("doc_id", "text")
+    val out = deltaVerdicts(delta, delta.limit(0))
+    assert(out.map(_.getLong(0)).toSeq === Seq(20L, 21L, 22L, 23L))
+    out.foreach(assertNoMatch)
+  }
+
+  /** [[graft.streaming.CorpusStream.deltaDedupStream]]'s batch verdicts
+    * for `delta` against `base` (both (doc_id, text); delta event time =
+    * doc_id seconds, as in the x103/x104 carrier), ordered by doc_id:
+    * (doc_id, n_matches, best_base, best_jaccard, is_dup). */
+  private def deltaVerdicts(delta: org.apache.spark.sql.DataFrame,
+      base: org.apache.spark.sql.DataFrame): Array[org.apache.spark.sql.Row] = {
+    val out = graft.streaming.CorpusStream.deltaDedupStream(spark,
+      delta.withColumn("ts", timestamp_seconds(col("doc_id"))), base)
+      .orderBy("doc_id").collect()
     graft.util.OperatorCaches.release(spark)
-    val streamFlavor = snap(
-      graft.streaming.CorpusStream.deltaDedupBatch(spark, Sf).collect())
-    graft.util.OperatorCaches.release(spark)
-    assert(streamFlavor === batch)
-    assert(batch.nonEmpty)
+    out
+  }
+
+  private def assertNoMatch(r: org.apache.spark.sql.Row): Unit = {
+    assert(r.getLong(1) === 0L, s"delta ${r.getLong(0)} must have no base match")
+    assert(r.isNullAt(2) && r.isNullAt(3) && !r.getBoolean(4))
   }
 
   test("x107 gopher rules: each rule fires on exactly its construction") {

@@ -54,6 +54,10 @@ class OracleDialectSpec extends AnyFunSuite {
     assert(leftovers.isEmpty, s"unexpanded macros in: $leftovers")
   }
 
+  test("every query has an oracle and every oracle names a query") {
+    assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
+  }
+
   test("lowered oracles carry the bridge wherever a decimal surfaces as DOUBLE") {
     // every DECIMAL(25,6)/(25,0) accumulator in the lowered SQL came from a
     // macro, so the precision literal count must equal the DEC6+DEC0 usage

@@ -964,48 +964,30 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p102.toString.contains("CartesianProduct"),
       s"cartesian in x102:\n$p102")
     graft.util.OperatorCaches.release(spark)
-    val p103 = withoutAqe {
-      D.deltaDedup(spark, Sf).queryExecution.executedPlan
-    }
-    assert(p103.toString.contains(s"<= ${Dedup.MaxBandBucket}"),
-      s"base bucket cap missing from x103's plan:\n$p103")
-    assert(!p103.toString.contains("CartesianProduct"),
-      s"cartesian in x103:\n$p103")
-    p103.collect {
-      case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => j
-    }.foreach { j =>
-      val build = j.buildSide match {
-        case org.apache.spark.sql.catalyst.optimizer.BuildRight => j.right
-        case org.apache.spark.sql.catalyst.optimizer.BuildLeft => j.left
+    // x103 and x104 run one operator (the streaming composition's batch
+    // carrier): the base bucket cap survives, probes reach the index
+    // through equi-joins, and the only NLJ build is the split aggregate
+    Seq("x103_delta_dedup", "x104_stream_delta_dedup").foreach { q =>
+      val p = withoutAqe {
+        SparkEntry.queries(q)(spark, Sf).queryExecution.executedPlan
       }
-      assert(build.collectFirst {
-        case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a
-      }.isDefined, s"x103 split join is not aggregate-backed:\n$build")
-    }
-    graft.util.OperatorCaches.release(spark)
-    // x104 (the streaming composition's batch carrier): same contracts —
-    // the base bucket cap survives, probes reach the index through
-    // equi-joins, and the only NLJ build is the split aggregate
-    val p104 = withoutAqe {
-      graft.streaming.CorpusStream.deltaDedupBatch(spark, Sf)
-        .queryExecution.executedPlan
-    }
-    assert(p104.toString.contains(s"<= ${Dedup.MaxBandBucket}"),
-      s"base bucket cap missing from x104's plan:\n$p104")
-    assert(!p104.toString.contains("CartesianProduct"),
-      s"cartesian in x104:\n$p104")
-    p104.collect {
-      case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => j
-    }.foreach { j =>
-      val build = j.buildSide match {
-        case org.apache.spark.sql.catalyst.optimizer.BuildRight => j.right
-        case org.apache.spark.sql.catalyst.optimizer.BuildLeft => j.left
+      assert(p.toString.contains(s"<= ${Dedup.MaxBandBucket}"),
+        s"base bucket cap missing from $q's plan:\n$p")
+      assert(!p.toString.contains("CartesianProduct"),
+        s"cartesian in $q:\n$p")
+      p.collect {
+        case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => j
+      }.foreach { j =>
+        val build = j.buildSide match {
+          case org.apache.spark.sql.catalyst.optimizer.BuildRight => j.right
+          case org.apache.spark.sql.catalyst.optimizer.BuildLeft => j.left
+        }
+        assert(build.collectFirst {
+          case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a
+        }.isDefined, s"$q split join is not aggregate-backed:\n$build")
       }
-      assert(build.collectFirst {
-        case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec => a
-      }.isDefined, s"x104 split join is not aggregate-backed:\n$build")
+      graft.util.OperatorCaches.release(spark)
     }
-    graft.util.OperatorCaches.release(spark)
   }
 
   test("x104 batch carrier: probe fingerprints are computed once per doc " +
