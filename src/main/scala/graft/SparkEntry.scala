@@ -32,7 +32,7 @@ object SparkEntry {
     // exact distinct + honest column name for the DuckDB compare)
     "r7_windowed_counts" -> ((s: SparkSession, dir: String) =>
       graft.streaming.NatsLikeStream.windowedCounts(
-          RefParity.envelopes(s, dir), exactDistinct = true)
+          RefParity.envelopes(s, dir))
         .orderBy("hour_start", "stream")),
     // batch flavor of the streaming session windows — gates the
     // session_window merge semantics against a gaps-and-islands oracle
@@ -151,10 +151,8 @@ object SparkEntry {
           graft.queries.Tables.documents(s, dir)
             .withColumn("ts",
               org.apache.spark.sql.functions.timestamp_seconds(
-                org.apache.spark.sql.functions.col("doc_id"))),
-          armTtl = false)
-        .toDF().orderBy("doc_id"))
-    ,
+                org.apache.spark.sql.functions.col("doc_id"))))
+        .toDF().orderBy("doc_id")),
     "x58_ann_recall" -> (Similarity.annRecall _),
     "x59_latest_state" -> (Relational.latestState _),
     "x60_winsorize" -> (Relational.winsorize _),
@@ -174,8 +172,7 @@ object SparkEntry {
     // same oracle; the stateful/timeout path is StreamingSpec-driven.
     "x72_stream_sessions" -> ((s: SparkSession, dir: String) =>
       graft.streaming.SessionStream
-        .sessionize(s, graft.queries.Tables.events(s, dir),
-          armTimeout = false)
+        .sessionize(s, graft.queries.Tables.events(s, dir))
         .toDF().orderBy("user_id", "session_seq")),
     "x73_pca_power" -> (Quantization.pcaPower _),
     "x74_pca_project" -> (Quantization.pcaProject _),
@@ -194,7 +191,7 @@ object SparkEntry {
     // watermark-close/restart side)
     "x85_window_topk" -> ((s: SparkSession, dir: String) =>
       graft.streaming.TopKStream.windowTopK(s,
-          graft.queries.Tables.events(s, dir), armTimeout = false)
+          graft.queries.Tables.events(s, dir))
         .toDF().orderBy("window_start", "rank")),
     "x86_token_budget" -> (Curation.tokenBudget _),
     "x87_cdc_chunks" -> (Curation.cdcChunkStats _),
@@ -466,7 +463,8 @@ object SparkEntry {
     * relations on the documents table, ending at `agg` (per-delta match
     * counts) and `best` (best base partner). [[deltaDedupSql]] appends
     * the x103/x104 final select; the x118 oracle composes these with
-    * x94's gate CTEs and the first-seen-dedup window. */
+    * x94's gate CTEs and the first-seen-dedup window. `fp` fingerprints
+    * each doc once, not once per candidate pair. */
   private lazy val deltaDedupCtes: String = {
       val nm = graft.operators.Dedup.NumMinhashes
       val cap = graft.operators.Dedup.MaxBandBucket
@@ -487,16 +485,17 @@ object SparkEntry {
            |  SELECT d.doc_id AS delta_id, b.doc_id AS base_id
            |  FROM db d JOIN keptb USING (band, h) JOIN bb b USING (band, h)
            |  GROUP BY 1, 2),
+           |fp AS MATERIALIZED (
+           |  SELECT doc_id, list_transform(sh, x -> substring(md5(x), 1, 15))
+           |    AS fp, len(sh) AS n
+           |  FROM sh),
            |jv AS (
            |  SELECT c.delta_id, c.base_id,
-           |    CAST(len(list_intersect(
-           |      list_transform(sd.sh, x -> substring(md5(x), 1, 15)),
-           |      list_transform(sb.sh, x -> substring(md5(x), 1, 15))))
-           |      AS BIGINT) AS inter,
-           |    len(sd.sh) AS nd, len(sb.sh) AS nb
+           |    CAST(len(list_intersect(fd.fp, fb.fp)) AS BIGINT) AS inter,
+           |    fd.n AS nd, fb.n AS nb
            |  FROM cand c
-           |  JOIN sh sd ON sd.doc_id = c.delta_id
-           |  JOIN sh sb ON sb.doc_id = c.base_id),
+           |  JOIN fp fd ON fd.doc_id = c.delta_id
+           |  JOIN fp fb ON fb.doc_id = c.base_id),
            |v AS (
            |  SELECT delta_id, base_id,
            |    CAST(inter AS DOUBLE) / CAST(nd + nb - inter AS DOUBLE)
@@ -929,7 +928,7 @@ object SparkEntry {
         |  MIN("timestamp") AS min_ts, MAX("timestamp") AS max_ts
         |FROM raw GROUP BY 1 ORDER BY month""".stripMargin),
 
-    // Mirrors NatsLikeStream.windowedCounts(exactDistinct = true): hour
+    // Mirrors NatsLikeStream.windowedCounts on a batch input: hour
     // tumbling windows are epoch-aligned, so window.start ==
     // date_trunc('hour'); stream = first two dot-segments (every
     // synthesized subject has >= 3).

@@ -21,6 +21,13 @@ case class DedupVerdict(doc_id: Long, text_hash: String, first_id: Long,
   */
 object CorpusStream {
 
+  /** Event-time watermark delay of every operator here. */
+  val WatermarkDelay = "10 seconds"
+
+  /** First-seen dedup TTL of x57 and of x118's first stage (same state
+    * machine): a content hash unseen for this long forgets. */
+  val DedupTtlMs: Long = 3600L * 1000
+
   /** First-seen-wins EXACT DEDUP over a continuous document stream —
     * the streaming twin of x1's batch dedup: every arriving document
     * gets a verdict (its content hash, the first doc_id that carried
@@ -33,15 +40,15 @@ object CorpusStream {
     * (checkpointed, restart-safe — the spec proves a duplicate arriving
     * after a restart is still recognized). State is BOUNDED by an
     * event-time TTL: each key re-arms a timeout at (its latest event
-    * time + `ttlMs`), and once the watermark passes it the entry is
-    * dropped — a hash unseen for the TTL window forgets, which is the
+    * time + [[DedupTtlMs]]), and once the watermark passes it the entry
+    * is dropped — a hash unseen for the TTL window forgets, which is the
     * standard memory/recall trade of every streaming dedup (Spark's own
     * `dropDuplicatesWithinWatermark` makes the same one; this operator
     * additionally reports WHO the original was and the duplicate's
     * rank, which the built-in cannot).
     *
     * Within a micro-batch, rows are ranked by doc_id (deterministic
-    * regardless of arrival interleaving). In BATCH mode the same code
+    * regardless of arrival interleaving). On a BATCH input the same code
     * runs with empty initial state and no timeouts — the whole input is
     * one group invocation, making the operator oracle-checkable as
     * `x57_stream_dedup` (row_number over a hash partition in ANSI SQL)
@@ -51,15 +58,15 @@ object CorpusStream {
     * hash-partitioned across executors by the groupByKey exchange — the
     * same sharding a dedicated dedup-cache service would use; the TTL
     * is what keeps an unbounded crawl from unbounded state. */
-  def firstSeenDedup(spark: SparkSession, docs: DataFrame,
-      watermarkDelay: String = "10 seconds",
-      ttlMs: Long = 3600L * 1000,
-      armTtl: Boolean = true): Dataset[DedupVerdict] = {
+  def firstSeenDedup(spark: SparkSession, docs: DataFrame): Dataset[DedupVerdict] = {
     import spark.implicits._
+    // Batch arms no TTL: its plan has no watermark, so no timeout would
+    // fire, and all state dies with the single batch.
+    val streaming = docs.isStreaming
     docs
       .select(col("doc_id").cast("long"), col("ts").cast("timestamp"),
         md5(coalesce(col("text"), lit(""))).as("text_hash"))
-      .withWatermark("ts", watermarkDelay)
+      .withWatermark("ts", WatermarkDelay)
       .as[(Long, Timestamp, String)]
       .groupByKey(_._3)
       .flatMapGroupsWithState[DedupKeyState, DedupVerdict](
@@ -80,15 +87,9 @@ object CorpusStream {
               DedupVerdict(id, h, first, n, keep = n == 1L)
             }
             state.update(DedupKeyState(first, n))
-            // re-arm on every arrival: TTL counts from the LATEST sight.
-            // `armTtl = false` is the BATCH flavor — batch plans eliminate
-            // the watermark node (EliminateEventTimeWatermark), so arming
-            // an event-time timeout there would throw; batch needs no TTL
-            // anyway (all state dies with the single batch).
-            if (armTtl) {
-              val maxEvent = sorted.map(_._2.getTime).max
-              state.setTimeoutTimestamp(maxEvent + ttlMs)
-            }
+            // re-arm on every arrival: TTL counts from the LATEST sight
+            if (streaming)
+              state.setTimeoutTimestamp(sorted.map(_._2.getTime).max + DedupTtlMs)
             out.iterator
           }
       }
@@ -114,7 +115,7 @@ object CorpusStream {
     * membership) → `dropDuplicatesWithinWatermark`
     * on (doc, base) (a pair surfaces once however many bands agree) →
     * one fingerprint verify per surviving PAIR → one watermarked
-    * per-doc windowed aggregate. In BATCH mode the same
+    * per-doc windowed aggregate. On a BATCH input the same
     * composition runs with plain `dropDuplicates` and the watermark
     * eliminated — [[deltaDedupBatch]] is the oracle-checkable carrier
     * (`x103_delta_dedup` and `x104_stream_delta_dedup`, one oracle SQL).
@@ -125,9 +126,7 @@ object CorpusStream {
     * ∝ batch·bands probe rows, and the only streaming state is the
     * dedup + open-window buffers, both bounded by the watermark. */
   def deltaDedupStream(spark: SparkSession, streamDocs: DataFrame,
-      baseDocs: DataFrame,
-      watermarkDelay: String = "10 seconds",
-      carry: Seq[String] = Nil): DataFrame = {
+      baseDocs: DataFrame, carry: Seq[String] = Nil): DataFrame = {
     import graft.operators.Dedup
     def bandLong(hs: Column) =
       conv(substring(hs, 1, 15), 16, 10).cast("long")
@@ -180,7 +179,7 @@ object CorpusStream {
         carry.map(col) :+
         explode(array(shingles(coalesce(col("text"), lit("")))))
           .as("sh"): _*)
-      .withWatermark("ts", watermarkDelay)
+      .withWatermark("ts", WatermarkDelay)
     // Probe fingerprints are computed ONCE per doc BEFORE the band
     // explode and ride the exchanges as 60-bit longs (the x2 sf10
     // lesson) — never the shingle strings, and never per candidate row:
@@ -241,15 +240,14 @@ object CorpusStream {
     * JetStream sequence (so EVERY envelope — including null/absent-text
     * ones — still receives a verdict row, the operator's contract). */
   def deltaDedupEnvelopes(spark: SparkSession, envelopes: DataFrame,
-      baseDocs: DataFrame,
-      watermarkDelay: String = "10 seconds"): DataFrame =
+      baseDocs: DataFrame): DataFrame =
     deltaDedupStream(spark,
       envelopes.select(
         coalesce(get_json_object(col("data"), "$.doc_id").cast("long"),
           col("streamSeq").cast("long")).as("doc_id"),
         col("metaTimestamp").cast("timestamp").as("ts"),
         get_json_object(col("data"), "$.text").as("text")),
-      baseDocs, watermarkDelay)
+      baseDocs)
 
   /** The batch carriers' corpus split over the documents table: base =
     * doc_id below the 80th percentile of the id space (a 1-row broadcast
@@ -320,8 +318,8 @@ object CorpusStream {
     * pair-dedup and open-window buffers (watermark-bounded); the chain
     * is fMGWS(Append) → stateless gate projection + threshold broadcast
     * → stream-static band join → dropDuplicatesWithinWatermark →
-    * windowed per-doc aggregate, all Append-legal. In BATCH mode the
-    * same composition runs with timeouts un-armed and the watermark
+    * windowed per-doc aggregate, all Append-legal. On a BATCH input
+    * the same composition runs with timeouts un-armed and the watermark
     * eliminated — [[corpusBuildBatch]] is the oracle-checkable carrier
     * (`x118_corpus_build_stream`, sharing x103/x104's near-dup oracle
     * CTEs and x94's gate CTEs).
@@ -339,12 +337,11 @@ object CorpusStream {
     * [[deltaDedupEnvelopes]] (`Service --delta`) runs no
     * `flatMapGroupsWithState`, so this does not apply to it. */
   def corpusBuildStream(spark: SparkSession, streamDocs: DataFrame,
-      baseDocs: DataFrame,
-      watermarkDelay: String = "10 seconds",
-      armTtl: Boolean = true,
-      ttlMs: Long = 3600L * 1000): DataFrame = {
+      baseDocs: DataFrame): DataFrame = {
     import spark.implicits._
     import graft.operators.Curation
+    // batch arms no TTL (see firstSeenDedup)
+    val streaming = streamDocs.isStreaming
     // Spark's UnsupportedOperationChecker rejects ANY stateful operator
     // downstream of flatMapGroupsWithState ("possible correctness issue
     // due to global watermark"): it cannot see inside the user function,
@@ -358,7 +355,7 @@ object CorpusStream {
     // Spark's own documented escape hatch for this case is the
     // checkCorrectness flag; the restart spec exercises the chain's
     // cross-batch behavior end to end.
-    if (streamDocs.isStreaming)
+    if (streaming)
       spark.conf.set(
         "spark.sql.streaming.statefulOperator.checkCorrectness.enabled",
         "false")
@@ -394,7 +391,7 @@ object CorpusStream {
           "filter(regexp_extract_all(text, '[0-9]{13,19}', 0), " +
             s"r -> ${graft.operators.TextAnalysis.luhnOk("r")})"))
           .cast("long")).as("n_luhn_valid"))
-      .withWatermark("ts", watermarkDelay)
+      .withWatermark("ts", WatermarkDelay)
       .as[(Long, Timestamp, String, String, String,
         Option[Long], Option[Long], Option[Long])]
       .groupByKey(_._5)
@@ -414,8 +411,8 @@ object CorpusStream {
               (id, t, src, txt, nt, mc, nl, n == 1L)
             }
             state.update(DedupKeyState(first, n))
-            if (armTtl)
-              state.setTimeoutTimestamp(sorted.map(_._2.getTime).max + ttlMs)
+            if (streaming)
+              state.setTimeoutTimestamp(sorted.map(_._2.getTime).max + DedupTtlMs)
             out.iterator
           }
       }
@@ -432,8 +429,7 @@ object CorpusStream {
           col("max_chunk") <= lit(Curation.MaxChunkGate))
     val nd = deltaDedupStream(spark,
       sig.select("doc_id", "ts", "text", "s1_exact_kept", "gate_keep"),
-      baseDocs, watermarkDelay,
-      carry = Seq("s1_exact_kept", "gate_keep"))
+      baseDocs, carry = Seq("s1_exact_kept", "gate_keep"))
     val s2ok = !col("is_dup")
     nd.select(col("doc_id"),
       col("s1_exact_kept"),
@@ -452,7 +448,6 @@ object CorpusStream {
     * online. */
   def corpusBuildBatch(spark: SparkSession, sfDir: String): DataFrame = {
     val (base, delta) = splitDocs(spark, sfDir)
-    corpusBuildStream(spark, delta, base, armTtl = false)
-      .orderBy("doc_id")
+    corpusBuildStream(spark, delta, base).orderBy("doc_id")
   }
 }

@@ -53,6 +53,12 @@ object NatsLikeStream {
     * `main.go:88` — only `Subjects[0]`). */
   val SubjectPrefix = "globex.supprt"
 
+  /** Event-time watermark of [[dedupedRaw]] and [[windowedCounts]]. */
+  val EnvelopeWatermark = "10 minutes"
+
+  /** Event-time watermark of [[sessionCounts]]. */
+  val SessionWatermark = "30 minutes"
+
   /** The full continuous pipeline: envelopes → subject filter (S2) → raw
     * rows (P1–P4) → raw table append (K1) → MV cascade to the analytics
     * table (Q2–Q4) in the SAME epoch — exactly ClickHouse's synchronous
@@ -61,25 +67,19 @@ object NatsLikeStream {
     *
     * Output layout under `warehouse`: `raw/` and `analytics/` parquet
     * tables, each month-partitioned like the reference MergeTree tables.
-    *
-    * `variantAnalytics` picks the analytics-MV flavor (default: the
-    * VariantType single-parse derivation — the engine-native mapping of
-    * the analytics table's `data JSON` column; `false` = the
-    * `json_tuple` string path). Values are identical either way
-    * (`StreamingSpec` pins it); the switch exists for readers of the
-    * parquet output that can't consume what a Variant column parses. */
+    * The analytics MV is the VariantType single-parse derivation
+    * ([[Views.deriveAnalyticsVariant]]), the engine-native mapping of
+    * the analytics table's `data JSON` column. */
   def start(envelopes: DataFrame, warehouse: String, checkpoint: String,
-      trigger: Trigger = BatchTimeout,
-      variantAnalytics: Boolean = true): StreamingQuery =
-    writer(envelopes, warehouse, variantAnalytics)
+      trigger: Trigger = BatchTimeout): StreamingQuery =
+    writer(envelopes, warehouse)
       .trigger(trigger)
       .option("checkpointLocation", checkpoint)
       .start()
 
   /** [[start]]'s writer before its trigger, checkpoint and start: what
     * `Service` completes alongside its other streams. */
-  def writer(envelopes: DataFrame, warehouse: String,
-      variantAnalytics: Boolean = true): DataStreamWriter[Row] =
+  def writer(envelopes: DataFrame, warehouse: String): DataStreamWriter[Row] =
     envelopes.writeStream
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
         val raw = Ingest.envelopeToRaw(
@@ -89,7 +89,7 @@ object NatsLikeStream {
           Views.withMonth(raw)
             .write.mode("append").partitionBy("month")
             .parquet(s"$warehouse/raw")
-          Views.withMonth(Views.deriveAnalytics(raw, variantAnalytics))
+          Views.withMonth(Views.deriveAnalyticsVariant(raw))
             .write.mode("append").partitionBy("month")
             .parquet(s"$warehouse/analytics")
         } finally raw.unpersist()
@@ -100,31 +100,31 @@ object NatsLikeStream {
     * stream sequence within an event-time watermark — turns the sink from
     * at-least-once into effectively-once while keeping state bounded (old
     * sequence keys age out with the watermark). */
-  def dedupedRaw(envelopes: DataFrame, watermark: String = "10 minutes"): DataFrame =
+  def dedupedRaw(envelopes: DataFrame): DataFrame =
     Ingest.envelopeToRaw(envelopes)
-      .withWatermark("timestamp", watermark)
+      .withWatermark("timestamp", EnvelopeWatermark)
       .dropDuplicatesWithinWatermark("sequence")
 
   /** Streaming event-time tumbling window + watermark over the envelope
     * stream — the windowed continuous aggregation the reference lacks
     * (SURVEY §2.6), expressed so late data beyond the watermark is dropped
-    * and state is bounded. Works identically in batch mode for oracles.
+    * and state is bounded.
     *
-    * `exactDistinct = false` (streaming default): the distinct-sequence
-    * count is an HLL sketch (`approx_count_distinct`) in a column named
-    * `approx_seqs` — mergeable state, the only distinct-count that's
-    * sane inside unbounded streaming aggregation. `exactDistinct = true`
-    * (the batch/oracle flavor, `r7_windowed_counts`): an exact
-    * `count_distinct` named `n_seqs`, value-comparable against an ANSI
+    * On a stream the distinct-sequence count is an HLL sketch
+    * (`approx_count_distinct`) in a column named `approx_seqs` —
+    * mergeable state, the only distinct-count that's sane inside
+    * unbounded streaming aggregation. On a batch input (the oracle
+    * flavor, `r7_windowed_counts`) it is an exact `count_distinct`
+    * named `n_seqs`, value-comparable against an ANSI
     * `COUNT(DISTINCT …)` oracle. Same grouping, same windows — only the
     * distinct aggregate (and its honest name) changes. */
-  def windowedCounts(envelopes: DataFrame, watermark: String = "10 minutes",
-      exactDistinct: Boolean = false): DataFrame = {
+  def windowedCounts(envelopes: DataFrame): DataFrame = {
     val (distinctAgg, distinctName) =
-      if (exactDistinct) (count_distinct(col("streamSeq")), "n_seqs")
-      else (approx_count_distinct(col("streamSeq")), "approx_seqs")
+      if (envelopes.isStreaming)
+        (approx_count_distinct(col("streamSeq")), "approx_seqs")
+      else (count_distinct(col("streamSeq")), "n_seqs")
     envelopes
-      .withWatermark("metaTimestamp", watermark)
+      .withWatermark("metaTimestamp", EnvelopeWatermark)
       // group on the window STRUCT (not .start): the event-time watermark
       // marker lives on the struct attribute; extracting the field before
       // the agg would sever it and break append-mode streaming.
@@ -207,10 +207,9 @@ object NatsLikeStream {
   /** Streaming session windows (30-min gap) over the envelope stream —
     * `session_window` keeps per-key state bounded by the watermark; the
     * batch flavor matches the sessionize oracle semantics. */
-  def sessionCounts(envelopes: DataFrame, watermark: String = "30 minutes")
-      : DataFrame =
+  def sessionCounts(envelopes: DataFrame): DataFrame =
     envelopes
-      .withWatermark("metaTimestamp", watermark)
+      .withWatermark("metaTimestamp", SessionWatermark)
       .groupBy(
         session_window(col("metaTimestamp"), "30 minutes"),
         col("subject"))

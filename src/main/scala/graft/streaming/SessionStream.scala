@@ -26,6 +26,9 @@ object SessionStream {
   /** Inactivity gap that closes a session (same 1800 s as q14). */
   val GapSeconds = 1800L
 
+  /** Event-time watermark delay. */
+  val WatermarkDelay = "10 seconds"
+
   private def micros(t: Timestamp): Long =
     t.toInstant.getEpochSecond * 1000000L + t.toInstant.getNano / 1000L
 
@@ -72,6 +75,23 @@ object SessionStream {
     (BigDecimal(v) * BigDecimal(1000000))
       .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
 
+  /** [[sessionize]] over the SERVICE's envelope stream (the DSv2 replay
+    * source's schema: subject/data/metaTimestamp/streamSeq): user_id and
+    * value come out of the `data` JSON payload (absent value → 0.0, the
+    * `{}`-default house rule), event-time is the JetStream metadata
+    * timestamp, and the stream sequence is the deterministic tie-break
+    * id. This is the x72 path `Service --sessions` runs end-to-end:
+    * ReplaySource → sessionize → per-batch appended session parquet. */
+  def sessionizeEnvelopes(spark: SparkSession, envelopes: DataFrame): Dataset[SessionRow] =
+    sessionize(spark, envelopes.select(
+      get_json_object(col("data"), "$.user_id").cast("long").as("user_id"),
+      col("streamSeq").cast("long").as("event_id"),
+      col("metaTimestamp").cast("timestamp").as("ts"),
+      coalesce(get_json_object(col("data"), "$.value").cast("double"),
+        lit(0.0)).as("value"))
+      // non-event envelopes (no user_id in the payload) don't sessionize
+      .filter(col("user_id").isNotNull))
+
   /** x72: streaming gap-based sessionization — the q14 batch query as
     * an ONLINE operator. Every user's open session lives as one tiny
     * state row; a session is emitted when a ≥[[GapSeconds]] gap arrives
@@ -81,9 +101,9 @@ object SessionStream {
     * the gap window, not history), hash-partitioned by the groupByKey
     * exchange exactly as a session store would shard.
     *
-    * In BATCH mode (`armTimeout = false`) the same code runs with one
-    * group invocation per user and no timeouts, emitting every session
-    * including the trailing one — semantically identical to the q14
+    * On a BATCH input the same code runs with one group invocation per
+    * user and no timeouts, emitting every session including the
+    * trailing one — semantically identical to the q14
     * window formulation, and gated by the SAME DuckDB oracle
     * (`x72_stream_sessions`). Batch-mode memory boundary: one group
     * invocation buffers one user's full history as primitive columns
@@ -99,35 +119,18 @@ object SessionStream {
     * double matches `dsum` bit-for-bit. Cross-batch disorder beyond the
     * watermark delay is the usual streaming approximation (late rows
     * fold into whatever session is open). */
-  /** [[sessionize]] over the SERVICE's envelope stream (the DSv2 replay
-    * source's schema: subject/data/metaTimestamp/streamSeq): user_id and
-    * value come out of the `data` JSON payload (absent value → 0.0, the
-    * `{}`-default house rule), event-time is the JetStream metadata
-    * timestamp, and the stream sequence is the deterministic tie-break
-    * id. This is the x72 path `Service --sessions` runs end-to-end:
-    * ReplaySource → sessionize → per-batch appended session parquet. */
-  def sessionizeEnvelopes(spark: SparkSession, envelopes: DataFrame,
-      watermarkDelay: String = "10 seconds"): Dataset[SessionRow] =
-    sessionize(spark, envelopes.select(
-      get_json_object(col("data"), "$.user_id").cast("long").as("user_id"),
-      col("streamSeq").cast("long").as("event_id"),
-      col("metaTimestamp").cast("timestamp").as("ts"),
-      coalesce(get_json_object(col("data"), "$.value").cast("double"),
-        lit(0.0)).as("value"))
-      // non-event envelopes (no user_id in the payload) don't sessionize
-      .filter(col("user_id").isNotNull), watermarkDelay)
-
-  def sessionize(spark: SparkSession, events: DataFrame,
-      watermarkDelay: String = "10 seconds",
-      armTimeout: Boolean = true): Dataset[SessionRow] = {
+  def sessionize(spark: SparkSession, events: DataFrame): Dataset[SessionRow] = {
     import spark.implicits._
+    // A batch plan has no watermark, so no timeout would fire: batch
+    // emits the trailing session at once and keeps no state.
+    val streaming = events.isStreaming
     def emit(user: Long, s: OpenSession): SessionRow =
       SessionRow(user, s.seq, s.n, s.start, s.last,
         s.sum_scaled.toDouble / 1000000.0)
     events
       .select(col("user_id").cast("long"), col("event_id").cast("long"),
         col("ts").cast("timestamp"), col("value").cast("double"))
-      .withWatermark("ts", watermarkDelay)
+      .withWatermark("ts", WatermarkDelay)
       .as[(Long, Long, Timestamp, Double)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[OpenSession, SessionRow](
@@ -172,15 +175,13 @@ object SessionStream {
                   Some(OpenSession(1L, tsOf(tU), tsOf(tU), 1L, sv(i)))
               }
             }
-            if (armTimeout) {
+            if (streaming) {
               open.foreach { s =>
                 state.update(s)
                 state.setTimeoutTimestamp(
                   s.last.getTime + GapSeconds * 1000L)
               }
             } else {
-              // batch mode: everything is final — emit the trailing
-              // session too and keep no state
               out ++= open.map(emit(user, _))
               if (state.exists) state.remove()
             }

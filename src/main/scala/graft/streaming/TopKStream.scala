@@ -35,6 +35,21 @@ object TopKStream {
   /** Tumbling window width (seconds). */
   val WindowSeconds = 3600L
 
+  /** Event-time watermark delay. */
+  val WatermarkDelay = "10 seconds"
+
+  /** [[windowTopK]] over the SERVICE's envelope stream (the DSv2 replay
+    * source's schema): the ranked key is the payload's `event_type`
+    * when present, else the subject (a hot-subjects leaderboard for
+    * plain pipeline traffic); event-time is the JetStream metadata
+    * timestamp. This is the x85 path `Service --topk` runs end-to-end:
+    * ReplaySource → windowTopK → per-batch appended parquet. */
+  def windowTopKEnvelopes(spark: SparkSession, envelopes: DataFrame): Dataset[WindowTopK] =
+    windowTopK(spark, envelopes.select(
+      col("metaTimestamp").cast("timestamp").as("ts"),
+      coalesce(get_json_object(col("data"), "$.event_type"),
+        col("subject")).as("event_type")))
+
   /** x85: STREAMING WINDOWED HEAVY HITTERS — per-hour top-[[TopK]]
     * event types, maintained ONLINE: each open window's type counts
     * live as one bounded Misra–Gries summary (O([[MgK]]) state per
@@ -44,8 +59,8 @@ object TopKStream {
     * pattern (trending topics, hot keys) that a windowed
     * groupBy+rank cannot produce incrementally with bounded state.
     *
-    * In BATCH mode (`armTimeout = false`) the same fold runs with one
-    * group invocation per window and emits immediately — O([[MgK]])
+    * On a BATCH input the same fold runs with one group invocation per
+    * window and emits immediately — O([[MgK]])
     * memory per invocation regardless of window size (MG never buffers
     * rows), gated by the exact per-window top-k DuckDB oracle
     * (`x85_window_topk`; exactness argument at [[MgK]]). Parallelism in
@@ -57,28 +72,16 @@ object TopKStream {
     *
     * Ties rank deterministically by (count DESC, event_type ASC),
     * mirrored in the oracle. */
-  /** [[windowTopK]] over the SERVICE's envelope stream (the DSv2 replay
-    * source's schema): the ranked key is the payload's `event_type`
-    * when present, else the subject (a hot-subjects leaderboard for
-    * plain pipeline traffic); event-time is the JetStream metadata
-    * timestamp. This is the x85 path `Service --topk` runs end-to-end:
-    * ReplaySource → windowTopK → per-batch appended parquet. */
-  def windowTopKEnvelopes(spark: SparkSession, envelopes: DataFrame,
-      watermarkDelay: String = "10 seconds"): Dataset[WindowTopK] =
-    windowTopK(spark, envelopes.select(
-      col("metaTimestamp").cast("timestamp").as("ts"),
-      coalesce(get_json_object(col("data"), "$.event_type"),
-        col("subject")).as("event_type")), watermarkDelay)
-
-  def windowTopK(spark: SparkSession, events: DataFrame,
-      watermarkDelay: String = "10 seconds",
-      armTimeout: Boolean = true): Dataset[WindowTopK] = {
+  def windowTopK(spark: SparkSession, events: DataFrame): Dataset[WindowTopK] = {
     import spark.implicits._
+    // A batch plan has no watermark, so no timeout would fire: batch
+    // emits each window at once (the invocation saw the whole window).
+    val streaming = events.isStreaming
     events
       .select(col("ts").cast("timestamp").as("ts"),
         col("event_type").cast("string").as("event_type"))
       .filter(col("event_type").isNotNull)
-      .withWatermark("ts", watermarkDelay)
+      .withWatermark("ts", WatermarkDelay)
       .select(
         unix_timestamp(date_trunc("hour", col("ts"))).as("wstart"),
         col("ts"), col("event_type"))
@@ -98,14 +101,13 @@ object TopKStream {
             var s = state.getOption.getOrElse(
               MgSummary(Array.empty, Array.empty))
             rows.foreach { case (_, _, t) => s = mgAdd(s, t) }
-            if (armTimeout) {
+            if (streaming) {
               state.update(s)
               // close when the watermark passes the window end
               state.setTimeoutTimestamp(
                 (wstart + WindowSeconds) * 1000L)
               Iterator.empty
             } else {
-              // batch mode: the invocation saw the whole window
               if (state.exists) state.remove()
               emitTopK(wstart, s)
             }

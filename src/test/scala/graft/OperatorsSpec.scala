@@ -2243,7 +2243,7 @@ class OperatorsSpec extends SparkSpec {
       .select(col("doc_id"), timestamp_seconds(col("doc_id")).as("ts"),
         col("source"), col("text"))
     val out = graft.streaming.CorpusStream
-      .corpusBuildStream(spark, delta, base, armTtl = false)
+      .corpusBuildStream(spark, delta, base)
       .collect()
     assert(out.length === 8, "one verdict row per arriving doc")
     val rows = out.map { r =>

@@ -244,12 +244,23 @@ class StreamingSpec extends SparkSpec {
 
   test("windowedCounts batch flavor aggregates per hour and stream") {
     import spark.implicits._
-    val batch = envs(0, 30).toDF()
-    val r = NatsLikeStream.windowedCounts(batch)
+    // sequences 5-14 redelivered, and a second hour
+    val rows = envs(0, 30) ++ envs(5, 10) ++
+      envs(40, 6).map(_.copy(metaTimestamp = ts("2024-01-15 11:20:00")))
+    val r = NatsLikeStream.windowedCounts(rows.toDF())
       .orderBy("hour_start", "stream").collect()
-    assert(r.map(_.getAs[Long]("n_msgs")).sum === 30)
+    assert(r.head.schema.fieldNames.toSeq ===
+      Seq("hour_start", "stream", "n_msgs", "n_seqs"))
+    assert(r.map(_.getAs[Long]("n_msgs")).sum === rows.size)
     assert(r.map(_.getAs[String]("stream")).toSet ===
       Set("globex.supprt", "globex.crmabc"))
+    // exact count(DISTINCT streamSeq) per (hour, stream)
+    val want = rows.groupBy(e => (e.metaTimestamp.toLocalDateTime
+        .withMinute(0).withSecond(0).withNano(0),
+        e.subject.split("\\.").take(2).mkString(".")))
+      .map { case (k, es) => k -> es.map(_.streamSeq).distinct.size.toLong }
+    assert(r.map(x => (x.getAs[Timestamp]("hour_start").toLocalDateTime,
+      x.getAs[String]("stream")) -> x.getAs[Long]("n_seqs")).toMap === want)
   }
 
   test("windowTopK (batch): exact per-window ranks with (count DESC, type ASC) " +
@@ -264,7 +275,7 @@ class StreamingSpec extends SparkSpec {
       Evt(i.toLong, at("2024-01-15 10:05:00"), 1L, t)
     } :+ Evt(99L, at("2024-01-15 11:30:00"), 1L, "z")
     val out = graft.streaming.TopKStream
-      .windowTopK(spark, evts.toDF(), armTimeout = false)
+      .windowTopK(spark, evts.toDF())
       .collect().sortBy(r => (r.window_start.getTime, r.rank))
     val h10rows = out.filter(_.window_start === at("2024-01-15 10:00:00"))
     assert(h10rows.length === 8, "top-8 cut")
@@ -353,29 +364,6 @@ class StreamingSpec extends SparkSpec {
     spark.sql("DROP TABLE IF EXISTS variant_mv")
   }
 
-  test("streaming MV cascade: the PRIMARY (variant) flavor and the " +
-      "string-path fallback write identical analytics tables") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    implicit val sqlCtx = spark.sqlContext
-    def runCascade(variant: Boolean): org.apache.spark.sql.DataFrame = {
-      val wh = Files.createTempDirectory("graft_flavor_wh").toString
-      val cp = Files.createTempDirectory("graft_flavor_cp").toString
-      val src = MemoryStream[Env]
-      src.addData(envs(0, 25): _*)
-      val q = NatsLikeStream.start(src.toDF(), wh, cp,
-        Trigger.AvailableNow(), variantAnalytics = variant)
-      q.awaitTermination()
-      spark.read.parquet(s"$wh/analytics")
-    }
-    val primary = runCascade(variant = true)
-    val fallback = runCascade(variant = false)
-    assert(primary.columns.sorted.toSeq === fallback.columns.sorted.toSeq)
-    val key = primary.columns.sorted.map(col).toIndexedSeq
-    assert(primary.select(key: _*).orderBy(key: _*).collect().map(_.toSeq).toSeq ===
-      fallback.select(key: _*).orderBy(key: _*).collect().map(_.toSeq).toSeq)
-  }
-
   test("redelivery end-to-end: a crashed epoch replays (NumDelivered>1) " +
       "and dedup + ack-after-write yield effectively-once in the sink") {
     import spark.implicits._
@@ -429,7 +417,7 @@ class StreamingSpec extends SparkSpec {
     val verdicts = scala.collection.mutable.ArrayBuffer.empty[graft.streaming.DedupVerdict]
     def run(): Unit = {
       val q = graft.streaming.CorpusStream
-        .firstSeenDedup(spark, src.toDF(), ttlMs = 3600L * 1000)
+        .firstSeenDedup(spark, src.toDF())
         .writeStream
         .outputMode("update")
         .option("checkpointLocation", cp)
@@ -630,7 +618,7 @@ class StreamingSpec extends SparkSpec {
       "CAST(1 AS BIGINT) AS user_id",
       "CAST(1.5 AS DOUBLE) AS value")
     val out = graft.streaming.SessionStream
-      .sessionize(spark, big, armTimeout = false).collect()
+      .sessionize(spark, big).collect()
     assert(out.length === 1)
     val s = out.head
     assert(s.user_id === 1L && s.session_seq === 1L && s.n_events === n)

@@ -58,6 +58,17 @@ if [ -n "$builders" ]; then
   echo "$builders"
   exit 1
 fi
+# Streaming operators read batch vs stream from their input's isStreaming
+# (one query runs both ways); a Boolean switch that callers must set to
+# match their input could disagree with it. Fail on a defaulted Boolean
+# parameter in src/main/scala/graft/streaming.
+bool_switches=$(grep -rnE '\b[A-Za-z_][A-Za-z0-9_]*\s*:\s*Boolean\s*=' src/main/scala/graft/streaming \
+  | grep -vE '\b(def|val|var)\s+[A-Za-z_][A-Za-z0-9_]*\s*:\s*Boolean' || true)
+if [ -n "$bool_switches" ]; then
+  echo "gate: defaulted Boolean parameter in src/main/scala/graft/streaming:"
+  echo "$bool_switches"
+  exit 1
+fi
 # Compile (main + test), then the analysis-only smoke: resolve every
 # query plan + entry() at sf0.001 (graft.Analyze -- df.schema only, no
 # execution, ~30 s warm). Round 7's events/timestamp_ntz environment

@@ -54,6 +54,10 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF01 = "/root/testdata/sf0.1"
 SF1 = os.path.join(REPO, "testdata", "sf1")
+# Verify and Bench run at the caller's SPARK_GRAFT_CPUS, else at the cores
+# this process may use (what `nproc` reports), so the gate measures the
+# host it runs on.
+CPUS = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 def run(cmd, **kw):
@@ -73,7 +77,7 @@ def bench(sf_dir, queries):
         "/tmp", f"scale_gate_bench_{os.path.basename(sf_dir.rstrip('/'))}.json")
     if os.path.isfile(out):
         os.remove(out)
-    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS="32",
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS=CPUS,
                SPARK_GRAFT_BENCH_OUT=out)
     cmd = ["sbt", "-batch", "runMain graft.Bench " + " ".join(queries)]
     p = run(cmd, env=env)
@@ -123,13 +127,15 @@ def main():
             sys.exit(f"SF dir does not exist: {d} — generate it first "
                      "(tools/gen_sf1.py <dir> [--copies N] [--tables a,b])")
 
+    print(f"scale gate: SPARK_GRAFT_CPUS={CPUS}", flush=True)
     failures = []
 
     if not args.skip_correctness:
         vout = "/tmp/scale_gate_verify"
         run(["rm", "-rf", vout])
-        # Verify defaults to local[4] without SPARK_GRAFT_CPUS — at sf1+
-        # that quadruples the correctness phase for no signal gain.
+        # Verify defaults to local[4] without SPARK_GRAFT_CPUS — on a
+        # wider host that stretches the correctness phase for no signal
+        # gain, so it gets CPUS too.
         # SPARK_GRAFT_VERIFY_WIDE keeps the ordered range partitions as
         # separate part files (DuckDB reads the glob back in name = sort
         # order) — the single-file coalesce tail was measured to DOMINATE
@@ -142,7 +148,7 @@ def main():
         v = run(["sbt", "-batch",
                  f"runMain graft.Verify {args.big_dir} {vout}{excl} "
                  + " ".join(args.queries)],
-                env=dict(os.environ, SPARK_GRAFT_CPUS="32",
+                env=dict(os.environ, SPARK_GRAFT_CPUS=CPUS,
                          SPARK_GRAFT_VERIFY_WIDE="1"))
         if v.returncode != 0:
             sys.exit(f"Verify failed at {args.big_dir}")
