@@ -73,6 +73,8 @@ object Limb128 {
   * the old pass's `count(lit(1))` over all rows + `posexplode` (which
   * emits nothing for null). Elements past `dim` are ignored (the
   * declared embedding schema is fixed-width [[graft.operators.Similarity.Dim]]).
+  * An element whose scaled value is past ±[[MomentPairsAgg.MaxScaled]]
+  * fails the aggregation with a message naming its dimension and value.
   */
 final class MomentPairsAgg(scale: Double, dim: Int)
     extends Aggregator[Array[Double], Array[Long], MomentPairsResult] {
@@ -90,6 +92,11 @@ final class MomentPairsAgg(scale: Double, dim: Int)
       var i = 0
       while (i < n) {
         sv(i) = math.floor(a(i) * scale + 0.5).toLong
+        require(sv(i) >= -MomentPairsAgg.MaxScaled &&
+          sv(i) <= MomentPairsAgg.MaxScaled,
+          s"MomentPairsAgg: dimension $i scales ${a(i)} to ${sv(i)}, past " +
+            s"±${MomentPairsAgg.MaxScaled}, so its pair products would " +
+            "overflow a Long")
         Limb128.addSigned(buf, 1 + 2 * i, 2 + 2 * i, sv(i))
         i += 1
       }
@@ -153,6 +160,15 @@ final class MomentPairsAgg(scale: Double, dim: Int)
 
   override def outputEncoder: Encoder[MomentPairsResult] =
     ExpressionEncoder[MomentPairsResult]()
+}
+
+object MomentPairsAgg {
+
+  /** Largest |sv| whose square fits a Long (⌊√(2⁶³ − 1)⌋): a pair
+    * product svᵢ·svⱼ of two in-bound elements cannot overflow, and
+    * [[MomentPairsAgg]] rejects an element past it instead of wrapping.
+    * At a scale of 10⁶ that is any |v| above about 3037. */
+  val MaxScaled = 3037000499L
 }
 
 /** [[MomentPairsAgg]]'s one-row output: the exact limb sums, positionally

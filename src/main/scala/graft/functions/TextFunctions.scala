@@ -22,17 +22,10 @@ object TextFunctions {
   /** Rolling polynomial hash over characters:
     * h_0 = 0; h_{i+1} = (31·h_i + ascii(c_i)) mod 1e9+7.
     * A document fingerprint usable for grouping/sharding; stays in a long.
-    * Codegen'd ([[graft.expressions.PolyHash]]); [[polyHashHof]] is the
-    * reference fold it must match bit-for-bit. */
+    * Codegen'd ([[graft.expressions.PolyHash]]); TextFunctionsSpec pins
+    * it bit-for-bit against the interpreted reference fold. */
   def polyHash(text: Column): Column =
     GraftSql.column(PolyHash(GraftSql.expression(text)))
-
-  /** Reference interpreted fold for [[polyHash]] (kept for the identity
-    * spec; do not use on hot paths — it evaluates a boxed lambda per
-    * character). */
-  def polyHashHof(text: Column): Column =
-    aggregate(split(text, ""), lit(0L),
-      (acc, c) => (acc * lit(31L) + ascii(c).cast("long")) % lit(1000000007L))
 
   /** Content-defined chunk lengths (stateless gear-style cut rule):
     * boundary after position j iff the trailing 8-char window's
@@ -45,14 +38,15 @@ object TextFunctions {
   /** Word n-gram shingles (default 3): the unit set for Jaccard/MinHash
     * near-dup detection. Distinct, so shingle multiplicity doesn't bias
     * similarity. Codegen'd ([[graft.expressions.WordShingles]]);
-    * [[shinglesHof]] is the reference HOF pipeline it must match. */
+    * TextFunctionsSpec pins it against the reference HOF pipeline. */
   def shingles(text: Column, n: Int = 3): Column =
     GraftSql.column(graft.expressions.WordShingles(
       GraftSql.expression(text), n))
 
   /** Word n-grams WITH multiplicity over a token-array column — the
-    * building block shared by [[shinglesHof]] (which distincts it) and
-    * repetition analysis (which must NOT: multiplicity is the signal). */
+    * building block of repetition analysis (which must NOT distinct it:
+    * multiplicity is the signal) and of TextFunctionsSpec's reference
+    * [[shingles]] pipeline (which does). */
   def ngramsFromTokens(t: Column, n: Int): Column = {
     val grams = transform(sequence(lit(1), size(t) - lit(n - 1)),
       i => concat_ws(" ",
@@ -61,23 +55,13 @@ object TextFunctions {
     when(size(t) < n, array().cast("array<string>")).otherwise(grams)
   }
 
-  /** Reference higher-order-function form of [[shingles]] (kept for the
-    * identity spec; evaluates an interpreted lambda per shingle — do not
-    * use on corpus-scale paths). */
-  def shinglesHof(text: Column, n: Int = 3): Column =
-    array_distinct(ngramsFromTokens(tokens(text), n))
-
-  /** One MinHash value: lexicographic min of seeded md5 digests of the
-    * shingle set. Hex-string min is engine-portable (no 64-bit unsigned
-    * arithmetic needed); seeding by prefix gives independent permutations. */
-  def minhash(shingleArr: Column, seed: Int): Column =
-    array_min(transform(shingleArr,
-      s => md5(concat(lit(s"s$seed:"), s))))
-
   /** The FULL MinHash signature (seeds 0..numHashes-1) in one pass over
     * the shingle array ([[graft.expressions.MinHashSig]]) — element b is
-    * value-identical to [[minhash]](sh, b), the interpreted reference
-    * the identity spec pins it against. A narrow projection: unlike the
+    * the lexicographic min of the seeded digests md5("s<b>:" ‖ shingle),
+    * value-identical to the interpreted per-seed reference TextFunctionsSpec
+    * pins it against. Hex-string min is engine-portable (no 64-bit
+    * unsigned arithmetic needed); seeding by prefix gives independent
+    * permutations. A narrow projection: unlike the
     * explode → `min(md5)` groupBy it replaces in the LSH pipeline, no
     * row per shingle ever crosses an exchange. Null for empty/all-null
     * arrays (matching the exploded doc vanishing from a groupBy). */

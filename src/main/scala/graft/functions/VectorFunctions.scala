@@ -13,8 +13,8 @@ import graft.expressions.{VecDot, VecL2Sq}
   * tolerance needed in compares.
   *
   * The hot path ([[dot]]) is the codegen'd [[VecDot]] catalyst expression;
-  * the interpreted higher-order-function fold ([[dotHof]]) is kept as the
-  * reference implementation the expression must match bit-for-bit.
+  * VectorFunctionsSpec pins it bit-for-bit against the interpreted
+  * higher-order-function reference fold.
   */
 object VectorFunctions {
 
@@ -36,19 +36,6 @@ object VectorFunctions {
   def l2sq(a: Column, b: Column): Column =
     GraftSql.column(VecL2Sq(
       GraftSql.expression(asDoubles(a)), GraftSql.expression(asDoubles(b))))
-
-  /** Reference fold for [[l2sq]]: same order, interpreted HOFs. */
-  def l2sqHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => (x.cast("double") - y.cast("double")) *
-        (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, x) => acc + x)
-
-  /** Reference fold for [[dot]]: same order, interpreted HOFs. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
 
   /** ‖a‖₂ */
   def norm(a: Column): Column = sqrt(dot(a, a))

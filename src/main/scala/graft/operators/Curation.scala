@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.ChFunctions.dsum
@@ -696,19 +696,27 @@ object Curation {
     * would materialize a corpus sort no consumer needs). */
   private[graft] def qualityGate2Core(docsDf: DataFrame): DataFrame = {
     val d = docsDf.filter(col("text").isNotNull && length(col("text")) >= 1)
-      .select(col("doc_id"), col("source"),
-        size(tokens(col("text"))).cast("long").as("n_tokens"),
-        array_max(cdcChunks(col("text"))).cast("long").as("max_chunk"),
-        size(expr("filter(regexp_extract_all(text, '[0-9]{13,19}', 0), " +
-          s"r -> ${TextAnalysis.luhnOk("r")})")).cast("long")
-          .as("n_luhn_valid"))
+      .select(Seq(col("doc_id"), col("source")) ++
+        gateSignals.map { case (name, c) => c.as(name) }: _*)
     d.join(broadcast(tokenThresholdsFrom(docsDf)), "source")
       .select(col("doc_id"), col("source"), col("n_tokens"),
         col("max_chunk"), col("n_luhn_valid"),
-        (col("n_tokens") >= col("threshold") &&
-          col("n_luhn_valid") === 0L &&
-          col("max_chunk") <= MaxChunkGate).as("keep"))
+        gateKeep(col("n_tokens") >= col("threshold")).as("keep"))
   }
+
+  /** x94's per-doc gate signals over `text`, by output name (x88's Luhn
+    * rule for the card count); x118's streaming build projects them too. */
+  private[graft] def gateSignals: Seq[(String, Column)] = Seq(
+    "n_tokens" -> size(tokens(col("text"))).cast("long"),
+    "max_chunk" -> array_max(cdcChunks(col("text"))).cast("long"),
+    "n_luhn_valid" -> size(expr(
+      "filter(regexp_extract_all(text, '[0-9]{13,19}', 0), " +
+        s"r -> ${TextAnalysis.luhnOk("r")})")).cast("long"))
+
+  /** x94's keep predicate over [[gateSignals]]: `tokensOk` (the caller's
+    * threshold test), no Luhn-valid run, largest chunk ≤ [[MaxChunkGate]]. */
+  private[graft] def gateKeep(tokensOk: Column): Column =
+    tokensOk && col("n_luhn_valid") === 0L && col("max_chunk") <= MaxChunkGate
 
   /** Sample size for [[weightedSample]]. */
   val SampleK = 100

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, GraftSql, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -37,10 +39,27 @@ object Frequency {
     * of the stream. */
   val MgCapacity = 1024
 
-  /** One partition's Misra–Gries pass: at most `k` counters; an unseen
-    * term with the summary full decrements every counter (dropping
-    * zeros) instead of evicting one. Classic guarantee: any term whose
-    * count in THIS partition exceeds n_p/(k+1) survives. Summing over
+  /** One Misra–Gries step over at most `k` counters: an unseen term with
+    * the summary full decrements every counter (dropping zeros) instead
+    * of evicting one. [[mgSurvivors]] (x65) folds each partition through
+    * it, [[graft.streaming.TopKStream.windowTopK]] (x85) each window. */
+  private[graft] def mgStep(counts: mutable.HashMap[String, Long], k: Int,
+      t: String): Unit =
+    counts.get(t) match {
+      case Some(c) => counts.update(t, c + 1)
+      case None if counts.size < k => counts.update(t, 1L)
+      case None =>
+        val dead = List.newBuilder[String]
+        counts.mapValuesInPlace { (w, c) =>
+          if (c == 1L) dead += w
+          c - 1L
+        }
+        dead.result().foreach(counts.remove)
+    }
+
+  /** One partition's Misra–Gries pass through [[mgStep]]. Classic
+    * guarantee: any term whose count in THIS partition exceeds
+    * n_p/(k+1) survives. Summing over
     * partitions: a term with global count > N/(k+1) must exceed the
     * local threshold somewhere (else Σ would contradict), so the union
     * of survivors is a superset of every global heavy hitter — the
@@ -50,20 +69,8 @@ object Frequency {
     * recount+filter equals the naive global groupBy. */
   private[graft] def mgSurvivors(k: Int)(
       it: Iterator[String]): Iterator[String] = {
-    val counts = new scala.collection.mutable.HashMap[String, Long]
-    it.foreach { t =>
-      counts.get(t) match {
-        case Some(c) => counts.update(t, c + 1)
-        case None if counts.size < k => counts.update(t, 1L)
-        case None =>
-          val dead = List.newBuilder[String]
-          counts.mapValuesInPlace { (w, c) =>
-            if (c == 1L) dead += w
-            c - 1L
-          }
-          dead.result().foreach(counts.remove)
-      }
-    }
+    val counts = new mutable.HashMap[String, Long]
+    it.foreach(mgStep(counts, k, _))
     counts.keysIterator
   }
 

@@ -4,8 +4,8 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, GraftSql, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-import graft.functions.TextFunctions.{cdcChunks, minhashSig, shingles, tokens}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.functions.TextFunctions.{minhashSig, shingles}
 import graft.util.OperatorCaches
 
 /** Per-content-hash dedup state for [[CorpusStream.firstSeenDedup]]. */
@@ -48,11 +48,12 @@ object CorpusStream {
     * rank, which the built-in cannot).
     *
     * Within a micro-batch, rows are ranked by doc_id (deterministic
-    * regardless of arrival interleaving). On a BATCH input the same code
-    * runs with empty initial state and no timeouts — the whole input is
-    * one group invocation, making the operator oracle-checkable as
-    * `x57_stream_dedup` (row_number over a hash partition in ANSI SQL)
-    * while the streaming spec drives the stateful/TTL path.
+    * regardless of arrival interleaving) by [[firstSeen]]. On a BATCH
+    * input the same code runs with empty initial state and a timeout
+    * that never fires — the whole input is one group invocation, making
+    * the operator oracle-checkable as `x57_stream_dedup` (row_number
+    * over a hash partition in ANSI SQL) while the streaming spec drives
+    * the stateful/TTL path.
     *
     * 100 TB note: state size is #distinct-hashes-in-TTL-window × ~50 B,
     * hash-partitioned across executors by the groupByKey exchange — the
@@ -60,9 +61,6 @@ object CorpusStream {
     * is what keeps an unbounded crawl from unbounded state. */
   def firstSeenDedup(spark: SparkSession, docs: DataFrame): Dataset[DedupVerdict] = {
     import spark.implicits._
-    // Batch arms no TTL: its plan has no watermark, so no timeout would
-    // fire, and all state dies with the single batch.
-    val streaming = docs.isStreaming
     docs
       .select(col("doc_id").cast("long"), col("ts").cast("timestamp"),
         md5(coalesce(col("text"), lit(""))).as("text_hash"))
@@ -71,29 +69,35 @@ object CorpusStream {
       .groupByKey(_._3)
       .flatMapGroupsWithState[DedupKeyState, DedupVerdict](
         OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
-        case (hash, rows, state) =>
-          if (state.hasTimedOut) {
-            // watermark passed lastEvent + TTL with no new arrivals:
-            // the hash forgets (bounded state)
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toSeq.sortBy(r => (r._1, r._2.getTime))
-            val prev = state.getOption
-            val first = prev.map(_.firstId).getOrElse(sorted.head._1)
-            var n = prev.map(_.n).getOrElse(0L)
-            val out = sorted.map { case (id, _, h) =>
-              n += 1
-              DedupVerdict(id, h, first, n, keep = n == 1L)
-            }
-            state.update(DedupKeyState(first, n))
-            // re-arm on every arrival: TTL counts from the LATEST sight
-            if (streaming)
-              state.setTimeoutTimestamp(sorted.map(_._2.getTime).max + DedupTtlMs)
-            out.iterator
+        (_, rows, state) =>
+          firstSeen(rows, state)(_._1, _._2) { case ((id, _, h), first, n) =>
+            DedupVerdict(id, h, first, n, keep = n == 1L)
           }
       }
   }
+
+  /** One content hash's first-seen step, run by [[firstSeenDedup]] (x57)
+    * and [[corpusBuildStream]]'s s1 (x118): `emit` gets each row with
+    * its first id and rank. The timeout re-arms on every arrival, so the
+    * TTL counts from the LATEST sight. A batch plan ignores it but still
+    * rejects a non-positive one: an event time before 1969-12-31T23:00Z
+    * fails in both modes. */
+  private def firstSeen[R, O](rows: Iterator[R],
+      state: GroupState[DedupKeyState])(id: R => Long, ts: R => Timestamp)(
+      emit: (R, Long, Long) => O): Iterator[O] =
+    if (state.hasTimedOut) {
+      state.remove()
+      Iterator.empty
+    } else {
+      val sorted = rows.toSeq.sortBy(r => (id(r), ts(r).getTime))
+      val prev = state.getOption
+      val first = prev.map(_.firstId).getOrElse(id(sorted.head))
+      var n = prev.map(_.n).getOrElse(0L)
+      val out = sorted.map { r => n += 1; emit(r, first, n) }
+      state.update(DedupKeyState(first, n))
+      state.setTimeoutTimestamp(sorted.map(ts(_).getTime).max + DedupTtlMs)
+      out.iterator
+    }
 
   /** x103/x104: NEAR-DUP AGAINST A STATIC BASE INDEX — the one delta-vs-
     * base near-dup: it dedups a new batch (x103's daily batch) or an
@@ -282,11 +286,11 @@ object CorpusStream {
     * with stage verdicts NULL when unreached (x117's never-silently-
     * dropped rule, held under streaming semantics):
     *
-    *   - s1 `s1_exact_kept`: x57's first-seen exact dedup state machine
-    *     (per-content-hash (firstId, n) state, event-time TTL) — run in
-    *     APPEND mode, because the chain below adds further stateful
-    *     operators and Update-mode `flatMapGroupsWithState` cannot be
-    *     followed by them; the document itself rides the iterator
+    *   - s1 `s1_exact_kept`: x57's first-seen exact dedup step
+    *     ([[firstSeen]]: per-content-hash (firstId, n) state, event-time
+    *     TTL) — run in APPEND mode, because the chain below adds further
+    *     stateful operators and Update-mode `flatMapGroupsWithState`
+    *     cannot be followed by them; the document itself rides the iterator
     *     output, never the state store.
     *   - s2 `s2_neardup_kept`: x104's near-dup verdict against the
     *     persisted capped base index (stream-static — no stream-stream
@@ -300,9 +304,10 @@ object CorpusStream {
     *     probe work for exact-dup arrivals, a vanishing fraction of a
     *     crawl.
     *   - s3 `s3_quality_kept`: x94's gate projection, STATELESS per
-    *     doc — signals (token count, max CDC chunk, Luhn-valid card
-    *     count) are a narrow map stage, and the per-source P25 token
-    *     calibration comes from the STANDING corpus as a broadcast
+    *     doc — x94's signals ([[graft.operators.Curation.gateSignals]])
+    *     are a narrow map stage, its verdict is
+    *     [[graft.operators.Curation.gateKeep]], and the per-source P25
+    *     token calibration comes from the STANDING corpus as a broadcast
     *     ([[graft.operators.Curation.tokenThresholdsFrom]] over the
     *     base — the at-ingest stance; x117's batch flavor calibrates on
     *     what enters the stage, which a stream cannot know). Docs with
@@ -319,9 +324,9 @@ object CorpusStream {
     * is fMGWS(Append) → stateless gate projection + threshold broadcast
     * → stream-static band join → dropDuplicatesWithinWatermark →
     * windowed per-doc aggregate, all Append-legal. On a BATCH input
-    * the same composition runs with timeouts un-armed and the watermark
-    * eliminated — [[corpusBuildBatch]] is the oracle-checkable carrier
-    * (`x118_corpus_build_stream`, sharing x103/x104's near-dup oracle
+    * the same composition runs with the timeouts never firing and the
+    * watermark eliminated — [[corpusBuildBatch]] is the oracle-checkable
+    * carrier (`x118_corpus_build_stream`, sharing x103/x104's near-dup oracle
     * CTEs and x94's gate CTEs).
     *
     * 100 TB note: per-micro-batch cost is the x104 probe cost plus a
@@ -335,30 +340,24 @@ object CorpusStream {
     * by the earlier topology (five output columns) cannot rebind the new
     * output schema, so such a restart needs a fresh checkpoint directory.
     * [[deltaDedupEnvelopes]] (`Service --delta`) runs no
-    * `flatMapGroupsWithState`, so this does not apply to it. */
+    * `flatMapGroupsWithState`, so this does not apply to it.
+    *
+    * Starting the STREAMING form needs
+    * `spark.sql.streaming.statefulOperator.checkCorrectness.enabled` =
+    * false; the caller sets it, since a builder must not change its
+    * caller's session, and may restore it after `start()` (a started
+    * query keeps the conf it cloned). Spark's UnsupportedOperationChecker
+    * rejects ANY stateful operator downstream of `flatMapGroupsWithState`
+    * ("possible correctness issue due to global watermark"): it cannot
+    * see inside the user function, so it assumes rows older than the
+    * watermark may come out. s1 provably emits none: every row leaves in
+    * the micro-batch it arrives in, its event time UNMODIFIED, so its
+    * output is exactly as late as its input. Batch plans are not
+    * checked. */
   def corpusBuildStream(spark: SparkSession, streamDocs: DataFrame,
       baseDocs: DataFrame): DataFrame = {
     import spark.implicits._
     import graft.operators.Curation
-    // batch arms no TTL (see firstSeenDedup)
-    val streaming = streamDocs.isStreaming
-    // Spark's UnsupportedOperationChecker rejects ANY stateful operator
-    // downstream of flatMapGroupsWithState ("possible correctness issue
-    // due to global watermark"): it cannot see inside the user function,
-    // so it conservatively assumes fMGWS may emit rows older than the
-    // watermark, which downstream state would silently discard. This
-    // operator's state function provably cannot: every input row is
-    // emitted in the SAME micro-batch it arrives, with its event time
-    // UNMODIFIED (the state machine only annotates, never buffers or
-    // re-times), so its output is exactly as late as its input — the
-    // situation every single-stage watermarked query already handles.
-    // Spark's own documented escape hatch for this case is the
-    // checkCorrectness flag; the restart spec exercises the chain's
-    // cross-batch behavior end to end.
-    if (streaming)
-      spark.conf.set(
-        "spark.sql.streaming.statefulOperator.checkCorrectness.enabled",
-        "false")
     // static per-source calibration from the standing corpus, persisted
     // like x104's base index (re-built per micro-batch otherwise)
     val thr = OperatorCaches.persist(
@@ -380,17 +379,11 @@ object CorpusStream {
     // verdict (false AND NULL = false).
     val hasText = col("text").isNotNull && length(col("text")) >= 1
     val s1 = streamDocs
-      .select(col("doc_id").cast("long"), col("ts").cast("timestamp"),
+      .select(Seq(col("doc_id").cast("long"), col("ts").cast("timestamp"),
         col("source"), col("text"),
-        md5(coalesce(col("text"), lit(""))).as("text_hash"),
-        when(hasText, size(tokens(col("text"))).cast("long"))
-          .as("n_tokens"),
-        when(hasText, array_max(cdcChunks(col("text"))).cast("long"))
-          .as("max_chunk"),
-        when(hasText, size(expr(
-          "filter(regexp_extract_all(text, '[0-9]{13,19}', 0), " +
-            s"r -> ${graft.operators.TextAnalysis.luhnOk("r")})"))
-          .cast("long")).as("n_luhn_valid"))
+        md5(coalesce(col("text"), lit(""))).as("text_hash")) ++
+        Curation.gateSignals.map { case (name, c) =>
+          when(hasText, c).as(name) }: _*)
       .withWatermark("ts", WatermarkDelay)
       .as[(Long, Timestamp, String, String, String,
         Option[Long], Option[Long], Option[Long])]
@@ -399,34 +392,21 @@ object CorpusStream {
         (Long, Timestamp, String, String,
           Option[Long], Option[Long], Option[Long], Boolean)](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case (_, rows, state) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = rows.toSeq.sortBy(r => (r._1, r._2.getTime))
-            val prev = state.getOption
-            val first = prev.map(_.firstId).getOrElse(sorted.head._1)
-            var n = prev.map(_.n).getOrElse(0L)
-            val out = sorted.map { case (id, t, src, txt, _, nt, mc, nl) =>
-              n += 1
+        (_, rows, state) =>
+          firstSeen(rows, state)(_._1, _._2) {
+            case ((id, t, src, txt, _, nt, mc, nl), _, n) =>
               (id, t, src, txt, nt, mc, nl, n == 1L)
-            }
-            state.update(DedupKeyState(first, n))
-            if (streaming)
-              state.setTimeoutTimestamp(sorted.map(_._2.getTime).max + DedupTtlMs)
-            out.iterator
           }
       }
       .toDF("doc_id", "ts", "source", "text",
         "n_tokens", "max_chunk", "n_luhn_valid", "s1_exact_kept")
     // the gate VERDICT stays a stateless post-state projection (the
-    // few-row threshold broadcast joins on `source`)
+    // few-row threshold broadcast joins on `source`, left outer, so a
+    // source absent from the calibration tests NULL and fails closed)
     val sig = s1
       .join(broadcast(thr), Seq("source"), "left_outer")
-      .withColumn("gate_keep",
-        hasText &&
-          coalesce(col("n_tokens") >= col("threshold"), lit(false)) &&
-          col("n_luhn_valid") === 0L &&
-          col("max_chunk") <= lit(Curation.MaxChunkGate))
+      .withColumn("gate_keep", Curation.gateKeep(
+        hasText && coalesce(col("n_tokens") >= col("threshold"), lit(false))))
     val nd = deltaDedupStream(spark,
       sig.select("doc_id", "ts", "text", "s1_exact_kept", "gate_keep"),
       baseDocs, carry = Seq("s1_exact_kept", "gate_keep"))

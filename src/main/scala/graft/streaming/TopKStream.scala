@@ -2,9 +2,12 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import graft.operators.Frequency
 
 /** One emitted per-window ranking row. Schema matches the exact
   * per-window top-k SQL so the same DuckDB oracle gates the batch
@@ -14,14 +17,17 @@ case class WindowTopK(window_start: Timestamp, rank: Long,
 
 /** Per-window Misra–Gries summary for [[TopKStream.windowTopK]]:
   * parallel key/count arrays (≤ [[TopKStream.MgK]] entries — a few KB
-  * per OPEN window, the whole point of sketched streaming top-k). */
+  * per OPEN window, the whole point of sketched streaming top-k). Entry
+  * order carries no meaning: windows are ranked by (count DESC, type
+  * ASC). */
 case class MgSummary(types: Array[String], counts: Array[Long])
 
 /** Streaming top-k operators over the `events` changelog. */
 object TopKStream {
 
-  /** Misra–Gries summary size. Counters are EXACT (not lower bounds)
-    * whenever a window's distinct key cardinality is ≤ [[MgK]] — the
+  /** Misra–Gries summary size of each window's fold through x65's step,
+    * [[graft.operators.Frequency.mgStep]]. Counters are EXACT (not lower
+    * bounds) whenever a window's distinct key cardinality is ≤ [[MgK]] — the
     * x65 argument: no decrement ever fires, so the summary degenerates
     * to a plain exact count map. The events corpus has a handful of
     * event types, so the oracle-gated batch flavor is exact by
@@ -98,9 +104,12 @@ object TopKStream {
             // Fold rows one at a time into the bounded summary — MG
             // never buffers the group, so a billion-event window costs
             // the same few KB as an empty one.
-            var s = state.getOption.getOrElse(
-              MgSummary(Array.empty, Array.empty))
-            rows.foreach { case (_, _, t) => s = mgAdd(s, t) }
+            val counts = mutable.HashMap.from(state.getOption.iterator
+              .flatMap(s => s.types.iterator.zip(s.counts)))
+            rows.foreach { case (_, _, t) =>
+              Frequency.mgStep(counts, MgK, t) }
+            val (types, ns) = counts.toArray.unzip
+            val s = MgSummary(types, ns)
             if (streaming) {
               state.update(s)
               // close when the watermark passes the window end
@@ -113,30 +122,6 @@ object TopKStream {
             }
           }
       }
-  }
-
-  /** One MG insertion: increment a present key, append below capacity,
-    * otherwise decrement every counter (dropping zeros) — the classic
-    * k-counter sketch step. Arrays copy on structural change only;
-    * the common increment path mutates in place. Capacity is a
-    * parameter so `GraftProperties` can drive the decrement path with
-    * small streams (production path always passes [[MgK]]). */
-  private[graft] def mgAdd(s: MgSummary, t: String,
-      cap: Int = MgK): MgSummary = {
-    val i = s.types.indexOf(t)
-    if (i >= 0) { s.counts(i) += 1L; s }
-    else if (s.types.length < cap)
-      MgSummary(s.types :+ t, s.counts :+ 1L)
-    else {
-      val keep = Array.newBuilder[Int]
-      var j = 0
-      while (j < s.counts.length) {
-        if (s.counts(j) > 1L) keep += j
-        j += 1
-      }
-      val ks = keep.result()
-      MgSummary(ks.map(s.types), ks.map(k => s.counts(k) - 1L))
-    }
   }
 
   private def emitTopK(wstart: Long, s: MgSummary): Iterator[WindowTopK] = {

@@ -289,7 +289,8 @@ object GraftProperties extends Properties("graft") {
     }
 
   /** The x85 exactness claim (TopKStream.MgK doc): folding any stream
-    * through the per-window summary is EXACT (plain count map) whenever
+    * through the per-window summary (Frequency.mgStep at capacity `cap`,
+    * the step x85 and x65 share) is EXACT (plain count map) whenever
     * distinct keys ≤ capacity — no decrement ever fires — and in
     * general every surviving counter obeys the Misra–Gries band
     * true − N/(cap+1) ≤ counter ≤ true. Order-insensitivity of the
@@ -297,16 +298,16 @@ object GraftProperties extends Properties("graft") {
   property("x85 window summary: exact below capacity (any order), " +
       "MG undercount band above it") =
     forAll(termStream, Gen.oneOf(2, 3, 7, 64), Gen.long) { (terms, cap, seed) =>
-      import graft.streaming.{MgSummary, TopKStream}
-      def fold(ts: Seq[String]) =
-        ts.foldLeft(MgSummary(Array.empty, Array.empty))(
-          (s, t) => TopKStream.mgAdd(s, t, cap))
+      def fold(ts: Seq[String]): Map[String, Long] = {
+        val s = new scala.collection.mutable.HashMap[String, Long]
+        ts.foreach(graft.operators.Frequency.mgStep(s, cap, _))
+        s.toMap
+      }
       val counts = terms.groupBy(identity).map { case (t, g) => t -> g.size.toLong }
-      val s = fold(terms)
-      val got = s.types.zip(s.counts).toMap
+      val got = fold(terms)
       if (counts.size <= cap) {
         val shuffled = fold(new scala.util.Random(seed).shuffle(terms))
-        got == counts && shuffled.types.zip(shuffled.counts).toMap == counts
+        got == counts && shuffled == counts
       } else {
         val n = terms.size.toLong
         got.forall { case (t, c) =>

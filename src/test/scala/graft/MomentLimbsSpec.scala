@@ -103,6 +103,26 @@ class MomentLimbsSpec extends SparkSpec {
     }
   }
 
+  test("MomentPairsAgg: exact at the per-element bound, fails one step past it") {
+    val b = MomentPairsAgg.MaxScaled
+    val agg = new MomentPairsAgg(1.0, 2)
+    // two rows at the bound: each pair product is ±b², their sum 2·b²
+    // is past 2⁶³, so only the limbs hold it
+    val row = Array(b.toDouble, -b.toDouble)
+    val m = agg.finish(agg.reduce(agg.reduce(agg.zero, row), row))
+    val want = Map((0, 0) -> 2, (0, 1) -> -2, (1, 1) -> 2)
+      .map { case (ij, k) => ij -> BigInt(b) * b * k }
+    (0 until 3).foreach { k =>
+      assert(Limb128.toBigInt(m.pairHi(k), m.pairLo(k)) ===
+        want((m.pi(k), m.pj(k))), s"pair (${m.pi(k)}, ${m.pj(k)})")
+    }
+    assert(Limb128.toBigInt(m.sumHi(0), m.sumLo(0)) === BigInt(b) * 2)
+    val e = intercept[IllegalArgumentException](
+      agg.reduce(agg.zero, Array(0.0, (b + 1).toDouble)))
+    assert(e.getMessage.contains(s"dimension 1 scales ${(b + 1).toDouble} " +
+      s"to ${b + 1}, past ±$b"), e.getMessage)
+  }
+
   test("MomentDiagAgg == the decimal(25,0) sum/sumsq formulation") {
     val emb = fixture()
     val (_, refDims, refSqs, refN) = decimalReference(emb)

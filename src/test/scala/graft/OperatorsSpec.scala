@@ -2266,5 +2266,38 @@ class OperatorsSpec extends SparkSpec {
     assert(thr === Map("web" -> 4L, "books" -> 3L))
     graft.util.OperatorCaches.release(spark)
   }
+
+  test("x118's first stage is x57: s1_exact_kept == firstSeenDedup's keep " +
+      "for every doc (repeats, out-of-order ids, null and empty text)") {
+    import spark.implicits._
+    val base = Seq((0L, "web", "w1 w2 w3 w4 w5 w6 w7 w8"))
+      .toDF("doc_id", "source", "text")
+    // ids arrive out of order; 21 repeats 30's text with a SMALLER id
+    // (so 21 is first-seen), 33 repeats it again, and null and "" share
+    // x57's content hash md5('')
+    val docs = Seq[(Long, String)](
+      (30L, "the same text twice over"),
+      (12L, "a unique document here"),
+      (33L, "the same text twice over"),
+      (21L, "the same text twice over"),
+      (40L, null),
+      (15L, ""),
+      (27L, null),
+      (18L, "a unique document here"),
+      (50L, "another one"))
+      .toDF("doc_id", "text")
+      .select(col("doc_id"), timestamp_seconds(col("doc_id")).as("ts"),
+        lit("web").as("source"), col("text"))
+    val x57 = graft.streaming.CorpusStream.firstSeenDedup(spark, docs)
+      .collect().map(v => v.doc_id -> v.keep).toMap
+    val x118 = graft.streaming.CorpusStream
+      .corpusBuildStream(spark, docs, base)
+      .select("doc_id", "s1_exact_kept").collect()
+      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    assert(x57.size === 9)
+    assert(x118 === x57)
+    assert(x57.filter(_._2).keySet === Set(12L, 15L, 21L, 50L))
+    graft.util.OperatorCaches.release(spark)
+  }
 }
 

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.ProductQuantization
 import graft.operators.ProductQuantization.{CodebookSize, NumSubspaces, SubDim}
-import graft.functions.VectorFunctions.{dotHof, l2sq, l2sqHof}
+import graft.functions.VectorFunctions.l2sq
+import graft.HofReference.{dotHof, l2sqHof}
 import graft.util.OperatorCaches
 
 /** Product quantization: encoder invariants, the codegen'd L2² expression

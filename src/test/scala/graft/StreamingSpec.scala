@@ -706,10 +706,17 @@ class StreamingSpec extends SparkSpec {
     val got = scala.collection.mutable.Map
       .empty[Long, (Boolean, Option[Boolean], Option[Boolean], Boolean,
         Option[Long])]
+    // corpusBuildStream's scaladoc: starting it needs Spark's
+    // stateful-correctness check off; set it around each start() only,
+    // so the shared session keeps its value for every later case
+    val CheckCorrectness =
+      "spark.sql.streaming.statefulOperator.checkCorrectness.enabled"
+    val before = spark.conf.getOption(CheckCorrectness)
     def run(): Unit = {
-      val q = graft.streaming.CorpusStream
+      val verdicts = graft.streaming.CorpusStream
         .corpusBuildStream(spark, src.toDF(), base)
-        .writeStream
+      spark.conf.set(CheckCorrectness, "false")
+      val q = try verdicts.writeStream
         .outputMode("append")
         .option("checkpointLocation", cp)
         .trigger(Trigger.AvailableNow())
@@ -725,6 +732,10 @@ class StreamingSpec extends SparkSpec {
           }; ()
         }
         .start()
+      finally before match {
+        case Some(v) => spark.conf.set(CheckCorrectness, v)
+        case None => spark.conf.unset(CheckCorrectness)
+      }
       q.awaitTermination()
     }
     val t0 = Timestamp.valueOf("2024-01-15 10:00:00").getTime
@@ -758,6 +769,8 @@ class StreamingSpec extends SparkSpec {
     assert(byId(12L) === ((false, None, None, false, None)),
       s"doc 12 must be first-seen-dropped ACROSS the restart: " +
         s"${byId.get(12L)}")
+    assert(spark.conf.getOption(CheckCorrectness) === before,
+      "the case must leave the session's correctness check as it found it")
   }
 
   test("deltaDedup end-to-end through the DSv2 replay source: verdicts " +

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
+import graft.HofReference.{minhash, polyHashHof, shinglesHof}
 
 /** Text primitives against model implementations computed in plain Scala. */
 class TextFunctionsSpec extends SparkSpec {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
+import graft.HofReference.dotHof
 
 class VectorFunctionsSpec extends SparkSpec {
 

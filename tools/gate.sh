@@ -69,6 +69,18 @@ if [ -n "$bool_switches" ]; then
   echo "$bool_switches"
   exit 1
 fi
+# An operator builder must not change its caller's session: a conf it
+# sets outlives the query it builds and changes every later query of
+# that session (x118 once turned off Spark's stateful-correctness check
+# this way). Fail on a session conf write in src/main/scala/graft/streaming
+# or src/main/scala/graft/operators.
+conf_writes=$(grep -rnF '.conf.set(' \
+  src/main/scala/graft/streaming src/main/scala/graft/operators || true)
+if [ -n "$conf_writes" ]; then
+  echo "gate: session conf set from an operator builder:"
+  echo "$conf_writes"
+  exit 1
+fi
 # Compile (main + test), then the analysis-only smoke: resolve every
 # query plan + entry() at sf0.001 (graft.Analyze -- df.schema only, no
 # execution, ~30 s warm). Round 7's events/timestamp_ntz environment
