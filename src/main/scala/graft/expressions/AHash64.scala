@@ -51,11 +51,25 @@ case class AHash64(child: Expression) extends UnaryExpression {
 
   override def prettyName: String = "ahash64"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val bytes = input match {
-      case b: Array[Byte] => b
-      case s => s.asInstanceOf[UTF8String].getBytes
-    }
+  override protected def nullSafeEval(input: Any): Any = input match {
+    case b: Array[Byte] => AHash64.compute(b)
+    case s => AHash64.compute(s.asInstanceOf[UTF8String].getBytes)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      if (child.dataType == BinaryType)
+        s"${ev.value} = graft.expressions.AHash64.compute($c);"
+      else s"${ev.value} = graft.expressions.AHash64.compute($c.getBytes());")
+
+  override protected def withNewChildInternal(newChild: Expression): AHash64 =
+    copy(child = newChild)
+}
+
+object AHash64 {
+
+  /** Per-row kernel over unsigned bytes (shared by eval and codegen). */
+  def compute(bytes: Array[Byte]): Long = {
     val n = bytes.length
     if (n == 0) return 0L
     val sums = new Array[Long](64)
@@ -73,62 +87,18 @@ case class AHash64(child: Expression) extends UnaryExpression {
     var h = 0L
     var k = 0
     while (k < 64) {
-      if (AHash64.gt128(sums(k), n.toLong, total, counts(k))) h |= (1L << k)
+      if (gt128(sums(k), n.toLong, total, counts(k))) h |= (1L << k)
       k += 1
     }
     h
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val bts = ctx.freshName("bts")
-      val n = ctx.freshName("n")
-      val sums = ctx.freshName("sums")
-      val counts = ctx.freshName("counts")
-      val total = ctx.freshName("total")
-      val i = ctx.freshName("i")
-      val v = ctx.freshName("v")
-      val b = ctx.freshName("b")
-      val h = ctx.freshName("h")
-      val k = ctx.freshName("k")
-      val get =
-        if (child.dataType == BinaryType) s"byte[] $bts = $c;"
-        else s"byte[] $bts = $c.getBytes();"
-      s"""
-         |$get
-         |int $n = $bts.length;
-         |long $h = 0L;
-         |if ($n > 0) {
-         |  long[] $sums = new long[64];
-         |  long[] $counts = new long[64];
-         |  long $total = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    long $v = (long) ($bts[$i] & 0xff);
-         |    int $b = (int) (((long) $i * 64L) / $n);
-         |    $sums[$b] += $v;
-         |    $counts[$b] += 1L;
-         |    $total += $v;
-         |  }
-         |  for (int $k = 0; $k < 64; $k++) {
-         |    if (graft.expressions.AHash64.gt128(
-         |        $sums[$k], (long) $n, $total, $counts[$k])) $h |= (1L << $k);
-         |  }
-         |}
-         |${ev.value} = $h;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): AHash64 =
-    copy(child = newChild)
-}
-
-object AHash64 {
   /** 128-bit-exact `a·b > c·d` for NON-NEGATIVE longs (byte sums and
     * position counts are always ≥ 0 here). `Math.multiplyHigh` yields
     * the signed high word, which for non-negative operands equals the
     * unsigned high word, so (high, unsigned-low) lexicographic compare
     * is the exact 128-bit product compare — no BigInt allocation in the
-    * per-row hot loop, callable from generated code. */
+    * per-row hot loop. */
   def gt128(a: Long, b: Long, c: Long, d: Long): Boolean = {
     val hi1 = Math.multiplyHigh(a, b); val lo1 = a * b
     val hi2 = Math.multiplyHigh(c, d); val lo2 = c * d

@@ -3,7 +3,7 @@ package graft.expressions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -33,9 +33,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * One pass, O(W) work per position (the window hash is recomputed
   * from its 8 values — modular removal would need an inverse; at W = 8
-  * the direct form is branch-free and stays inside whole-stage codegen).
-  * The interpreted twin [[nullSafeEval]] and the driver-side models in
-  * `GraftProperties` pin bit-identity on arbitrary inputs.
+  * the direct form is branch-free). Eval and generated code both call
+  * the per-row kernel [[CdcChunks.compute]]; `GraftProperties` pins it
+  * against a test-side window-hash model on arbitrary inputs.
   */
 case class CdcChunks(child: Expression) extends UnaryExpression {
 
@@ -50,55 +50,15 @@ case class CdcChunks(child: Expression) extends UnaryExpression {
   override def prettyName: String = "cdc_chunks"
 
   override protected def nullSafeEval(input: Any): Any = input match {
-    case b: Array[Byte] => new GenericArrayData(CdcChunks.model(b))
-    case s => new GenericArrayData(
-      CdcChunks.model(s.asInstanceOf[UTF8String].toString))
+    case b: Array[Byte] => CdcChunks.compute(b)
+    case s => CdcChunks.compute(s.asInstanceOf[UTF8String].toString)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val n = ctx.freshName("n")
-      val cuts = ctx.freshName("cuts")
-      val m = ctx.freshName("m")
-      val j = ctx.freshName("j")
-      val k = ctx.freshName("k")
-      val h = ctx.freshName("h")
-      val last = ctx.freshName("last")
-      val out = ctx.freshName("out")
-      val w = CdcChunks.Window
-      val mask = (1L << CdcChunks.MaskBits) - 1L
-      val (decl, valueAt) =
-        if (child.dataType == BinaryType) {
-          val b = ctx.freshName("b")
-          (s"byte[] $b = $c;\nint $n = $b.length;",
-            (idx: String) => s"(long) ($b[$idx] & 0xff)")
-        } else {
-          val s = ctx.freshName("s")
-          (s"java.lang.String $s = $c.toString();\nint $n = $s.length();",
-            (idx: String) => s"(long) $s.charAt($idx)")
-        }
-      s"""
-         |$decl
-         |int[] $cuts = new int[$n + 1];
-         |int $m = 0;
-         |for (int $j = $w; $j < $n; $j++) {
-         |  long $h = 0L;
-         |  for (int $k = $j - $w; $k < $j; $k++) {
-         |    $h = ($h * 31L + ${valueAt(k)}) % 1000000007L;
-         |  }
-         |  if (($h & ${mask}L) == 0L) { $cuts[$m++] = $j; }
-         |}
-         |int[] $out = new int[$n == 0 ? 0 : $m + 1];
-         |int $last = 0;
-         |for (int $k = 0; $k < $m; $k++) {
-         |  $out[$k] = $cuts[$k] - $last;
-         |  $last = $cuts[$k];
-         |}
-         |if ($n > 0) { $out[$m] = $n - $last; }
-         |${ev.value} =
-         |  new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, c =>
+      if (child.dataType == BinaryType)
+        s"${ev.value} = graft.expressions.CdcChunks.compute($c);"
+      else s"${ev.value} = graft.expressions.CdcChunks.compute($c.toString());")
 
   override protected def withNewChildInternal(newChild: Expression): CdcChunks =
     copy(child = newChild)
@@ -111,33 +71,49 @@ object CdcChunks {
     * expected chunk length 2^MaskBits. */
   val MaskBits = 5
 
-  /** Driver-side reference model over a value stream — the
-    * spec/property ground truth shared by both input types. */
-  private def modelValues(n: Int, valueAt: Int => Long): Array[Int] = {
-    if (n == 0) return Array.empty
-    val cuts = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val mask = (1L << MaskBits) - 1L
+  private val Mask = (1L << MaskBits) - 1L
+
+  /** Per-row kernel over a string's UTF-16 code units (shared by eval
+    * and codegen). */
+  def compute(s: String): ArrayData = {
+    val n = s.length
+    val cuts = new Array[Int](n + 1)
+    var m = 0
     var j = Window
     while (j < n) {
       var h = 0L
       var k = j - Window
-      while (k < j) { h = (h * 31L + valueAt(k)) % 1000000007L; k += 1 }
-      if ((h & mask) == 0L) cuts += j
+      while (k < j) { h = (h * 31L + s.charAt(k).toLong) % 1000000007L; k += 1 }
+      if ((h & Mask) == 0L) { cuts(m) = j; m += 1 }
       j += 1
     }
-    val out = new Array[Int](cuts.length + 1)
-    var last = 0
-    var i = 0
-    while (i < cuts.length) { out(i) = cuts(i) - last; last = cuts(i); i += 1 }
-    out(cuts.length) = n - last
-    out
+    lengths(n, cuts, m)
   }
 
-  /** String-input model (UTF-16 code-unit values). */
-  def model(s: String): Array[Int] =
-    modelValues(s.length, i => s.charAt(i).toLong)
+  /** Per-row kernel over unsigned bytes (shared by eval and codegen). */
+  def compute(b: Array[Byte]): ArrayData = {
+    val n = b.length
+    val cuts = new Array[Int](n + 1)
+    var m = 0
+    var j = Window
+    while (j < n) {
+      var h = 0L
+      var k = j - Window
+      while (k < j) { h = (h * 31L + (b(k) & 0xff).toLong) % 1000000007L; k += 1 }
+      if ((h & Mask) == 0L) { cuts(m) = j; m += 1 }
+      j += 1
+    }
+    lengths(n, cuts, m)
+  }
 
-  /** Binary-input model (unsigned byte values). */
-  def model(b: Array[Byte]): Array[Int] =
-    modelValues(b.length, i => (b(i) & 0xff).toLong)
+  /** Lengths of the chunks between the first `m` cut positions; the
+    * last chunk runs to `n`, and empty input has no chunk. */
+  private def lengths(n: Int, cuts: Array[Int], m: Int): ArrayData = {
+    val out = new Array[Int](if (n == 0) 0 else m + 1)
+    var last = 0
+    var k = 0
+    while (k < m) { out(k) = cuts(k) - last; last = cuts(k); k += 1 }
+    if (n > 0) out(m) = n - last
+    new GenericArrayData(out)
+  }
 }

@@ -39,52 +39,42 @@ case class PolyHash(child: Expression) extends UnaryExpression {
   override def prettyName: String = "poly_hash"
 
   override protected def nullSafeEval(input: Any): Any = input match {
-    case b: Array[Byte] =>
-      var h = 0L
-      var i = 0
-      while (i < b.length) {
-        h = (h * 31L + (b(i) & 0xff).toLong) % 1000000007L
-        i += 1
-      }
-      h
-    case s =>
-      val str = s.asInstanceOf[UTF8String].toString
-      var h = 0L
-      var i = 0
-      while (i < str.length) {
-        h = (h * 31L + str.charAt(i).toLong) % 1000000007L
-        i += 1
-      }
-      h
+    case b: Array[Byte] => PolyHash.compute(b)
+    case s => PolyHash.compute(s.asInstanceOf[UTF8String].toString)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val h = ctx.freshName("h")
-      val i = ctx.freshName("i")
-      if (child.dataType == BinaryType) {
-        val b = ctx.freshName("b")
-        s"""
-           |byte[] $b = $c;
-           |long $h = 0L;
-           |for (int $i = 0; $i < $b.length; $i++) {
-           |  $h = ($h * 31L + (long) ($b[$i] & 0xff)) % 1000000007L;
-           |}
-           |${ev.value} = $h;
-         """.stripMargin
-      } else {
-        val s = ctx.freshName("s")
-        s"""
-           |java.lang.String $s = $c.toString();
-           |long $h = 0L;
-           |for (int $i = 0; $i < $s.length(); $i++) {
-           |  $h = ($h * 31L + (long) $s.charAt($i)) % 1000000007L;
-           |}
-           |${ev.value} = $h;
-         """.stripMargin
-      }
-    })
+    nullSafeCodeGen(ctx, ev, c =>
+      if (child.dataType == BinaryType)
+        s"${ev.value} = graft.expressions.PolyHash.compute($c);"
+      else s"${ev.value} = graft.expressions.PolyHash.compute($c.toString());")
 
   override protected def withNewChildInternal(newChild: Expression): PolyHash =
     copy(child = newChild)
+}
+
+object PolyHash {
+
+  /** Per-row kernel over a string's UTF-16 code units (shared by eval
+    * and codegen). */
+  def compute(s: String): Long = {
+    var h = 0L
+    var i = 0
+    while (i < s.length) {
+      h = (h * 31L + s.charAt(i).toLong) % 1000000007L
+      i += 1
+    }
+    h
+  }
+
+  /** Per-row kernel over unsigned bytes (shared by eval and codegen). */
+  def compute(b: Array[Byte]): Long = {
+    var h = 0L
+    var i = 0
+    while (i < b.length) {
+      h = (h * 31L + (b(i) & 0xff).toLong) % 1000000007L
+      i += 1
+    }
+    h
+  }
 }

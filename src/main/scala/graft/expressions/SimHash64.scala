@@ -46,14 +46,29 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 
   override def prettyName: String = "simhash64"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString
+  override protected def nullSafeEval(input: Any): Any =
+    SimHash64.compute(input.asInstanceOf[UTF8String].toString)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.expressions.SimHash64.compute($c.toString());")
+
+  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
+    copy(child = newChild)
+}
+
+object SimHash64 {
+
+  /** Per-row kernel (shared by eval and codegen). */
+  def compute(s: String): Long = {
     val cnt = new Array[Int](64)
-    val h = Array(48L, 49L, 50L, 51L)
+    val h = new Array[Long](4)
+    var j = 0
+    while (j < 4) { h(j) = 48L + j; j += 1 }
     var i = 0
     while (i <= s.length) {
       if (i == s.length || s.charAt(i) == ' ') {
-        var j = 0
+        j = 0
         while (j < 4) {
           var k = 0
           while (k < 16) {
@@ -64,7 +79,7 @@ case class SimHash64(child: Expression) extends UnaryExpression {
           j += 1
         }
       } else {
-        var j = 0
+        j = 0
         while (j < 4) {
           h(j) = (h(j) * 31L + s.charAt(i).toLong) % 1000000007L
           j += 1
@@ -80,43 +95,4 @@ case class SimHash64(child: Expression) extends UnaryExpression {
     }
     sig
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val s = ctx.freshName("s")
-      val cnt = ctx.freshName("cnt")
-      val h = ctx.freshName("h")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val k = ctx.freshName("k")
-      val b = ctx.freshName("b")
-      val sig = ctx.freshName("sig")
-      s"""
-         |java.lang.String $s = $c.toString();
-         |int[] $cnt = new int[64];
-         |long[] $h = {48L, 49L, 50L, 51L};
-         |for (int $i = 0; $i <= $s.length(); $i++) {
-         |  if ($i == $s.length() || $s.charAt($i) == ' ') {
-         |    for (int $j = 0; $j < 4; $j++) {
-         |      for (int $k = 0; $k < 16; $k++) {
-         |        $cnt[$j * 16 + $k] += (int) ((($h[$j] >>> $k) & 1L) * 2L - 1L);
-         |      }
-         |      $h[$j] = 48L + $j;
-         |    }
-         |  } else {
-         |    for (int $j = 0; $j < 4; $j++) {
-         |      $h[$j] = ($h[$j] * 31L + (long) $s.charAt($i)) % 1000000007L;
-         |    }
-         |  }
-         |}
-         |long $sig = 0L;
-         |for (int $b = 0; $b < 64; $b++) {
-         |  if ($cnt[$b] > 0) $sig |= (1L << $b);
-         |}
-         |${ev.value} = $sig;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
 }

@@ -19,8 +19,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * Determinism contract: the loop accumulates left-to-right in doubles —
   * bit-identical to the sequential `aggregate(zip_with(a, b, _*_), 0.0, _+_)`
   * fold it replaces, and to the DuckDB oracle's `list_reduce` fold.
-  * Lengths may differ (zips to the shorter, like `zip_with` on the
-  * non-null prefix); vectors here are fixed-dim so it never triggers.
+  * Arrays of different lengths, or with a null element, give null, as
+  * both do: `zip_with` pads the shorter array with nulls, the oracle
+  * reads `b[i]` past its end as NULL, and a null term nulls the fold.
   */
 case class VecDot(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -38,37 +39,42 @@ case class VecDot(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
 
+  override def nullable: Boolean = true
+
   override def prettyName: String = "vec_dot"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      acc += x.getDouble(i) * y.getDouble(i)
-      i += 1
-    }
-    acc
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    VecDot.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
+      val r = ctx.freshName("r")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |${ev.value} = $acc;
+         |java.lang.Double $r = graft.expressions.VecDot.compute($a, $b);
+         |${ev.isNull} = $r == null;
+         |if ($r != null) ${ev.value} = $r.doubleValue();
        """.stripMargin
     })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecDot =
     copy(left = newLeft, right = newRight)
+}
+
+object VecDot {
+
+  /** Per-row kernel (shared by eval and codegen): null when the lengths
+    * differ or either array holds a null element. */
+  def compute(x: ArrayData, y: ArrayData): java.lang.Double = {
+    val n = x.numElements()
+    if (y.numElements() != n) return null
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      acc += x.getDouble(i) * y.getDouble(i)
+      i += 1
+    }
+    acc
+  }
 }

@@ -16,6 +16,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * array order over doubles, each term computed as `(a[i]-b[i])*(a[i]-b[i])`
   * — bit-identical to the DuckDB oracle's
   * `list_reduce([0.0] || list_transform(..., i -> (a[i]-b[i])*(a[i]-b[i])), +)`.
+  * Ragged arrays and null elements give null, as in [[VecDot]].
   */
 case class VecL2Sq(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -33,40 +34,43 @@ case class VecL2Sq(left: Expression, right: Expression)
 
   override def dataType: DataType = DoubleType
 
+  override def nullable: Boolean = true
+
   override def prettyName: String = "vec_l2sq"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      val d = x.getDouble(i) - y.getDouble(i)
-      acc += d * d
-      i += 1
-    }
-    acc
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    VecL2Sq.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
+      val r = ctx.freshName("r")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = $a.getDouble($i) - $b.getDouble($i);
-         |  $acc += $d * $d;
-         |}
-         |${ev.value} = $acc;
+         |java.lang.Double $r = graft.expressions.VecL2Sq.compute($a, $b);
+         |${ev.isNull} = $r == null;
+         |if ($r != null) ${ev.value} = $r.doubleValue();
        """.stripMargin
     })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecL2Sq =
     copy(left = newLeft, right = newRight)
+}
+
+object VecL2Sq {
+
+  /** Per-row kernel (shared by eval and codegen): null when the lengths
+    * differ or either array holds a null element. */
+  def compute(x: ArrayData, y: ArrayData): java.lang.Double = {
+    val n = x.numElements()
+    if (y.numElements() != n) return null
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      val d = x.getDouble(i) - y.getDouble(i)
+      acc += d * d
+      i += 1
+    }
+    acc
+  }
 }

@@ -179,7 +179,8 @@ case class MomentPairsResult(n: Long, sumHi: Seq[Long], sumLo: Seq[Long],
 /** Diagonal-only sibling of [[MomentPairsAgg]] for x45/x77: per-dimension
   * sums Σ svᵢ and squares Σ svᵢ², plus the row count, in one corpus read
   * — replaces a 64× `posexplode` into a dim-keyed decimal(25,0) hash
-  * aggregate. Same quantization, same exactness, same null semantics. */
+  * aggregate. Same quantization, same exactness, same null semantics,
+  * and the same per-element bound [[MomentPairsAgg.MaxScaled]]. */
 final class MomentDiagAgg(scale: Double, dim: Int)
     extends Aggregator[Array[Double], Array[Long], MomentDiagResult] {
 
@@ -192,6 +193,9 @@ final class MomentDiagAgg(scale: Double, dim: Int)
       var i = 0
       while (i < n) {
         val sv = math.floor(a(i) * scale + 0.5).toLong
+        require(sv >= -MomentPairsAgg.MaxScaled && sv <= MomentPairsAgg.MaxScaled,
+          s"MomentDiagAgg: dimension $i scales ${a(i)} to $sv, past " +
+            s"±${MomentPairsAgg.MaxScaled}, so its square would overflow a Long")
         Limb128.addSigned(buf, 1 + 2 * i, 2 + 2 * i, sv)
         Limb128.addSigned(buf, 1 + 2 * dim + 2 * i, 2 + 2 * dim + 2 * i,
           sv * sv)

@@ -66,9 +66,9 @@ object GraftProperties extends Properties("graft") {
         .suchThat(cp => cp < 0xD800 || cp > 0xDFFF))
       .map(_.flatMap(Character.toChars(_).toSeq).mkString)
 
-  /** The codegen'd PolyHash expression's eval path against the plain
-    * Scala model fold — exact for every representable string (both walk
-    * UTF-16 code units, surrogate pairs included). */
+  /** PolyHash's kernel (eval and generated code both call it) against
+    * the plain Scala model fold — exact for every representable string
+    * (both walk UTF-16 code units, surrogate pairs included). */
   property("PolyHash expression == model fold for arbitrary strings") =
     forAll(Gen.oneOf(Gen.asciiStr, validUnicodeStr)) { s =>
       import org.apache.spark.sql.catalyst.expressions.Literal
@@ -76,26 +76,36 @@ object GraftProperties extends Properties("graft") {
       graft.expressions.PolyHash(Literal(s)).eval(null) == model
     }
 
-  /** CdcChunks (interpreted eval) against the driver-side model on
+  /** The CDC cut rule, written here independently of the expression:
+    * a cut falls after position j (8 ≤ j < n) when the rolling
+    * polynomial fold of the 8 values before it is ≡ 0 (mod 32); the
+    * chunk lengths run between cuts, the last one to n. */
+  private def cdcModel(vs: Seq[Long]): Seq[Int] = {
+    def fold(w: Seq[Long]) = w.foldLeft(0L)((h, v) => (h * 31 + v) % 1000000007L)
+    val cuts = (8 until vs.length).filter(j => fold(vs.slice(j - 8, j)) % 32 == 0)
+    if (vs.isEmpty) Nil
+    else (cuts :+ vs.length).zip(0 +: cuts).map { case (end, start) => end - start }
+  }
+
+  /** CdcChunks against the window-hash model over UTF-16 code units on
     * arbitrary strings: identical chunk-length arrays, lengths sum to
-    * the string length, every boundary is ≥ Window chars in, and the
-    * empty string yields the empty array. (The codegen'd path runs
-    * through the x87 operator plan in OperatorsSpec/Verify.) */
+    * the string length, and the empty string yields the empty array. */
   property("CdcChunks expression == cut-rule model for arbitrary strings") =
     forAll(Gen.oneOf(Gen.asciiStr, validUnicodeStr)) { s =>
       import org.apache.spark.sql.catalyst.expressions.Literal
       import org.apache.spark.sql.catalyst.util.ArrayData
-      val model = graft.expressions.CdcChunks.model(s)
+      val model = cdcModel(s.map(_.toLong))
       val got = graft.expressions.CdcChunks(Literal(s)).eval(null)
         .asInstanceOf[ArrayData].toIntArray()
-      got.sameElements(model) && model.sum == s.length &&
+      got.toSeq == model && model.sum == s.length &&
         (s.isEmpty == model.isEmpty)
     }
 
   /** The BINARY flavors of PolyHash/CdcChunks (the media-blob path) —
-    * eval against the byte models on arbitrary byte arrays, including
-    * values ≥ 0x80 where a signed-byte slip would diverge; chunk
-    * lengths sum to the array length. */
+    * eval against the fold and window-hash models over unsigned bytes
+    * on arbitrary byte arrays, including values ≥ 0x80 where a
+    * signed-byte slip would diverge; chunk lengths sum to the array
+    * length. */
   property("PolyHash/CdcChunks binary eval == unsigned-byte models") =
     forAll(Gen.listOf(Gen.choose(0, 255))) { vs =>
       import org.apache.spark.sql.catalyst.expressions.Literal
@@ -105,7 +115,7 @@ object GraftProperties extends Properties("graft") {
       val chunks = graft.expressions.CdcChunks(Literal(b)).eval(null)
         .asInstanceOf[ArrayData].toIntArray()
       graft.expressions.PolyHash(Literal(b)).eval(null) == phModel &&
-        chunks.sameElements(graft.expressions.CdcChunks.model(b)) &&
+        chunks.toSeq == cdcModel(vs.map(_.toLong)) &&
         chunks.sum == b.length
     }
 
@@ -129,14 +139,13 @@ object GraftProperties extends Properties("graft") {
         graft.SimHashModel.simhash(s)
     }
 
-  /** AHash64 (interpreted eval) against the driver-side bucket-mean
-    * model over UNSIGNED UTF-8 BYTES, plus the invariants the dedup
-    * join relies on: empty → 0, a constant byte stream → 0 (no bucket
-    * exceeds the mean of itself), string input ≡ its UTF-8 bytes as
-    * binary input (so a blob column and a text stand-in can never
-    * disagree), and equal inputs → equal hashes (Hamming 0 — what makes
-    * byte-identical blobs pair). (The codegen'd path runs through the
-    * x95 operator plan in OperatorsSpec/Verify.) */
+  /** AHash64's kernel against the driver-side bucket-mean model over
+    * UNSIGNED UTF-8 BYTES, plus the invariants the dedup join relies
+    * on: empty → 0, a constant byte stream → 0 (no bucket exceeds the
+    * mean of itself), string input ≡ its UTF-8 bytes as binary input
+    * (so a blob column and a text stand-in can never disagree), and
+    * equal inputs → equal hashes (Hamming 0 — what makes byte-identical
+    * blobs pair). */
   property("AHash64 expression == unsigned-byte bucket-mean model; " +
       "string == its UTF-8 bytes; constant streams hash to 0") =
     forAll(Gen.oneOf(Gen.asciiStr, validUnicodeStr)) { s =>

@@ -123,6 +123,24 @@ class MomentLimbsSpec extends SparkSpec {
       s"to ${b + 1}, past ±$b"), e.getMessage)
   }
 
+  test("MomentDiagAgg: exact at the per-element bound, fails one step past it") {
+    val b = MomentPairsAgg.MaxScaled
+    val agg = new MomentDiagAgg(1.0, 2)
+    // two rows at the bound: each square is b², their sum 2·b² is past
+    // 2⁶³, so only the limbs hold it
+    val row = Array(b.toDouble, -b.toDouble)
+    val m = agg.finish(agg.reduce(agg.reduce(agg.zero, row), row))
+    (0 until 2).foreach { i =>
+      assert(Limb128.toBigInt(m.sqHi(i), m.sqLo(i)) === BigInt(b) * b * 2, s"sq dim $i")
+    }
+    assert(Limb128.toBigInt(m.sumHi(0), m.sumLo(0)) === BigInt(b) * 2)
+    assert(Limb128.toBigInt(m.sumHi(1), m.sumLo(1)) === BigInt(b) * -2)
+    val e = intercept[IllegalArgumentException](
+      agg.reduce(agg.zero, Array(0.0, -(b + 1).toDouble)))
+    assert(e.getMessage.contains(s"dimension 1 scales ${-(b + 1).toDouble} " +
+      s"to ${-(b + 1)}, past ±$b"), e.getMessage)
+  }
+
   test("MomentDiagAgg == the decimal(25,0) sum/sumsq formulation") {
     val emb = fixture()
     val (_, refDims, refSqs, refN) = decimalReference(emb)

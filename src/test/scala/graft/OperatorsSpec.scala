@@ -1167,7 +1167,7 @@ class OperatorsSpec extends SparkSpec {
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4)))).toMap
     // stats must equal the model's (codegen path == model)
     Seq(1L -> base, 2L -> edited, 3L -> "short").foreach { case (id, s) =>
-      val m = CdcChunks.model(s)
+      val m = CdcChunks.compute(s).toIntArray()
       assert(out(id) === ((s.length.toLong, m.length.toLong,
         m.max.toLong, s.length.toDouble / m.length)), s"doc $id")
     }
@@ -1176,7 +1176,7 @@ class OperatorsSpec extends SparkSpec {
     // (after the rolling window clears the edit) — fixed windows can't
     // do this
     def cutsOf(s: String) =
-      CdcChunks.model(s).scanLeft(0)(_ + _).drop(1).dropRight(1).toSet
+      CdcChunks.compute(s).toIntArray().scanLeft(0)(_ + _).drop(1).dropRight(1).toSet
     val shift = "PREPENDED HEADER ".length
     val expected = cutsOf(base).map(_ + shift)
       .filter(_ > shift + CdcChunks.Window)
@@ -1524,7 +1524,7 @@ class OperatorsSpec extends SparkSpec {
     // delta-vote pairing
     val chunks = fixture.map { case (id, t) =>
       val bb = blobBytes(id, t)
-      val lens = graft.expressions.CdcChunks.model(bb)
+      val lens = graft.expressions.CdcChunks.compute(bb).toIntArray()
       val starts = lens.scanLeft(0)(_ + _).init
       id -> starts.zip(lens).map { case (st, ln) =>
         (st.toLong, ln.toLong, polyhash(bb.slice(st, st + ln))) }.toList

@@ -17,17 +17,25 @@ class ProductQuantizationSpec extends SparkSpec {
 
   test("VecL2Sq matches the interpreted HOF fold bit-for-bit") {
     import spark.implicits._
+    // the last two pairs are degenerate: both forms give null
+    val degenerate = spark.sql(
+      "SELECT CAST(array(1, 2) AS array<float>) AS a, " +
+        "CAST(array(3) AS array<float>) AS b UNION ALL " +
+        "SELECT CAST(array(1, NULL) AS array<float>), CAST(array(1, 2) AS array<float>)")
     val df = Seq(
       (Array(1.0f, 2.0f, -3.5f), Array(0.5f, -2.0f, 3.25f)),
       (Array(0.0f, 0.0f, 0.0f), Array(0.0f, 0.0f, 0.0f)),
       (Array(1e-7f, 2e7f, -1e-3f), Array(3.7f, -0.1f, 9.9f))
-    ).toDF("a", "b")
+    ).toDF("a", "b").union(degenerate)
     val rows = df.select(
       l2sq(col("a"), col("b")).as("fast"),
       l2sqHof(col("a"), col("b")).as("ref")).collect()
+    assert(rows.count(_.isNullAt(1)) === 2)
     rows.foreach { r =>
-      assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ===
-        java.lang.Double.doubleToLongBits(r.getDouble(1)))
+      assert(r.isNullAt(0) === r.isNullAt(1), s"null differs: $r")
+      if (!r.isNullAt(1))
+        assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ===
+          java.lang.Double.doubleToLongBits(r.getDouble(1)))
     }
   }
 

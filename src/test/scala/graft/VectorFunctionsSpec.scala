@@ -29,10 +29,17 @@ class VectorFunctionsSpec extends SparkSpec {
     val rng = new scala.util.Random(7)
     val vecs = (0 until 200).map(_ =>
       (Array.fill(64)(rng.nextFloat() * 2 - 1), Array.fill(64)(rng.nextFloat() * 2 - 1)))
-    val df = vecs.toDF("a", "b")
+    // zip_with pads the shorter array with nulls, and a null term nulls
+    // the fold: both pairs must give null
+    val degenerate = spark.sql(
+      "SELECT CAST(array(1, 2) AS array<float>) AS a, " +
+        "CAST(array(3) AS array<float>) AS b UNION ALL " +
+        "SELECT CAST(array(1, NULL) AS array<float>), CAST(array(1, 2) AS array<float>)")
+    val df = vecs.toDF("a", "b").union(degenerate)
       .select(dot(col("a"), col("b")).as("fast"), dotHof(col("a"), col("b")).as("ref"))
     // exact equality: same left-to-right IEEE accumulation order
-    assert(df.filter(col("fast") =!= col("ref")).count() === 0)
+    assert(df.filter(!(col("fast") <=> col("ref"))).count() === 0)
+    assert(df.filter(col("ref").isNull).count() === 2)
   }
 
   test("TopDots matches the row_number window it replaced — bit parity, " +

@@ -81,6 +81,17 @@ if [ -n "$conf_writes" ]; then
   echo "$conf_writes"
   exit 1
 fi
+# Each expression in src/main/scala/graft/expressions writes its kernel
+# once, as a companion-object method that eval and the generated code
+# both call. A Java loop in a doGenCode string is a second copy of a
+# kernel, one that only query plans run (six expressions once carried
+# such a copy). Fail on `for (int` under src/main/scala/graft/expressions.
+java_loops=$(grep -rnF 'for (int' src/main/scala/graft/expressions || true)
+if [ -n "$java_loops" ]; then
+  echo "gate: Java loop in generated code under src/main/scala/graft/expressions:"
+  echo "$java_loops"
+  exit 1
+fi
 # Compile (main + test), then the analysis-only smoke: resolve every
 # query plan + entry() at sf0.001 (graft.Analyze -- df.schema only, no
 # execution, ~30 s warm). Round 7's events/timestamp_ntz environment
