@@ -93,12 +93,12 @@ object SparkEntry {
     "x13_media_meta" -> (Multimodal.mediaMeta _),
     "x14_media_decode" -> (Multimodal.decodeFeatures _),
     "x15_asof_join" -> (TemporalJoins.asofJoin _),
-    "x18_frame_sample" -> ((s: SparkSession, d: String) => Multimodal.frameSample(s, d)),
+    "x18_frame_sample" -> (Multimodal.frameSample _),
     "x19_ann_ivf" -> (Similarity.ivfTopK _),
     "x16_range_join" -> (TemporalJoins.rangeJoin _),
     "x17_udaf_wavg" -> (Relational.udafWeightedAvg _),
     // — corpus curation (split / filter / mix) —
-    "x24_media_resize" -> ((s: SparkSession, d: String) => Multimodal.resizePlan(s, d)),
+    "x24_media_resize" -> (Multimodal.resizePlan _),
     "x20_train_split" -> (Curation.trainSplit _),
     "x21_length_filter" -> (Curation.lengthFilter _),
     "x22_mixture_weights" -> (Curation.mixtureWeights _),
@@ -133,8 +133,7 @@ object SparkEntry {
     "x44_quality_gate" -> (Curation.qualityGate _),
     "x45_standardize" -> (Quantization.standardize _),
     "x46_pq_encode" -> (ProductQuantization.pqEncode _),
-    "x47_ann_pq" -> ((s: SparkSession, d: String) =>
-      ProductQuantization.adcTopK(s, d)),
+    "x47_ann_pq" -> (ProductQuantization.adcTopK _),
     "x48_semdedup" -> (Similarity.semDedup _),
     "x49_dup_spans" -> (Dedup.dupSpans _),
     "x50_quality_classifier" -> (TextAnalysis.qualityClassifier _),
@@ -1452,7 +1451,7 @@ object SparkEntry {
          |  CAST(u.i AS INTEGER) AS frame_idx,
          |  (n_bytes // CAST(n_frames AS BIGINT)) * u.i AS byte_offset,
          |  (checksum + u.i) % 1000000007 AS frame_sig
-         |FROM f, unnest(range(0, CAST(n_frames AS BIGINT), 8)) AS u(i)
+         |FROM f, unnest(range(0, CAST(n_frames AS BIGINT), ${graft.operators.Multimodal.FrameStride})) AS u(i)
          |ORDER BY doc_id, frame_idx""".stripMargin),
 
     "x17_udaf_wavg" ->
@@ -1462,9 +1461,10 @@ object SparkEntry {
         |  COUNT(*) AS n_rows
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
 
-    // Mirrors Multimodal.resizePlan: integer letterbox fit to 224.
-    "x24_media_resize" ->
-      (s"WITH ${blobBytesCte("WHERE doc_id % 3 <> 1")}," +
+    // Mirrors Multimodal.resizePlan: integer letterbox fit to ResizeTarget.
+    "x24_media_resize" -> {
+      val t = graft.operators.Multimodal.ResizeTarget
+      s"WITH ${blobBytesCte("WHERE doc_id % 3 <> 1")}," +
       s"""m AS (
          |  SELECT doc_id,
          |    CASE WHEN doc_id % 3 = 0 THEN 'image' ELSE 'video' END AS media_type,
@@ -1477,13 +1477,14 @@ object SparkEntry {
          |  FROM m),
          |f AS (
          |  SELECT *, GREATEST(width, height) AS fit,
-         |    CAST((width * 224) // GREATEST(width, height) AS INTEGER) AS out_w,
-         |    CAST((height * 224) // GREATEST(width, height) AS INTEGER) AS out_h
+         |    CAST((width * $t) // GREATEST(width, height) AS INTEGER) AS out_w,
+         |    CAST((height * $t) // GREATEST(width, height) AS INTEGER) AS out_h
          |  FROM d)
          |SELECT doc_id, media_type, width, height, out_w, out_h,
-         |  224 - out_w AS pad_x, 224 - out_h AS pad_y,
+         |  $t - out_w AS pad_x, $t - out_h AS pad_y,
          |  CAST(out_w AS BIGINT) * out_h * 3 AS out_bytes
-         |FROM f ORDER BY doc_id""".stripMargin),
+         |FROM f ORDER BY doc_id""".stripMargin
+    },
 
     // Mirrors Curation.trainSplit: content-hash buckets, 80/10/10.
     "x20_train_split" ->

@@ -28,7 +28,11 @@ import org.apache.spark.sql.types._
   *  - `mx = 0.0` / `nrm = 0.0` guards use IEEE `==` (±0.0 equal, NaN
   *    unequal), exactly the SQL `=` they replace;
   *  - the returned `ray` is the raw `aggregate(zip_with(u, wu, _*_), …)`
-  *    numerator — the caller applies the same division chain as before.
+  *    numerator — the caller applies the same division chain as before;
+  *  - a null row, a row whose length is not the row count, or a null
+  *    element gives null: `zip_with` pads the shorter side with nulls, a
+  *    null term nulls that row's fold, and the null spreads into every
+  *    later step, so the formulation ends with a null `ray`.
   */
 case class PowerIter(child: Expression, iters: Int) extends UnaryExpression {
   require(iters >= 1, "PowerIter needs iters >= 1")
@@ -43,6 +47,8 @@ case class PowerIter(child: Expression, iters: Int) extends UnaryExpression {
     StructField("u", ArrayType(DoubleType, containsNull = false), nullable = false),
     StructField("ray", DoubleType, nullable = false)))
 
+  override def nullable: Boolean = true
+
   override def prettyName: String = "power_iter"
 
   override protected def nullSafeEval(m: Any): Any =
@@ -50,7 +56,10 @@ case class PowerIter(child: Expression, iters: Int) extends UnaryExpression {
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.expressions.PowerIter.run($c, $iters);")
+      s"""
+         |${ev.value} = graft.expressions.PowerIter.run($c, $iters);
+         |${ev.isNull} = ${ev.value} == null;
+       """.stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): PowerIter =
     copy(child = newChild)
@@ -58,13 +67,18 @@ case class PowerIter(child: Expression, iters: Int) extends UnaryExpression {
 
 object PowerIter {
 
+  /** Null when a row is null, is not `n` long, or holds a null. */
   def run(m: ArrayData, iters: Int): GenericInternalRow = {
     val n = m.numElements()
     // materialize rows once (primitive arrays) — the loop reads them 8×
     val rows = new Array[Array[Double]](n)
     var i = 0
     while (i < n) {
-      rows(i) = m.getArray(i).toDoubleArray()
+      val row = m.getArray(i)
+      if (row == null || row.numElements() != n) return null
+      var j = 0
+      while (j < n) { if (row.isNullAt(j)) return null; j += 1 }
+      rows(i) = row.toDoubleArray()
       i += 1
     }
     def matvec(v: Array[Double]): Array[Double] = {
@@ -72,10 +86,9 @@ object PowerIter {
       var i = 0
       while (i < n) {
         val row = rows(i)
-        val k = math.min(row.length, v.length)
         var acc = 0.0
         var j = 0
-        while (j < k) { acc += row(j) * v(j); j += 1 }
+        while (j < n) { acc += row(j) * v(j); j += 1 }
         w(i) = acc
         i += 1
       }

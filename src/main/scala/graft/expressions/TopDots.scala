@@ -29,6 +29,10 @@ import org.apache.spark.sql.types._
   * left fold as [[VecDot]] and the comparison is
   * `java.lang.Double.compare` — NaN sorts as the LARGEST value, exactly
   * like Spark's `ORDER BY dot DESC` (and [[graft.functions.TopKByScore]]).
+  * A candidate whose dot is null — its length differs from vec's, or
+  * either side holds a null element, the cases where [[VecDot]] gives
+  * null — ranks after every candidate with a dot, by id ASC: the
+  * window's `DESC` order puts nulls last.
   *
   * Input: vec `array<double>`, cands `array<struct<id: long,
   * v: array<double>>>` (field names free — matched positionally).
@@ -81,40 +85,48 @@ case class TopDots(vec: Expression, cands: Expression, k: Int)
 object TopDots {
 
   /** True when (da, ia) ranks strictly before (db, ib) under
-    * (dot DESC with NaN greatest — `Double.compare` order — id ASC). */
-  private def beats(da: Double, ia: Long, db: Double, ib: Long): Boolean = {
-    val c = java.lang.Double.compare(db, da)
+    * (dot DESC with NaN greatest — `Double.compare` order — and a null
+    * dot (`na`/`nb`) last, id ASC). */
+  private def beats(da: Double, na: Boolean, ia: Long,
+      db: Double, nb: Boolean, ib: Long): Boolean = {
+    val c =
+      if (na || nb) java.lang.Boolean.compare(na, nb)
+      else java.lang.Double.compare(db, da)
     c < 0 || (c == 0 && ia < ib)
   }
 
   /** Tight-loop top-k: one sequential-fold dot per candidate (the
-    * [[VecDot]] fold, same IEEE result), insertion into a ≤k sorted
-    * buffer. Called from both eval and generated code. */
+    * [[VecDot]] fold, same IEEE result, null on a length mismatch or a
+    * null element), insertion into a ≤k sorted buffer. Called from both
+    * eval and generated code. */
   def topDots(u: ArrayData, cs: ArrayData, k: Int): ArrayData = {
     val m = cs.numElements()
-    val n0 = u.numElements()
+    val n = u.numElements()
     val ids = new Array[Long](k)
     val dots = new Array[Double](k)
+    val nulls = new Array[Boolean](k)
     var filled = 0
     var i = 0
     while (i < m) {
       val st = cs.getStruct(i, 2)
       val id = st.getLong(0)
       val cv = st.getArray(1)
-      val n = math.min(n0, cv.numElements())
+      var isNull = cv.numElements() != n
       var acc = 0.0
       var j = 0
-      while (j < n) {
-        acc += u.getDouble(j) * cv.getDouble(j)
+      while (j < n && !isNull) {
+        if (u.isNullAt(j) || cv.isNullAt(j)) isNull = true
+        else acc += u.getDouble(j) * cv.getDouble(j)
         j += 1
       }
       // insertion position among the filled entries
-      if (filled < k || beats(acc, id, dots(filled - 1), ids(filled - 1))) {
+      if (filled < k ||
+          beats(acc, isNull, id, dots(filled - 1), nulls(filled - 1), ids(filled - 1))) {
         var p = if (filled < k) filled else k - 1
-        while (p > 0 && beats(acc, id, dots(p - 1), ids(p - 1))) {
-          dots(p) = dots(p - 1); ids(p) = ids(p - 1); p -= 1
+        while (p > 0 && beats(acc, isNull, id, dots(p - 1), nulls(p - 1), ids(p - 1))) {
+          dots(p) = dots(p - 1); nulls(p) = nulls(p - 1); ids(p) = ids(p - 1); p -= 1
         }
-        dots(p) = acc; ids(p) = id
+        dots(p) = acc; nulls(p) = isNull; ids(p) = id
         if (filled < k) filled += 1
       }
       i += 1

@@ -28,14 +28,11 @@ object ChFunctions {
     * (1-indexed `[4]`), NOT `user_id` — see SURVEY.md §2.5 quirk note. */
   def chatId(subject: Column): Column = subjectSegment(subject, 4)
 
-  /** `JSONExtractString(data, key)`: `''` on missing key, malformed JSON,
-    * or mistyped value (reference `init.sql:109-111`). */
-  def jsonString(data: Column, key: String): Column =
-    chString(get_json_object(data, s"$$.$key"))
-
-  /** The `JSONExtractString` default applied to an ALREADY-extracted
-    * nullable value (e.g. a `json_tuple` output): null → `''`. The single
-    * home of the ClickHouse string-default semantics. */
+  /** `JSONExtractString(data, key)`'s default (reference
+    * `init.sql:109-111`) applied to an ALREADY-extracted nullable value
+    * (a `json_tuple` output): missing key, malformed JSON or mistyped
+    * value → null → `''`. The single home of the ClickHouse
+    * string-default semantics. */
   def chString(extracted: Column): Column = coalesce(extracted, lit(""))
 
   /** The `JSONExtractUInt`→`DateTime` default applied to an
@@ -48,16 +45,6 @@ object ChFunctions {
     * nullable value: non-numeric/missing → 0. */
   def chUInt(extracted: Column): Column =
     coalesce(extracted.try_cast("long"), lit(0L))
-
-  /** `JSONExtractUInt(data, 'timestamp')` implicitly cast to `DateTime`:
-    * missing/non-numeric → 0 → epoch 1970-01-01 (reference `init.sql:112`,
-    * target column type `init.sql:84`). */
-  def jsonEpochTimestamp(data: Column, key: String): Column =
-    chEpochTimestamp(get_json_object(data, s"$$.$key"))
-
-  /** `JSONExtractUInt` as a plain number (0 default). */
-  def jsonUInt(data: Column, key: String): Column =
-    chUInt(get_json_object(data, s"$$.$key"))
 
   /** ClickHouse `DateTime` is second-precision; truncate at the ingest
     * boundary (reference `init.sql:10`). */

@@ -50,10 +50,6 @@ object Limb128 {
     buf(hiIdx) += hiB + carry
     buf(loIdx) = r
   }
-
-  /** The exact integer `hi·2⁶⁴ + (lo unsigned)` as a BigInt (spec aid). */
-  def toBigInt(hi: Long, lo: Long): BigInt =
-    (BigInt(hi) << 64) + (BigInt(lo) & ((BigInt(1) << 64) - 1))
 }
 
 /** Upper-triangle second-moment pass over raw embedding arrays: one

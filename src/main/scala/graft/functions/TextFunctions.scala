@@ -69,22 +69,12 @@ object TextFunctions {
     GraftSql.column(
       graft.expressions.MinHashSig(GraftSql.expression(shingleArr), numHashes))
 
-  /** 64-bit SimHash: four seeded 16-bit simhashes concatenated (seed
-    * char `'0'+s` prepended to each token feeds bits 16s..16s+15 —
-    * see [[graft.expressions.SimHash64]]). */
-  val SimhashBits = 64
-
-  /** Bits contributed per seeded hash ([[SimhashBits]] / [[SimhashSeeds]]). */
-  val SimhashBitsPerSeed = 16
-
-  /** Number of seeded polynomial hashes feeding the signature. */
-  val SimhashSeeds = 4
-
-  /** One-pass codegen'd SimHash ([[graft.expressions.SimHash64]]) —
-    * value-identical to exploding tokens and sign-summing seeded
-    * [[polyHash]] bits in a groupBy (`Dedup.simhashViaAgg`, the
-    * identity-spec reference), but a narrow projection: no explode, no
-    * shuffle. */
+  /** One-pass codegen'd 64-bit SimHash ([[graft.expressions.SimHash64]]):
+    * four seeded 16-bit simhashes concatenated (seed char `'0'+s`
+    * prepended to each token feeds bits 16s..16s+15) — value-identical
+    * to exploding tokens and sign-summing seeded [[polyHash]] bits in a
+    * groupBy (`HofReference.simhashViaAgg`, the identity-spec
+    * reference), but a narrow projection: no explode, no shuffle. */
   def simhash64(text: Column): Column =
     GraftSql.column(graft.expressions.SimHash64(GraftSql.expression(text)))
 

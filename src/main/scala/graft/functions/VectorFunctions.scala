@@ -47,10 +47,6 @@ object VectorFunctions {
   def unit(a: Column, normCol: Column): Column =
     transform(asDoubles(a), x => x / normCol)
 
-  /** Cosine similarity of two raw vectors (3 folds — prefer pre-normalizing
-    * with [[unit]] + one [[dot]] when the column feeds a pair join). */
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Deterministic pseudo-random hyperplane component r(p, i) — a Lehmer
     * LCG step on the flattened index, mapped to [-0.5, 0.5). Integer
     * arithmetic + one double division, so any engine reproduces it.

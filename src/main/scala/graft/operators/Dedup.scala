@@ -663,32 +663,6 @@ object Dedup {
       .select(col("doc_id"), simhash64(col("text")).as("simhash"))
       .orderBy("doc_id")
 
-  /** Reference formulation of [[simhash]] for the bit-identity spec:
-    * explode tokens → four seeded per-token polyhashes (seed char
-    * prepended, the same rolling-hash identity the expression uses) → 64
-    * partial-aggregated sign sums → pack. Value-identical by
-    * construction; do not use on corpus paths (one aggregation row per
-    * token). */
-  private[graft] def simhashViaAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    val bitSums = (0 until SimhashBits).map { b =>
-      val s = b / SimhashBitsPerSeed
-      val k = b % SimhashBitsPerSeed
-      sum(expr(s"2 * (shiftright(h$s, $k) & 1) - 1")).as(s"s$b")
-    }
-    val pack = (0 until SimhashBits)
-      .map(b => when(col(s"s$b") > 0, lit(1L << b)).otherwise(lit(0L)))
-      .reduce(_ + _)
-    val seeded = (0 until SimhashSeeds).map(s =>
-      polyHash(concat(lit(('0' + s).toChar.toString), col("w"))).as(s"h$s"))
-    Tables.documentsParallel(spark, sfDir)
-      .select(col("doc_id"), explode(tokens(col("text"))).as("w"))
-      .select(col("doc_id") +: seeded: _*)
-      .groupBy("doc_id")
-      .agg(bitSums.head, bitSums.tail: _*)
-      .select(col("doc_id"), pack.as("simhash"))
-      .orderBy("doc_id")
-  }
-
   /** Hamming threshold for [[dupClusters]] — tighter than the ≤3 pair
     * REPORT ([[simhashPairs]]): clustering merges transitively, so the
     * edge predicate must mean "near-identical", not "related" (on a
@@ -874,6 +848,12 @@ object Dedup {
       .orderBy("doc_id")
   }
 
+  /** Hamming bound of a reported near-dup pair ([[simhashPairs]],
+    * [[graft.operators.Multimodal.mediaDups]]): the largest distance
+    * [[bandedHammingPairs]]' 4 × 16-bit banding finds with total recall
+    * (pigeonhole). */
+  val PairHamming = 3
+
   /** SimHash near-dup pairs via BANDED Hamming join: the 64-bit signature
     * splits into 4 16-bit chunks; a pair is a candidate iff some chunk
     * matches exactly (pigeonhole: Hamming ≤ 3 ⇒ ≥1 untouched chunk, so
@@ -889,7 +869,7 @@ object Dedup {
     // Same materialization rationale as minhashLsh: O(N)-small signature
     // table, expensive to build, read by both sides of the banded join.
     val sig = OperatorCaches.persist(simhash(spark, sfDir))
-    bandedHammingPairs(sig, "simhash", "sim")
+    bandedHammingPairs(sig, "simhash", "sim", Nil)
       .select("doc_a", "doc_b", "sim_a", "sim_b", "hamming")
       .orderBy("doc_a", "doc_b")
   }
@@ -923,8 +903,7 @@ object Dedup {
     * and typically all 4; it is lost only when EVERY shared chunk's
     * bucket is oversized. */
   private[graft] def bandedHammingPairs(sig: DataFrame, sigCol: String,
-      outPrefix: String, extraKeys: Seq[String] = Nil,
-      maxHamming: Int = 3): DataFrame = {
+      outPrefix: String, extraKeys: Seq[String]): DataFrame = {
     val keys = Seq("c", "chunk") ++ extraKeys
     val banded = sig.select(
         (Seq(col("doc_id"), col(sigCol)) ++ extraKeys.map(col)) :+
@@ -946,7 +925,7 @@ object Dedup {
       // shuffles almost nothing.
       .withColumn("hamming",
         expr(s"bit_count(${outPrefix}_a ^ ${outPrefix}_b)"))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= PairHamming)
       .select((Seq("doc_a", "doc_b", s"${outPrefix}_a", s"${outPrefix}_b",
         "hamming") ++ extraKeys).map(col): _*)
       .distinct()

@@ -106,7 +106,13 @@ object Multimodal {
         md5(hex(col("content"))).as("content_hash"))
       .orderBy("doc_id")
 
-  /** Frame sampling over video blobs: every `stride`-th frame with its
+  /** [[frameSample]] keeps frames 0, FrameStride, 2·FrameStride, … */
+  val FrameStride = 8
+
+  /** [[resizePlan]]'s square output side, in pixels. */
+  val ResizeTarget = 224
+
+  /** Frame sampling over video blobs: every [[FrameStride]]-th frame with its
     * byte offset and a per-frame signature — the plan shape of a
     * frame-extraction pass (explode over a per-row frame range; no
     * shuffle). Frame count/signature come from the deterministic fake
@@ -114,7 +120,7 @@ object Multimodal {
     * [[graft.functions.TextFunctions.polyHash]] over the BLOB's bytes —
     * exactly [[FakeDecoder.decode]]'s fold, for any payload (the old
     * character fold matched it only while the corpus was ASCII). */
-  def frameSample(spark: SparkSession, sfDir: String, stride: Int = 8): DataFrame = {
+  def frameSample(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.TextFunctions.polyHash
     Tables.documents(spark, sfDir)
       .filter(mediaTypeOf(col("doc_id")) === "video")
@@ -128,7 +134,7 @@ object Multimodal {
       .withColumn("bytes_per_frame",
         (col("n_bytes") / col("n_frames")).cast("long"))
       .withColumn("frame_idx",
-        explode(sequence(lit(0), col("n_frames") - 1, lit(stride))))
+        explode(sequence(lit(0), col("n_frames") - 1, lit(FrameStride))))
       .select(
         col("doc_id"), col("n_bytes"), col("n_frames"), col("frame_idx"),
         (col("bytes_per_frame") * col("frame_idx")).as("byte_offset"),
@@ -137,13 +143,13 @@ object Multimodal {
   }
 
   /** Resize planning over decoded dimensions: letterbox-fit every image/
-    * video to `target`×`target` preserving aspect ratio — the geometry a
+    * video to [[ResizeTarget]]² preserving aspect ratio — the geometry a
     * real resize kernel would execute, computed as a narrow projection
     * (integer `div` only, so the oracle is bit-exact with no float
     * rounding concerns). Emits scaled dims, padding, and the output
     * byte estimate (RGB). Dimensions derive from the same deterministic
     * fake-decode checksum as [[decodeFeatures]]/[[frameSample]]. */
-  def resizePlan(spark: SparkSession, sfDir: String, target: Int = 224): DataFrame = {
+  def resizePlan(spark: SparkSession, sfDir: String): DataFrame = {
     import graft.functions.TextFunctions.polyHash
     Tables.documents(spark, sfDir)
       .filter(mediaTypeOf(col("doc_id")) =!= "audio")
@@ -153,13 +159,13 @@ object Multimodal {
       .withColumn("height",
         (lit(16) + expr("(checksum div 624) % 464")).cast("int"))
       .withColumn("fit", greatest(col("width"), col("height")))
-      .withColumn("out_w", expr(s"int((width * $target) div fit)"))
-      .withColumn("out_h", expr(s"int((height * $target) div fit)"))
+      .withColumn("out_w", expr(s"int((width * $ResizeTarget) div fit)"))
+      .withColumn("out_h", expr(s"int((height * $ResizeTarget) div fit)"))
       .select(
         col("doc_id"), col("media_type"), col("width"), col("height"),
         col("out_w"), col("out_h"),
-        (lit(target) - col("out_w")).as("pad_x"),
-        (lit(target) - col("out_h")).as("pad_y"),
+        (lit(ResizeTarget) - col("out_w")).as("pad_x"),
+        (lit(ResizeTarget) - col("out_h")).as("pad_y"),
         (col("out_w").cast("long") * col("out_h") * 3L).as("out_bytes"))
       .orderBy("doc_id")
   }

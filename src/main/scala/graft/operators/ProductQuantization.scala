@@ -118,9 +118,8 @@ object ProductQuantization {
   /** Per-query LUT: lut[sub*K + code + 1] = <query subvector, codebook
     * entry> — M·K bounded rows per query, assembled in (sub, code)
     * order. */
-  private def queryLuts(e: DataFrame,
-      querySet: Option[DataFrame]): DataFrame =
-    subspaces(Similarity.queryRows(e, querySet))
+  private def queryLuts(e: DataFrame): DataFrame =
+    subspaces(Similarity.queryRows(e))
       .select(col("vec_id").as("query_id"), col("sub"), col("svec"))
       .join(broadcast(codebook(e)), "sub")
       .withColumn("lv", dot(col("svec"), col("cvec")))
@@ -138,11 +137,7 @@ object ProductQuantization {
     s"m * $CodebookSize + element_at(codes, m + 1) + 1))")
 
   /** x47: ADC top-k. See the object doc for the scan shape. */
-  def adcTopK(spark: SparkSession, sfDir: String): DataFrame =
-    adcTopK(spark, sfDir, None)
-
-  def adcTopK(spark: SparkSession, sfDir: String,
-              querySet: Option[DataFrame]): DataFrame = {
+  def adcTopK(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Similarity.normalized(spark, sfDir)
     // Persisted: at scale this relation is read from the stored index;
     // here both the build and any re-read share one materialization.
@@ -150,7 +145,7 @@ object ProductQuantization {
     // ADC scan: one pass over the codes relation, M lookups per pair,
     // sequential fold over subspaces (bit-identical to the oracle's)
     val topk = udaf(new TopKByScore(TopK), ExpressionEncoder[Neighbor]())
-    broadcast(queryLuts(e, querySet))
+    broadcast(queryLuts(e))
       .join(codes, col("query_id") =!= col("vec_id"))
       .withColumn("adc", adcScore)
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("adc"))
@@ -198,11 +193,7 @@ object ProductQuantization {
     * the (adc DESC, id) tie-break are each the bit-exact constructions
     * of their parent operators, so the whole composition stays
     * hash-exact against the oracle's identical derivation. */
-  def ivfPqTopK(spark: SparkSession, sfDir: String): DataFrame =
-    ivfPqTopK(spark, sfDir, None)
-
-  def ivfPqTopK(spark: SparkSession, sfDir: String,
-                querySet: Option[DataFrame]): DataFrame = {
+  def ivfPqTopK(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Similarity.normalized(spark, sfDir)
     val ranked = OperatorCaches.persist(
       Similarity.quantizedRanking(e,
@@ -212,13 +203,13 @@ object ProductQuantization {
     // the stored IVF-PQ index: cell-keyed PQ code words
     val codes = OperatorCaches.persist(codeWords(e).join(assign, "vec_id"))
     val probes = ranked
-      .join(broadcast(Similarity.queryRows(e, querySet).select("vec_id")),
+      .join(broadcast(Similarity.queryRows(e).select("vec_id")),
         Seq("vec_id"), "left_semi")
       .filter(col("crn") <= Similarity.NumProbes)
       .select(col("vec_id").as("query_id"), col("cid").as("cell"))
     // (query, probed cell, lut): ≤ |queries|·nprobe rows — the bounded
     // broadcast that makes the cell join one corpus-free hash probe
-    val qtab = probes.join(queryLuts(e, querySet), "query_id")
+    val qtab = probes.join(queryLuts(e), "query_id")
     val topk = udaf(new TopKByScore(TopK), ExpressionEncoder[Neighbor]())
     broadcast(qtab).join(codes, Seq("cell"))
       .filter(col("query_id") =!= col("vec_id"))

@@ -27,25 +27,15 @@ object Similarity {
   private val Planes = 4
   private val TopK = 5
 
-  /** Harness-default query set: the first 10 corpus ids (the driver's
-    * bench/oracle contract — NOT a semantic constant). Every entry point
-    * also takes an explicit query relation; this predicate is only the
-    * `None` fallback. */
-  private def defaultQueryPred: Column = col("vec_id") < 10
+  /** The query set: the first 10 corpus ids (the driver's bench/oracle
+    * contract — NOT a semantic constant). A pure predicate, no join; the
+    * query set is the broadcast side of every search below — that bound
+    * is what makes one corpus pass serve all queries at 100 TB. */
+  private def queryPred: Column = col("vec_id") < 10
 
-  /** Resolves the optional query relation to a filter of the corpus:
-    * `None` → the harness default (pure predicate, no join); `Some(q)` →
-    * broadcast LEFT SEMI against the caller's `vec_id` relation. The
-    * query set must be broadcast-small (it is the broadcast side of every
-    * search below — that bound is what makes one corpus pass serve all
-    * queries at 100 TB). */
-  private[operators] def queryRows(e: DataFrame, querySet: Option[DataFrame]): DataFrame =
-    querySet match {
-      case None => e.filter(defaultQueryPred)
-      case Some(q) =>
-        e.join(broadcast(q.select(col("vec_id")).distinct()),
-          Seq("vec_id"), "left_semi")
-    }
+  /** The corpus rows [[queryPred]] selects. */
+  private[operators] def queryRows(e: DataFrame): DataFrame =
+    e.filter(queryPred)
 
   /** (vec_id, label, u=unit vector) — norm computed once per row. The
     * scan is repartitioned first: locally `embeddings` is one parquet
@@ -69,13 +59,9 @@ object Similarity {
     * final merge. The shuffle carries at most k rows per (partition,
     * query); no stage ever funnels a query's full candidate set into one
     * task (the failure mode of a `PARTITION BY query_id` rank window). */
-  def bruteForceTopK(spark: SparkSession, sfDir: String): DataFrame =
-    bruteForceTopK(spark, sfDir, None)
-
-  def bruteForceTopK(spark: SparkSession, sfDir: String,
-                     querySet: Option[DataFrame]): DataFrame = {
+  def bruteForceTopK(spark: SparkSession, sfDir: String): DataFrame = {
     val e = normalized(spark, sfDir)
-    val q = queryRows(e, querySet)
+    val q = queryRows(e)
       .select(col("vec_id").as("query_id"), col("u").as("qu"))
     val c = e.select(col("vec_id").as("neighbor_id"), col("u").as("nu"),
       col("label"))
@@ -96,18 +82,14 @@ object Similarity {
     * number of planes; at scale, buckets are the partition key so each
     * executor handles a bucket slice without a cross join. The signature
     * is computed on the raw vector (matching the oracle's rounding). */
-  def lshTopK(spark: SparkSession, sfDir: String): DataFrame =
-    lshTopK(spark, sfDir, None)
-
-  def lshTopK(spark: SparkSession, sfDir: String,
-              querySet: Option[DataFrame]): DataFrame = {
+  def lshTopK(spark: SparkSession, sfDir: String): DataFrame = {
     // persisted like [[normalized]] — referenced by both join sides
     val e = OperatorCaches.persist(Tables.embeddingsParallel(spark, sfDir)
       .withColumn("sig", lshSignature(col("embedding"), Planes, Dim))
       .withColumn("nrm", norm(col("embedding")))
       .select(col("vec_id"), col("sig"),
         unit(col("embedding"), col("nrm")).as("u")))
-    val qs = queryRows(e, querySet)
+    val qs = queryRows(e)
       .select(col("vec_id").as("query_id"), col("sig"), col("u").as("qu"))
     val cs = e.select(col("vec_id").as("neighbor_id"), col("sig"),
       col("u").as("nu"))
@@ -133,13 +115,9 @@ object Similarity {
     * a query probes its [[NumProbes]] nearest cells and ranks only those
     * cells' members. At 100 TB the cell id is the partition key: each
     * query touches nprobe/K of the corpus instead of all of it. */
-  def ivfTopK(spark: SparkSession, sfDir: String): DataFrame =
-    ivfTopK(spark, sfDir, None)
-
-  def ivfTopK(spark: SparkSession, sfDir: String,
-              querySet: Option[DataFrame]): DataFrame = {
+  def ivfTopK(spark: SparkSession, sfDir: String): DataFrame = {
     val e = normalized(spark, sfDir)
-    ivfTopKWith(e, standInCentroids(e), querySet)
+    ivfTopKWith(e, standInCentroids(e))
   }
 
   /** Corpus-derived cell count for the STAND-IN centroid set of
@@ -203,12 +181,7 @@ object Similarity {
     * centroids are bit-equal to the oracle's (fixed-point means), the
     * whole composition — training plus search — stays hash-exact. */
   def ivfTopKTrained(spark: SparkSession, sfDir: String): DataFrame =
-    ivfTopKTrained(spark, sfDir, None)
-
-  def ivfTopKTrained(spark: SparkSession, sfDir: String,
-                     querySet: Option[DataFrame]): DataFrame =
-    ivfTopKWith(normalized(spark, sfDir), trainedCentroids(spark, sfDir),
-      querySet)
+    ivfTopKWith(normalized(spark, sfDir), trainedCentroids(spark, sfDir))
 
   /** Super-cell probe count for the two-level coarse quantizer
     * ([[quantizedRanking]]). Probing >1 super-cell recovers centroids
@@ -302,28 +275,16 @@ object Similarity {
 
   /** Shared IVF probe/rank pipeline over an arbitrary (cid, cu) centroid
     * relation (bounded by K — the broadcast is legitimate). */
-  private def ivfTopKWith(e: DataFrame, cents: DataFrame,
-                          querySet: Option[DataFrame]): DataFrame = {
+  private def ivfTopKWith(e: DataFrame, cents: DataFrame): DataFrame = {
     // assignment: nearest candidate centroid per vector (rank 1), probe
     // list for queries (rank <= NumProbes) — one two-level ranking
     // ([[quantizedRanking]]), two slices. The persist bounds the
     // materialization at ~N rows (assignment) + |queries|·NumProbes
     // (probes) and stops the two slices re-running the quantizer.
-    // Query membership rides on the ranking as an `is_q` flag — a pure
-    // predicate for the harness default, a broadcast flag-join (still
-    // one pass, |queries|-bounded build side) for a caller-supplied set.
-    val flagged = querySet match {
-      case None =>
-        quantizedRanking(e, cents, NumProbes)
-          .withColumn("is_q", defaultQueryPred)
-      case Some(q) =>
-        quantizedRanking(e, cents, NumProbes)
-          .join(broadcast(q.select(col("vec_id")).distinct()
-            .withColumn("qf", lit(true))), Seq("vec_id"), "left_outer")
-          .withColumn("is_q", coalesce(col("qf"), lit(false)))
-          .drop("qf")
-    }
-    val ranked = OperatorCaches.persist(flagged
+    // Query membership rides on the ranking as an `is_q` flag (a pure
+    // predicate, no join).
+    val ranked = OperatorCaches.persist(quantizedRanking(e, cents, NumProbes)
+      .withColumn("is_q", queryPred)
       .filter(col("crn") === 1 ||
         (col("is_q") && col("crn") <= NumProbes)))
     val assign = ranked.filter(col("crn") === 1)
@@ -697,7 +658,7 @@ object Similarity {
     val e = normalized(spark, sfDir)
     val ranked = OperatorCaches.persist(
       quantizedRanking(e, trainedCentroids(spark, sfDir), NumProbes)
-        .withColumn("is_q", defaultQueryPred)
+        .withColumn("is_q", queryPred)
         .filter(col("crn") === 1 ||
           (col("is_q") && col("crn") <= NumProbes)))
     val assign = ranked.filter(col("crn") === 1)
@@ -718,7 +679,7 @@ object Similarity {
       .groupBy("query_id")
       .agg(count(lit(1)).as("n_flagged"),
         max(struct(col("cos"), col("neighbor_id"))).as("best"))
-    e.filter(defaultQueryPred).select(col("vec_id").as("query_id"))
+    queryRows(e).select(col("vec_id").as("query_id"))
       .join(hits, Seq("query_id"), "left_outer")
       .select(col("query_id"),
         coalesce(col("n_flagged"), lit(0L)).as("n_flagged"),

@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.model.Schemas
 
@@ -11,7 +10,8 @@ import graft.model.Schemas
   *
   * Each table is `USING parquet PARTITIONED BY (month)` at an explicit
   * LOCATION, so the catalog entry is metadata over the same
-  * month-partitioned layout [[Views.writePartitioned]] produces — readers
+  * month-partitioned layout [[graft.streaming.NatsLikeStream.writer]]
+  * appends through [[Views.withMonth]] — readers
   * get catalog-driven partition pruning on the `toYYYYMM` axis exactly
   * like the reference's `PARTITION BY toYYYYMM(timestamp)`.
   *
@@ -47,9 +47,8 @@ object Ddl {
 
   /** Run the bootstrap; safe to call any number of times (IF NOT EXISTS).
     * Existing month directories at the locations are adopted via partition
-    * recovery (re-run after out-of-catalog appends, e.g. a streaming
-    * backfill, to surface new partitions — a real deployment writes
-    * through [[insertPartitioned]] instead).
+    * recovery: the streams append month partitions at the locations
+    * outside the catalog, and a re-run surfaces the new ones.
     *
     * The warehouse may live on any Hadoop filesystem (`hdfs://`,
     * `s3a://`, local paths alike): directories are created through the
@@ -136,43 +135,5 @@ object Ddl {
          |FROM $AllStreamsMv
          |LATERAL VIEW json_tuple(data, 'text', 'meta', 'id', 'timestamp') jx
          |  AS jx_text, jx_meta, jx_id, jx_ts""".stripMargin)
-  }
-
-  /** Bucketed catalog tables: the co-located-join layout for keys that
-    * are joined constantly at scale (the MergeTree ORDER BY analogue for
-    * Spark). Two tables bucketed by the same key into the same bucket
-    * count join WITHOUT a shuffle on either side — at 100 TB that is the
-    * difference between a co-located merge and re-shuffling both corpora.
-    * Idempotent like [[ensureTables]].
-    *
-    * Bucketed writes must go through `insertInto`/`saveAsTable` (path
-    * writes can't record bucket spec in the catalog). */
-  def ensureBucketed(spark: SparkSession, name: String, schema: StructType,
-      bucketKey: String, buckets: Int): Unit =
-    spark.sql(
-      s"""CREATE TABLE IF NOT EXISTS $name (${schema.toDDL})
-         |USING parquet
-         |CLUSTERED BY ($bucketKey) INTO $buckets BUCKETS""".stripMargin)
-
-  /** Write through the CATALOG (not a bare path): month-partitioned,
-    * clustered within partitions like [[Views.writePartitioned]], with
-    * dynamic partition overwrite so re-running a month's load replaces
-    * only that month — the catalog keeps serving every other partition. */
-  def insertPartitioned(df: DataFrame, table: String,
-      sortKeys: Seq[String]): Unit = {
-    val spark = df.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "dynamic")
-    try
-      Views.withMonth(df)
-        .repartition(col("month"))
-        .sortWithinPartitions(sortKeys.map(col): _*)
-        .write.mode("overwrite")
-        .insertInto(table)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
   }
 }

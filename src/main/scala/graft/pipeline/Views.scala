@@ -101,16 +101,4 @@ object Views {
     * scans only the touched months. */
   def withMonth(df: DataFrame): DataFrame =
     df.withColumn("month", toYYYYMM(col("timestamp")))
-
-  /** Write a table the way the reference lays it out: month-partitioned,
-    * clustered by the MergeTree ORDER BY keys (`init.sql:19,32,46,96`) via
-    * sortWithinPartitions → parquet min/max page stats give readers the
-    * same range-skipping the sparse primary index provides. */
-  def writePartitioned(df: DataFrame, path: String, sortKeys: Seq[String]): Unit =
-    withMonth(df)
-      .repartition(col("month"))
-      .sortWithinPartitions(sortKeys.map(col): _*)
-      .write.mode("overwrite")
-      .partitionBy("month")
-      .parquet(path)
 }

@@ -1,20 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import graft.pipeline.{Ingest, Views}
-
-/** Typed envelope row (mirrors [[graft.model.Schemas.envelope]]). */
-case class EnvelopeRow(subject: String, data: String,
-  metaTimestamp: java.sql.Timestamp, streamSeq: Long)
-
-/** Custom per-key state for [[NatsLikeStream.sequenceGaps]]. */
-case class SeqState(lastSeq: Long, total: Long, gaps: Long)
-
-/** One progress report per key per micro-batch. */
-case class SeqReport(key: String, batchRows: Long, total: Long,
-  lastSeq: Long, gaps: Long)
 
 /** The reference service as a Structured Streaming pipeline
   * (SURVEY.md §2.1–§2.4, §3.2–§3.3).
@@ -69,16 +58,11 @@ object NatsLikeStream {
     * tables, each month-partitioned like the reference MergeTree tables.
     * The analytics MV is the VariantType single-parse derivation
     * ([[Views.deriveAnalyticsVariant]]), the engine-native mapping of
-    * the analytics table's `data JSON` column. */
-  def start(envelopes: DataFrame, warehouse: String, checkpoint: String,
-      trigger: Trigger = BatchTimeout): StreamingQuery =
-    writer(envelopes, warehouse)
-      .trigger(trigger)
-      .option("checkpointLocation", checkpoint)
-      .start()
-
-  /** [[start]]'s writer before its trigger, checkpoint and start: what
-    * `Service` completes alongside its other streams. */
+    * the analytics table's `data JSON` column.
+    *
+    * Returned before its trigger, checkpoint and start: `Service` sets
+    * its trigger ([[BatchTimeout]], or `AvailableNow` with `--once`) and
+    * checkpoint and starts it alongside its other streams. */
   def writer(envelopes: DataFrame, warehouse: String): DataStreamWriter[Row] =
     envelopes.writeStream
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
@@ -134,37 +118,6 @@ object NatsLikeStream {
       .agg(count(lit(1)).as("n_msgs"), distinctAgg.as(distinctName))
       .select(col("win.start").as("hour_start"), col("stream"),
         col("n_msgs"), col(distinctName))
-  }
-
-  /** Custom stateful operator via `flatMapGroupsWithState` (the tool the
-    * built-in aggregations can't replace): per-stream sequence-gap
-    * monitoring. The reference's delivery is at-least-once with possible
-    * redelivery and loss-on-misack; this operator tracks the last seen
-    * JetStream sequence per stream (2nd subject segment) across
-    * micro-batches and reports holes — arbitrary keyed state, checkpointed
-    * and restored like any other streaming state. Emits one report per
-    * key per batch (Update mode). */
-  def sequenceGaps(spark: SparkSession, envelopes: DataFrame)
-      : Dataset[SeqReport] = {
-    import spark.implicits._
-    envelopes.as[EnvelopeRow]
-      .groupByKey(e => e.subject.split("\\.", 3).take(2).mkString("."))
-      .flatMapGroupsWithState[SeqState, SeqReport](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        case (key, rows, state: GroupState[SeqState]) =>
-          val prev = state.getOption.getOrElse(SeqState(-1L, 0L, 0L))
-          // order within the batch so gap counting is deterministic
-          val seqs = rows.map(_.streamSeq).toSeq.sorted
-          var last = prev.lastSeq
-          var gaps = prev.gaps
-          seqs.foreach { s =>
-            if (last >= 0 && s > last + 1) gaps += s - last - 1
-            if (s > last) last = s
-          }
-          val next = SeqState(last, prev.total + seqs.size, gaps)
-          state.update(next)
-          Iterator(SeqReport(key, seqs.size.toLong, next.total, next.lastSeq, next.gaps))
-      }
   }
 
   /** Stream-stream INTERVAL join — the continuous two-stream correlation

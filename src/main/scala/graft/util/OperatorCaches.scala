@@ -88,18 +88,16 @@ object OperatorCaches {
   }
 
   /** Unpersist the caches registered under `spark` and forget their
-    * handles. Safe to call any number of times; caches already dropped
-    * by other means (e.g. `clearCache()`) unpersist as a no-op. */
-  def release(spark: SparkSession, blocking: Boolean = false): Unit =
+    * handles, without waiting for the blocks to go. Safe to call any
+    * number of times; caches already dropped by other means (e.g.
+    * `clearCache()`) unpersist as a no-op. */
+  def release(spark: SparkSession): Unit =
     synchronized {
-      handles.remove(spark).foreach(_.foreach(_.unpersist(blocking)))
+      handles.remove(spark).foreach(_.foreach(_.unpersist()))
       // memoized seams die with the caches they reference; their
       // checkpointed blocks are reclaimed by the ContextCleaner once
       // the dropped DataFrames become unreachable
       memos.remove(spark)
       ()
     }
-
-  /** Number of currently-registered cache handles (test/monitoring aid). */
-  def registered: Int = synchronized(handles.valuesIterator.map(_.size).sum)
 }

@@ -22,18 +22,4 @@ object GraftSql {
   def analyzedPlan(df: Dataset[_])
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
-
-  /** Apply a [[SparkSessionExtensions]] configurator's function
-    * injections to a fresh registry and return it — lets a spec assert
-    * what `spark.sql.extensions=graft.GraftExtensions` would register
-    * without tearing down the shared test session (the builder ignores
-    * `withExtensions` when a session already exists). Uses the
-    * `private[sql]` `registerFunctions` hook, hence this package. */
-  def appliedFunctionRegistry(configure: SparkSessionExtensions => Unit)
-      : org.apache.spark.sql.catalyst.analysis.FunctionRegistry = {
-    val ext = new SparkSessionExtensions
-    configure(ext)
-    ext.registerFunctions(
-      new org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry)
-  }
 }

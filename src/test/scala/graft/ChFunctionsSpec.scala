@@ -5,7 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.functions.ChFunctions._
 
 /** ClickHouse-compatible scalar semantics (SURVEY §2.5 Q5–Q8, §2.3 P3):
-  * out-of-range → '', missing JSON key → ''/0, the chat_id indexing quirk. */
+  * out-of-range → '', missing JSON key → ''/0, the chat_id indexing quirk.
+  * JSON keys are extracted as the analytics MV extracts them: `json_tuple`,
+  * then the ClickHouse default (`chString`/`chUInt`/`chEpochTimestamp`). */
 class ChFunctionsSpec extends SparkSpec {
 
   private def subjects = {
@@ -49,9 +51,8 @@ class ChFunctionsSpec extends SparkSpec {
       "not json",
       ""
     ).toDF("data")
-    val r = df.select(
-      jsonString(col("data"), "text"),
-      jsonString(col("data"), "missing")).collect()
+    val r = df.select(json_tuple(col("data"), "text", "missing"))
+      .select(chString(col("c0")), chString(col("c1"))).collect()
     assert(r(0).toSeq === Seq("hi", ""))
     assert(r(1).toSeq === Seq("", ""))
     assert(r(2).toSeq === Seq("", ""))
@@ -65,7 +66,8 @@ class ChFunctionsSpec extends SparkSpec {
       """{"timestamp":"oops"}""",
       """{}"""
     ).toDF("data")
-    val r = df.select(jsonEpochTimestamp(col("data"), "timestamp").cast("string")).collect()
+    val r = df.select(json_tuple(col("data"), "timestamp"))
+      .select(chEpochTimestamp(col("c0")).cast("string")).collect()
     assert(r(0).getString(0) === "2024-01-01 00:00:00")
     assert(r(1).getString(0) === "1970-01-01 00:00:00")
     assert(r(2).getString(0) === "1970-01-01 00:00:00")
@@ -74,7 +76,7 @@ class ChFunctionsSpec extends SparkSpec {
   test("jsonUInt: numeric-as-string parses, missing → 0") {
     import spark.implicits._
     val df = Seq("""{"k":"42"}""", """{"k":42}""", """{}""").toDF("data")
-    val r = df.select(jsonUInt(col("data"), "k")).collect()
+    val r = df.select(json_tuple(col("data"), "k")).select(chUInt(col("c0"))).collect()
     assert(r.map(_.getLong(0)).toSeq === Seq(42L, 42L, 0L))
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.GraftSql
+import org.apache.spark.sql.AppliedExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
@@ -53,7 +53,7 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("GraftExtensions injects the same function list the registry API registers") {
-    val reg = GraftSql.appliedFunctionRegistry(new GraftExtensions)
+    val reg = AppliedExtensions.functionRegistry(new GraftExtensions)
     GraftFunctions.functions.foreach { case (id, _, _) =>
       assert(reg.functionExists(id), s"missing ${id.funcName}")
     }

@@ -16,6 +16,10 @@ class MomentLimbsSpec extends SparkSpec {
   private val Dim = 4
   private val NP = Dim * (Dim + 1) / 2
 
+  /** The exact integer `hi·2⁶⁴ + (lo unsigned)` of a [[Limb128]] pair. */
+  private def toBigInt(hi: Long, lo: Long): BigInt =
+    (BigInt(hi) << 64) + (BigInt(lo) & ((BigInt(1) << 64) - 1))
+
   test("Limb128: signed accumulate and merge match BigInt past ±2^63") {
     val rnd = new scala.util.Random(7)
     // values big enough that a few thousand adds cross the 2^63 line
@@ -26,14 +30,14 @@ class MomentLimbsSpec extends SparkSpec {
     vals.foreach { v =>
       Limb128.addSigned(buf, 0, 1, v)
       ref += v
-      assert(Limb128.toBigInt(buf(0), buf(1)) === ref)
+      assert(toBigInt(buf(0), buf(1)) === ref)
     }
     // split-merge: accumulate halves separately, merge, compare
     val a = new Array[Long](2); val b = new Array[Long](2)
     vals.take(2500).foreach(v => Limb128.addSigned(a, 0, 1, v))
     vals.drop(2500).foreach(v => Limb128.addSigned(b, 0, 1, v))
     Limb128.merge(a, 0, 1, b(0), b(1))
-    assert(Limb128.toBigInt(a(0), a(1)) === ref)
+    assert(toBigInt(a(0), a(1)) === ref)
   }
 
   /** Random corpus: negatives, magnitudes past 1.0, one null row, one
@@ -89,7 +93,7 @@ class MomentLimbsSpec extends SparkSpec {
     val sumHi = m.getAs[scala.collection.Seq[Long]]("sumHi")
     val sumLo = m.getAs[scala.collection.Seq[Long]]("sumLo")
     (0 until Dim).foreach { i =>
-      assert(Limb128.toBigInt(sumHi(i), sumLo(i)) ===
+      assert(toBigInt(sumHi(i), sumLo(i)) ===
         BigInt(refDims.getOrElse(i, java.math.BigInteger.ZERO)), s"dim $i")
     }
     val pi = m.getAs[scala.collection.Seq[Int]]("pi"); val pj = m.getAs[scala.collection.Seq[Int]]("pj")
@@ -98,7 +102,7 @@ class MomentLimbsSpec extends SparkSpec {
     (0 until NP).foreach { k =>
       val want = BigInt(refPairs.getOrElse((pi(k), pj(k)),
         java.math.BigInteger.ZERO))
-      assert(Limb128.toBigInt(pHi(k), pLo(k)) === want,
+      assert(toBigInt(pHi(k), pLo(k)) === want,
         s"pair (${pi(k)}, ${pj(k)})")
     }
   }
@@ -113,10 +117,10 @@ class MomentLimbsSpec extends SparkSpec {
     val want = Map((0, 0) -> 2, (0, 1) -> -2, (1, 1) -> 2)
       .map { case (ij, k) => ij -> BigInt(b) * b * k }
     (0 until 3).foreach { k =>
-      assert(Limb128.toBigInt(m.pairHi(k), m.pairLo(k)) ===
+      assert(toBigInt(m.pairHi(k), m.pairLo(k)) ===
         want((m.pi(k), m.pj(k))), s"pair (${m.pi(k)}, ${m.pj(k)})")
     }
-    assert(Limb128.toBigInt(m.sumHi(0), m.sumLo(0)) === BigInt(b) * 2)
+    assert(toBigInt(m.sumHi(0), m.sumLo(0)) === BigInt(b) * 2)
     val e = intercept[IllegalArgumentException](
       agg.reduce(agg.zero, Array(0.0, (b + 1).toDouble)))
     assert(e.getMessage.contains(s"dimension 1 scales ${(b + 1).toDouble} " +
@@ -131,10 +135,10 @@ class MomentLimbsSpec extends SparkSpec {
     val row = Array(b.toDouble, -b.toDouble)
     val m = agg.finish(agg.reduce(agg.reduce(agg.zero, row), row))
     (0 until 2).foreach { i =>
-      assert(Limb128.toBigInt(m.sqHi(i), m.sqLo(i)) === BigInt(b) * b * 2, s"sq dim $i")
+      assert(toBigInt(m.sqHi(i), m.sqLo(i)) === BigInt(b) * b * 2, s"sq dim $i")
     }
-    assert(Limb128.toBigInt(m.sumHi(0), m.sumLo(0)) === BigInt(b) * 2)
-    assert(Limb128.toBigInt(m.sumHi(1), m.sumLo(1)) === BigInt(b) * -2)
+    assert(toBigInt(m.sumHi(0), m.sumLo(0)) === BigInt(b) * 2)
+    assert(toBigInt(m.sumHi(1), m.sumLo(1)) === BigInt(b) * -2)
     val e = intercept[IllegalArgumentException](
       agg.reduce(agg.zero, Array(0.0, -(b + 1).toDouble)))
     assert(e.getMessage.contains(s"dimension 1 scales ${-(b + 1).toDouble} " +
@@ -152,9 +156,9 @@ class MomentLimbsSpec extends SparkSpec {
     val sumHi = m.getAs[scala.collection.Seq[Long]]("sumHi"); val sumLo = m.getAs[scala.collection.Seq[Long]]("sumLo")
     val sqHi = m.getAs[scala.collection.Seq[Long]]("sqHi"); val sqLo = m.getAs[scala.collection.Seq[Long]]("sqLo")
     (0 until Dim).foreach { i =>
-      assert(Limb128.toBigInt(sumHi(i), sumLo(i)) ===
+      assert(toBigInt(sumHi(i), sumLo(i)) ===
         BigInt(refDims.getOrElse(i, java.math.BigInteger.ZERO)), s"sum dim $i")
-      assert(Limb128.toBigInt(sqHi(i), sqLo(i)) ===
+      assert(toBigInt(sqHi(i), sqLo(i)) ===
         BigInt(refSqs.getOrElse(i, java.math.BigInteger.ZERO)), s"sq dim $i")
     }
   }

@@ -60,7 +60,7 @@ class OperatorsSpec extends SparkSpec {
 
   test("one-pass SimHash64 matches the explode+agg reference over the corpus") {
     val fast = Dedup.simhash(spark, Sf).collect().map(_.toSeq).toSeq
-    val ref = Dedup.simhashViaAgg(spark, Sf).collect().map(_.toSeq).toSeq
+    val ref = HofReference.simhashViaAgg(spark, Sf).collect().map(_.toSeq).toSeq
     assert(fast === ref)
   }
 

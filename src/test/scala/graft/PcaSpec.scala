@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.operators.Quantization
 
@@ -123,34 +124,48 @@ class PcaSpec extends SparkSpec {
     // reference: the unrolled HOF formulation the expression replaced
     val matvec = "transform(m, row -> aggregate(zip_with(row, %s, (x, y) -> x * y), " +
       "cast(0.0 as double), (acc, x) -> acc + x))"
-    var it = df.withColumn("v",
-      expr(s"transform(sequence(1, $n), x -> cast(1.0 as double))"))
-    for (_ <- 1 to Quantization.PcaIters) {
-      it = it
-        .withColumn("w", expr(matvec.format("v")))
-        .withColumn("mx", expr("array_max(transform(w, x -> abs(x)))"))
-        .withColumn("v",
-          expr("transform(w, x -> if(mx = 0.0d, cast(0.0 as double), x / mx))"))
-        .drop("w", "mx")
+    def reference(df: DataFrame): Row = {
+      var it = df.withColumn("v",
+        expr(s"transform(sequence(1, $n), x -> cast(1.0 as double))"))
+      for (_ <- 1 to Quantization.PcaIters) {
+        it = it
+          .withColumn("w", expr(matvec.format("v")))
+          .withColumn("mx", expr("array_max(transform(w, x -> abs(x)))"))
+          .withColumn("v",
+            expr("transform(w, x -> if(mx = 0.0d, cast(0.0 as double), x / mx))"))
+          .drop("w", "mx")
+      }
+      it
+        .withColumn("nrm", expr("sqrt(aggregate(zip_with(v, v, (x, y) -> x * y), " +
+          "cast(0.0 as double), (acc, x) -> acc + x))"))
+        .withColumn("u",
+          expr("transform(v, x -> if(nrm = 0.0d, cast(0.0 as double), x / nrm))"))
+        .withColumn("wu", expr(matvec.format("u")))
+        .withColumn("ray",
+          expr("aggregate(zip_with(u, wu, (x, y) -> x * y), " +
+            "cast(0.0 as double), (acc, x) -> acc + x)"))
+        .select("u", "ray").collect()(0)
     }
-    val ref = it
-      .withColumn("nrm", expr("sqrt(aggregate(zip_with(v, v, (x, y) -> x * y), " +
-        "cast(0.0 as double), (acc, x) -> acc + x))"))
-      .withColumn("u",
-        expr("transform(v, x -> if(nrm = 0.0d, cast(0.0 as double), x / nrm))"))
-      .withColumn("wu", expr(matvec.format("u")))
-      .withColumn("ray",
-        expr("aggregate(zip_with(u, wu, (x, y) -> x * y), " +
-          "cast(0.0 as double), (acc, x) -> acc + x)"))
-      .select("u", "ray").collect()(0)
-    val fast = df.select(org.apache.spark.sql.GraftSql.column(
+    def fast(df: DataFrame): Row = df.select(org.apache.spark.sql.GraftSql.column(
         graft.expressions.PowerIter(
           org.apache.spark.sql.GraftSql.expression(col("m")),
           Quantization.PcaIters)).as("pw"))
-      .select(col("pw.u").as("u"), col("pw.ray").as("ray")).collect()(0)
-    assert(ref.getSeq[Double](0) === fast.getSeq[Double](0),
+      .select(col("pw"), col("pw.u").as("u"), col("pw.ray").as("ray")).collect()(0)
+    val ref = reference(df)
+    val got = fast(df)
+    assert(ref.getSeq[Double](0) === got.getSeq[Double](1),
       "eigenvector diverges from the HOF formulation")
-    assert(ref.getDouble(1) === fast.getDouble(1),
+    assert(ref.getDouble(1) === got.getDouble(2),
       "Rayleigh numerator diverges from the HOF formulation")
+    // a short row or a null element: zip_with pads with nulls, so the
+    // HOF steps end with a null ray, and the expression gives null
+    for (bad <- Seq(
+        "transform(m, (row, i) -> if(i = 3, slice(row, 1, 11), row))",
+        "transform(m, (row, i) -> if(i = 3, " +
+          "transform(row, (x, j) -> if(j = 5, cast(null as double), x)), row))")) {
+      val m = df.withColumn("m", expr(bad))
+      assert(reference(m).isNullAt(1), s"HOF ray not null for $bad")
+      assert(fast(m).isNullAt(0), s"PowerIter not null for $bad")
+    }
   }
 }

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.model.Schemas
-import graft.pipeline.{Ingest, Views}
+import graft.pipeline.{Ddl, Ingest, Views}
 
 /** Ingest (P1–P4) + the MV cascade (Q2–Q4) on fixture envelopes. */
 class PipelineSpec extends SparkSpec {
@@ -22,6 +22,23 @@ class PipelineSpec extends SparkSpec {
       ("globex.crmabc.u3.chat7",
         "not json at all", ts("2024-02-29 23:59:59.999"), 3L)
     ).toDF("subject", "data", "metaTimestamp", "streamSeq")
+  }
+
+  /** Binds the reference table names to `wh`: a suite that ran earlier
+    * may have bootstrapped them at another warehouse, and IF NOT EXISTS
+    * keeps that one. */
+  private def freshTables(wh: String): Unit = {
+    Ddl.tables.foreach { case (name, _, _) => spark.sql(s"DROP TABLE IF EXISTS $name") }
+    Ddl.ensureTables(spark, wh)
+  }
+
+  /** Fills `table` the way `Service`'s streams do
+    * (`NatsLikeStream.writer`): a month-partitioned parquet append at the
+    * table's warehouse location, outside the catalog. The next
+    * `Ddl.ensureTables` adopts the new partitions. */
+  private def appendAt(wh: String, table: String, df: DataFrame): Unit = {
+    val sub = Ddl.tables.collectFirst { case (`table`, _, dir) => dir }.get
+    Views.withMonth(df).write.mode("append").partitionBy("month").parquet(s"$wh/$sub")
   }
 
   test("envelopeToRaw produces the raw schema with second-truncated timestamps") {
@@ -71,31 +88,17 @@ class PipelineSpec extends SparkSpec {
     assert(u.select("sequence").distinct().count() === 3)
   }
 
-  test("writePartitioned lays out month partitions (Q1)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_wh").toString
-    Views.writePartitioned(Ingest.envelopeToRaw(envelopes), s"$dir/raw",
-      Seq("timestamp", "chat_id", "sequence"))
-    val back = spark.read.parquet(s"$dir/raw")
-    assert(back.count() === 3)
-    // partition-column type inference reads "202401" back as int
-    assert(back.select(col("month").cast("string")).distinct()
-      .collect().map(_.getString(0)).sorted === Array("202401", "202402"))
-    // partition pruning: a month filter reads a single partition directory
-    val pruned = back.filter(col("month") === "202401")
-    assert(pruned.count() === 1)
-  }
-
   test("Q9 idempotent DDL: bootstrap re-runs safely; catalog writes round-trip") {
-    import graft.pipeline.Ddl
     // the quote in the warehouse name exercises the LOCATION literal
     // escaping (a raw interpolation would fail the bootstrap parse)
     val wh = java.nio.file.Files.createTempDirectory("graft_ddl'wh").toString
-    Ddl.ensureTables(spark, wh)
+    freshTables(wh)
     Ddl.ensureTables(spark, wh) // init.sql re-run: IF NOT EXISTS, no error
     assert(Ddl.tables.forall { case (name, _, _) =>
       spark.catalog.tableExists(name) })
     val raw = Ingest.envelopeToRaw(envelopes)
-    Ddl.insertPartitioned(raw, Ddl.AllStreams, Seq("timestamp", "sequence"))
+    appendAt(wh, Ddl.AllStreams, raw)
+    Ddl.ensureTables(spark, wh) // adopts the appended month partitions
     val got = spark.table(Ddl.AllStreams)
     assert(got.count() === 3)
     assert(got.select("month").distinct().collect().map(_.getString(0)).sorted
@@ -103,28 +106,31 @@ class PipelineSpec extends SparkSpec {
     // bootstrap again AFTER data: same table, data still served
     Ddl.ensureTables(spark, wh)
     assert(spark.table(Ddl.AllStreams).count() === 3)
-    // dynamic partition overwrite: reloading only January leaves February
-    val jan = raw.filter(col("timestamp") < lit(ts("2024-02-01 00:00:00")))
-    assert(jan.count() === 1)
-    Ddl.insertPartitioned(jan, Ddl.AllStreams, Seq("timestamp", "sequence"))
+    // a later append in a new month is served once a bootstrap adopts it
+    val mar = raw.filter(col("sequence") === 1L)
+      .withColumn("timestamp", lit(ts("2024-03-05 12:00:00")))
+    appendAt(wh, Ddl.AllStreams, mar)
     assert(spark.table(Ddl.AllStreams).count() === 3)
-    // the analytics table takes the derived MV through the catalog too
-    Ddl.insertPartitioned(Views.deriveAnalytics(raw), Ddl.Analytics,
-      Seq("timestamp"))
+    Ddl.ensureTables(spark, wh)
+    assert(spark.table(Ddl.AllStreams).count() === 4)
+    assert(spark.table(Ddl.AllStreams).filter(col("month") === "202403").count() === 1)
+    // the analytics table takes the derived MV the same way
+    appendAt(wh, Ddl.Analytics, Views.deriveAnalyticsVariant(raw))
+    Ddl.ensureTables(spark, wh)
     assert(spark.table(Ddl.Analytics).count() === 3)
     assert(spark.table(Ddl.Analytics).schema.fieldNames.init.toSeq ===
       Schemas.analytics.fieldNames.toSeq)
   }
 
   test("ensureViews: SQL MV cascade resolves and matches Views.* (Q2-Q4)") {
-    import graft.pipeline.Ddl
     val wh = java.nio.file.Files.createTempDirectory("graft_mv_wh").toString
-    Ddl.ensureTables(spark, wh)
+    freshTables(wh)
     val raw = Ingest.envelopeToRaw(envelopes)
     val supprt = Ingest.subjectFilter(raw, "globex.supprt")
     val crmabc = Ingest.subjectFilter(raw, "globex.crmabc")
-    Ddl.insertPartitioned(supprt, Ddl.StreamSupprt, Seq("timestamp", "sequence"))
-    Ddl.insertPartitioned(crmabc, Ddl.StreamCrmabc, Seq("timestamp", "sequence"))
+    appendAt(wh, Ddl.StreamSupprt, supprt)
+    appendAt(wh, Ddl.StreamCrmabc, crmabc)
+    Ddl.ensureTables(spark, wh)
     Ddl.ensureViews(spark)
     Ddl.ensureViews(spark) // CREATE OR REPLACE: idempotent re-bootstrap
     // Q2: pass-through views project exactly the raw columns
@@ -143,46 +149,5 @@ class PipelineSpec extends SparkSpec {
     assert(av.schema.fieldNames.toSeq === Schemas.analytics.fieldNames.toSeq)
     assert(av.orderBy("subject").collect().toSeq ===
       Views.deriveAnalytics(expectUnion).orderBy("subject").collect().toSeq)
-  }
-
-  test("bucketed tables co-locate joins: no shuffle on either join side") {
-    import graft.pipeline.Ddl
-    import org.apache.spark.sql.types._
-    import spark.implicits._
-    val schemaA = StructType(Seq(StructField("k", LongType),
-      StructField("v", StringType)))
-    val schemaB = StructType(Seq(StructField("k", LongType),
-      StructField("w", LongType)))
-    // clean slate: managed-table locations survive failed runs
-    Seq("bkt_a", "bkt_b").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = java.nio.file.Paths.get("spark-warehouse", t)
-      if (java.nio.file.Files.exists(loc)) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(loc).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-    }
-    Ddl.ensureBucketed(spark, "bkt_a", schemaA, "k", 4)
-    Ddl.ensureBucketed(spark, "bkt_a", schemaA, "k", 4) // idempotent
-    Ddl.ensureBucketed(spark, "bkt_b", schemaB, "k", 4)
-    (0L until 64L).map(i => (i, s"a$i")).toDF("k", "v")
-      .write.mode("overwrite").insertInto("bkt_a")
-    (0L until 64L).map(i => (i, i * 10)).toDF("k", "w")
-      .write.mode("overwrite").insertInto("bkt_b")
-    // disable broadcast for this assertion: the point is the bucket-aligned
-    // sort-merge path two LARGE tables would take (a tiny test table would
-    // otherwise broadcast and prove nothing about co-location)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = spark.table("bkt_a").join(spark.table("bkt_b"), "k")
-      assert(joined.count() === 64)
-      // the assertion reads the static plan (bucketed scans are decided
-      // at planning time, before any adaptive re-optimization)
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ in:\n$plan")
-      assert(!plan.contains("Exchange"), s"unexpected shuffle in:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 }

@@ -95,19 +95,6 @@ class ProductQuantizationSpec extends SparkSpec {
     OperatorCaches.release(spark)
   }
 
-  test("adc top-k honors a non-prefix query set") {
-    import spark.implicits._
-    val ids = Seq(3L, 17L, 23L)
-    val custom = ProductQuantization.adcTopK(spark, Sf, Some(ids.toDF("vec_id")))
-    val default = ProductQuantization.adcTopK(spark, Sf)
-    val got = custom.select("query_id").distinct().collect()
-      .map(_.getLong(0)).sorted.toSeq
-    assert(got === ids)
-    assert(custom.filter(col("query_id") === 3L).collect().toSeq ===
-      default.filter(col("query_id") === 3L).collect().toSeq)
-    OperatorCaches.release(spark)
-  }
-
   test("ivf-pq top-k: every neighbor comes from a probed cell and is " +
       "ranked by the exact ADC score (recomputed independently from the " +
       "public encode table); ranks are consecutive with the (adc desc, " +

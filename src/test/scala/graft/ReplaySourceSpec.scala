@@ -72,7 +72,8 @@ class ReplaySourceSpec extends SparkSpec {
     writeBacklog(dir, (0 until 30).map(line))
     val wh = Files.createTempDirectory("graft_replay_pipe_wh").toString
     val cp = Files.createTempDirectory("graft_replay_pipe_cp").toString
-    val q = NatsLikeStream.start(readReplay(dir, 1000), wh, cp, Trigger.AvailableNow())
+    val q = NatsLikeStream.writer(readReplay(dir, 1000), wh)
+      .trigger(Trigger.AvailableNow()).option("checkpointLocation", cp).start()
     q.awaitTermination()
     // 10 of 30 are crmabc → filtered by the subject pattern (S2)
     assert(spark.read.parquet(s"$wh/raw").count() === 20)

@@ -37,7 +37,8 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val src = MemoryStream[Env]
     src.addData(envs(0, 30): _*)
-    val q = NatsLikeStream.start(src.toDF(), wh, cp, Trigger.AvailableNow())
+    val q = NatsLikeStream.writer(src.toDF(), wh)
+      .trigger(Trigger.AvailableNow()).option("checkpointLocation", cp).start()
     q.awaitTermination()
     val raw = spark.read.parquet(s"$wh/raw")
     val analytics = spark.read.parquet(s"$wh/analytics")
@@ -47,7 +48,8 @@ class StreamingSpec extends SparkSpec {
     assert(analytics.columns.contains("message_text"))
     // second epoch appends incrementally (MV semantics: per insert block)
     src.addData(envs(30, 15): _*)
-    val q2 = NatsLikeStream.start(src.toDF(), wh, cp, Trigger.AvailableNow())
+    val q2 = NatsLikeStream.writer(src.toDF(), wh)
+      .trigger(Trigger.AvailableNow()).option("checkpointLocation", cp).start()
     q2.awaitTermination()
     assert(spark.read.parquet(s"$wh/raw").count() === 30)
   }
@@ -59,11 +61,13 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val src = MemoryStream[Env]
     src.addData(envs(0, 10): _*)
-    val q = NatsLikeStream.start(src.toDF(), wh, cp, Trigger.AvailableNow())
+    val q = NatsLikeStream.writer(src.toDF(), wh)
+      .trigger(Trigger.AvailableNow()).option("checkpointLocation", cp).start()
     q.awaitTermination()
     val n1 = spark.read.parquet(s"$wh/raw").count()
     // restart with NO new data: committed epochs must not replay
-    val q2 = NatsLikeStream.start(src.toDF(), wh, cp, Trigger.AvailableNow())
+    val q2 = NatsLikeStream.writer(src.toDF(), wh)
+      .trigger(Trigger.AvailableNow()).option("checkpointLocation", cp).start()
     q2.awaitTermination()
     assert(spark.read.parquet(s"$wh/raw").count() === n1)
   }
@@ -202,44 +206,6 @@ class StreamingSpec extends SparkSpec {
     assert(unmatched.length === 1)
     assert(unmatched.head.isNullAt(0), "click_id must be null-padded")
     assert(unmatched.head.getLong(2) === 3L)
-  }
-
-  test("sequenceGaps: custom keyed state persists across micro-batches and counts holes") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val cp = Files.createTempDirectory("graft_gaps_cp").toString
-    val src = MemoryStream[Env]
-    val reports = new scala.collection.concurrent.TrieMap[Long, Array[org.apache.spark.sql.Row]]()
-    def run(): Unit = {
-      // memory sink can't recover from a checkpoint; foreachBatch can
-      val q = NatsLikeStream.sequenceGaps(spark, src.toDF())
-        .writeStream
-        .outputMode("update")
-        .option("checkpointLocation", cp)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (ds: org.apache.spark.sql.Dataset[graft.streaming.SeqReport], id: Long) =>
-          reports.put(id, ds.toDF().collect()); ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-    // batch 1: contiguous sequences 0..9 on one stream
-    src.addData((0L until 10L).map(i =>
-      Env("globex.supprt.u1", "{}", java.sql.Timestamp.valueOf("2024-01-15 10:00:00"), i)): _*)
-    run()
-    val r1 = reports.values.flatten
-      .filter(_.getAs[String]("key") == "globex.supprt").maxBy(_.getAs[Long]("total"))
-    assert(r1.getAs[Long]("total") === 10)
-    assert(r1.getAs[Long]("gaps") === 0)
-    // batch 2: sequences 12..15 — sequence 10 and 11 were lost
-    src.addData((12L until 16L).map(i =>
-      Env("globex.supprt.u9", "{}", java.sql.Timestamp.valueOf("2024-01-15 10:10:00"), i)): _*)
-    run()
-    val r2 = reports.values.flatten
-      .filter(_.getAs[String]("key") == "globex.supprt").maxBy(_.getAs[Long]("total"))
-    assert(r2.getAs[Long]("total") === 14)
-    assert(r2.getAs[Long]("lastSeq") === 15)
-    assert(r2.getAs[Long]("gaps") === 2)
   }
 
   test("windowedCounts batch flavor aggregates per hour and stream") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
 import graft.HofReference.dotHof
@@ -16,7 +17,8 @@ class VectorFunctionsSpec extends SparkSpec {
   }
 
   test("dot/norm/cosine basics") {
-    val r = df2.select(dot(col("a"), col("b")), cosine(col("a"), col("b"))).collect()
+    val r = df2.select(dot(col("a"), col("b")),
+      dot(col("a"), col("b")) / (norm(col("a")) * norm(col("b")))).collect()
     assert(r(0).getDouble(0) === 0.0)
     assert(r(0).getDouble(1) === 0.0)
     assert(r(1).getDouble(0) === 14.0)
@@ -57,8 +59,9 @@ class VectorFunctionsSpec extends SparkSpec {
       Seq((78L, Array.fill(8)(Double.NaN)), (79L, vec()))
     val e = vecs.toDF("vec_id", "u")
     val c = cands.toDF("cid", "cu")
-    for (k <- Seq(1, 3)) {
-      // reference: the broadcast-join + row_number window formulation
+    /** TopDots' (vec_id, cid, crn), checked against the broadcast-join +
+      * row_number window formulation. */
+    def checked(e: DataFrame, c: DataFrame, k: Int): DataFrame = {
       val byVec = Window.partitionBy("vec_id")
         .orderBy(col("cdot").desc, col("cid"))
       val ref = e.join(broadcast(c))
@@ -75,7 +78,19 @@ class VectorFunctionsSpec extends SparkSpec {
       assert(ref.count() === fast.count(), s"k=$k row counts differ")
       assert(ref.exceptAll(fast).isEmpty && fast.exceptAll(ref).isEmpty,
         s"k=$k TopDots diverges from the window formulation")
+      fast
     }
+    for (k <- Seq(1, 3)) checked(e, c, k)
+    // a ragged or null-element candidate has a null dot, which the
+    // window's ORDER BY … DESC puts after every dot (ties by id): for
+    // u = [1, 1], candidate 2's dot 2.0 beats candidate 1's null, not a
+    // partial dot of 5.0 over the shorter array
+    val u11 = Seq((0L, Array(1.0, 1.0))).toDF("vec_id", "u")
+    val odd = spark.sql("SELECT 1L AS cid, array(5d) AS cu UNION ALL " +
+      "SELECT 2L, array(1d, 1d) UNION ALL SELECT 3L, array(9d, CAST(NULL AS double))")
+    assert(checked(u11, odd, 1).collect().map(_.getLong(1)).toSeq === Seq(2L))
+    assert(checked(u11, odd, 3).orderBy("crn").collect().map(_.getLong(1)).toSeq ===
+      Seq(2L, 1L, 3L))
     // fewer candidates than k: emits only what exists
     val one = Seq((0L, vec())).toDF("cid", "cu").groupBy()
       .agg(sort_array(collect_list(struct(col("cid"), col("cu")))).as("carr"))

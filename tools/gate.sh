@@ -92,6 +92,22 @@ if [ -n "$java_loops" ]; then
   echo "$java_loops"
   exit 1
 fi
+# Operators and utilities take only what their callers vary. A defaulted
+# parameter that no caller sets is a constant in disguise, and an
+# Option[DataFrame] parameter that no query passes is a second code path
+# that only specs run (the six ANN entry points once carried a query-set
+# one). Fail on a defaulted or Option[DataFrame] parameter in
+# src/main/scala/graft/operators or src/main/scala/graft/util; comment
+# lines and def/val/var declarations are not parameters.
+param_defaults=$(grep -rnE '\b[A-Za-z_][A-Za-z0-9_]*\s*:\s*[^=(){};]+=([^=>]|$)|Option\[DataFrame\]' \
+  src/main/scala/graft/operators src/main/scala/graft/util \
+  | grep -vE '^[^:]+:[0-9]+:\s*(\*|/\*|//)' \
+  | grep -vE '\b(def|val|var)\s+[A-Za-z_][A-Za-z0-9_]*\s*:' || true)
+if [ -n "$param_defaults" ]; then
+  echo "gate: defaulted or Option[DataFrame] parameter in graft.operators/graft.util:"
+  echo "$param_defaults"
+  exit 1
+fi
 # Compile (main + test), then the analysis-only smoke: resolve every
 # query plan + entry() at sf0.001 (graft.Analyze -- df.schema only, no
 # execution, ~30 s warm). Round 7's events/timestamp_ntz environment

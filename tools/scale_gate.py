@@ -131,6 +131,15 @@ def main():
     failures = []
 
     if not args.skip_correctness:
+        # check.py derives x101/x102/x117's expected rows from x2's pairs:
+        # from x2's verified output when the same run carries it, else
+        # through the DuckDB pair SQL (1403 s for x117 at sf1). Verify x2
+        # alongside them; the bench phases keep the named subset.
+        verified = list(args.queries)
+        if (set(verified) & {"x101_dup_components", "x102_canonical_keep",
+                             "x117_corpus_build"}
+                and "x2_minhash_lsh" not in verified):
+            verified.append("x2_minhash_lsh")
         vout = "/tmp/scale_gate_verify"
         run(["rm", "-rf", vout])
         # Verify defaults to local[4] without SPARK_GRAFT_CPUS — on a
@@ -147,16 +156,16 @@ def main():
             excl = " --exclude=" + args.skip_oracle
         v = run(["sbt", "-batch",
                  f"runMain graft.Verify {args.big_dir} {vout}{excl} "
-                 + " ".join(args.queries)],
+                 + " ".join(verified)],
                 env=dict(os.environ, SPARK_GRAFT_CPUS=CPUS,
                          SPARK_GRAFT_VERIFY_WIDE="1"))
         if v.returncode != 0:
             sys.exit(f"Verify failed at {args.big_dir}")
         chk = [sys.executable, "tools/check.py", args.big_dir, vout]
         skip = set(filter(None, args.skip_oracle.split(",")))
-        if args.queries:
+        if verified:
             oracle = json.load(open(os.path.join(vout, "oracle_sql.json")))
-            skip |= set(oracle) - set(args.queries)
+            skip |= set(oracle) - set(verified)
         if skip:
             chk += ["--skip", ",".join(sorted(skip))]
         if run(chk).returncode != 0:
