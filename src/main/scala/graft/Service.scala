@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, StreamingQueryException, Trigger}
 import graft.config.GraftConfig
 import graft.logging.GraftLogger
@@ -23,7 +23,9 @@ import graft.streaming.{CheckpointCommits, CorpusStream, NatsLikeStream, Session
   * `--sink native` speaks the NATIVE TCP protocol the reference's
   * clickhouse-go driver uses (port 9000, `connection/connection.go:44-60`:
   * hello handshake, INSERT query packets, LZ4-compressed columnar blocks
-  * with CityHash128 checksums).
+  * with CityHash128 checksums). These three start under
+  * [[graft.streaming.NatsLikeStream.CadenceConf]]: one state partition and
+  * interpreted projections, sized to the reference's 1000-row epochs.
   *
   * Side streams run over the same envelopes, each under its own
   * checkpoint. `--sessions` appends x72 closed gap-sessions
@@ -119,8 +121,48 @@ object Service {
   }
 
   /** One streaming query: its name, its checkpoint directory under the
-    * warehouse, and how it writes up to the checkpoint, trigger and start. */
-  private final case class Stream(name: String, checkpoint: String, writer: DataStreamWriter[_])
+    * warehouse, how it writes up to the checkpoint, trigger and start, and
+    * the session conf its start clones in place of the session's own. */
+  private final case class Stream(name: String, checkpoint: String, writer: DataStreamWriter[_],
+      conf: Seq[(String, String)] = Nil)
+
+  /** The `--sink blocks|http|native` query: subject-filtered envelopes,
+    * deduplicated by sequence ([[NatsLikeStream.dedupedRaw]]), into
+    * [[graft.sinks.BatchInsertSinkProvider]] with the client settings of
+    * the config's `ch://` URL. Returned before its trigger, checkpoint and
+    * start; [[run]] starts it under [[NatsLikeStream.CadenceConf]]. */
+  private[graft] def blockSink(envelopes: DataFrame, cfg: GraftConfig, mode: String,
+      warehouse: String, log: GraftLogger): DataStreamWriter[Row] = {
+    // the ch:// URL's client settings drive the block sink; a bad URL
+    // fails like the reference's DSN parse (connection.go:31-38)
+    val conn = GraftConfig.parseSinkUrl(cfg.clickhouseUrl).fold(
+      err => { log.error(err); throw new IllegalArgumentException(err) }, identity)
+    log.info("block sink", "mode" -> mode, "compression" -> conn.compression,
+      "maxExecutionTimeSec" -> conn.maxExecutionTimeSec)
+    NatsLikeStream.dedupedRaw(Ingest.subjectFilter(envelopes, NatsLikeStream.SubjectPrefix))
+      .writeStream
+      .format("graft.sinks.BatchInsertSinkProvider")
+      .option("path", s"$warehouse/blocks")
+      .option("batchSize", NatsLikeStream.MaxRowsPerTrigger)
+      .options(conn.writerOptions)
+      // http/native: the DSN selects a REAL wire path — blocks go to
+      // the ClickHouse HTTP interface or the native TCP protocol
+      // (the reference's actual wire) instead of staging as files
+      .options(if (mode == "blocks") Map.empty[String, String] else Map(
+        "url" -> cfg.clickhouseUrl, "table" -> graft.pipeline.Ddl.AllStreams, "wire" -> mode))
+  }
+
+  /** `body` with `conf` set on `spark`'s session; each key's earlier value,
+    * or its absence, is restored afterwards. */
+  private[graft] def withConf[T](spark: SparkSession, conf: Seq[(String, String)])(body: => T): T = {
+    val set = spark.conf.getAll
+    val saved = conf.map { case (k, _) => k -> set.get(k) }
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 
   /** Bootstrap, capture, then every stream the options ask for, started
     * from one table and awaited together on `spark`, which the caller owns
@@ -179,27 +221,11 @@ object Service {
     val mainStream = opts("sink") match {
       case "parquet" => Stream("parquet", "_checkpoint", NatsLikeStream.writer(envelopes, warehouse))
       case mode =>
-        // the ch:// URL's client settings drive the block sink; a bad URL
-        // fails like the reference's DSN parse (connection.go:31-38)
-        val conn = GraftConfig.parseSinkUrl(cfg.clickhouseUrl).fold(
-          err => { log.error(err); throw new IllegalArgumentException(err) }, identity)
-        log.info("block sink", "mode" -> mode, "compression" -> conn.compression,
-          "maxExecutionTimeSec" -> conn.maxExecutionTimeSec)
         // own checkpoint: the parquet pipeline's offsets/state are a
         // DIFFERENT query graph — sharing its checkpoint would skip
         // already-committed offsets (blocks silently never written)
-        Stream(mode, "_checkpoint_blocks", NatsLikeStream.dedupedRaw(
-            Ingest.subjectFilter(envelopes, NatsLikeStream.SubjectPrefix))
-          .writeStream
-          .format("graft.sinks.BatchInsertSinkProvider")
-          .option("path", s"$warehouse/blocks")
-          .option("batchSize", NatsLikeStream.MaxRowsPerTrigger)
-          .options(conn.writerOptions)
-          // http/native: the DSN selects a REAL wire path — blocks go to
-          // the ClickHouse HTTP interface or the native TCP protocol
-          // (the reference's actual wire) instead of staging as files
-          .options(if (mode == "blocks") Map.empty[String, String] else Map(
-            "url" -> cfg.clickhouseUrl, "table" -> graft.pipeline.Ddl.AllStreams, "wire" -> mode)))
+        Stream(mode, "_checkpoint_blocks", blockSink(envelopes, cfg, mode, warehouse, log),
+          NatsLikeStream.CadenceConf)
     }
     val streams = Seq(
       Some(mainStream),
@@ -228,8 +254,11 @@ object Service {
     // a query that ended earlier in this session must not end this wait
     spark.streams.resetTerminated()
     try {
-      streams.foreach { s => started ::= s.name -> s.writer.queryName(s.name)
-        .option("checkpointLocation", s"$warehouse/${s.checkpoint}").trigger(trigger).start() }
+      // a started query keeps the conf it cloned, so a stream's own conf
+      // is set around its start() alone
+      streams.foreach { s => started ::= s.name -> withConf(spark, s.conf)(s.writer
+        .queryName(s.name).option("checkpointLocation", s"$warehouse/${s.checkpoint}")
+        .trigger(trigger).start()) }
       def failed = started.find(_._2.exception.isDefined)
       while (failed.isEmpty && started.exists(_._2.isActive)) {
         try spark.streams.awaitAnyTermination() catch { case _: StreamingQueryException => }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.model.Schemas
 
@@ -46,9 +47,11 @@ object Ddl {
     s.replace("\\", "\\\\").replace("'", "\\'")
 
   /** Run the bootstrap; safe to call any number of times (IF NOT EXISTS).
-    * Existing month directories at the locations are adopted via partition
-    * recovery: the streams append month partitions at the locations
-    * outside the catalog, and a re-run surfaces the new ones.
+    * A table the session bound to another warehouse's location is bound
+    * to this one's instead. Existing month directories at the locations
+    * are adopted via partition recovery: the streams append month
+    * partitions at the locations outside the catalog, and a re-run
+    * surfaces the new ones.
     *
     * The warehouse may live on any Hadoop filesystem (`hdfs://`,
     * `s3a://`, local paths alike): directories are created through the
@@ -66,12 +69,18 @@ object Ddl {
       val loc = new org.apache.hadoop.fs.Path(base, sub)
       val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
       fs.mkdirs(loc)
-      val qualified = fs.makeQualified(loc).toString
+      val qualified = fs.makeQualified(loc)
+      // IF NOT EXISTS keeps a table a bootstrap on another warehouse made:
+      // drop it (external, so its files stay) and create it here
+      val id = TableIdentifier(name)
+      val catalog = spark.sessionState.catalog
+      if (catalog.tableExists(id) && catalog.getTableMetadata(id).location != qualified.toUri)
+        spark.sql(s"DROP TABLE $name")
       spark.sql(
         s"""CREATE TABLE IF NOT EXISTS $name (${withMonthField(schema).toDDL})
            |USING parquet
            |PARTITIONED BY (month)
-           |LOCATION '${sqlString(qualified)}'""".stripMargin)
+           |LOCATION '${sqlString(qualified.toString)}'""".stripMargin)
       // adopt pre-existing partition directories (MSCK), also idempotent
       spark.sql(s"MSCK REPAIR TABLE $name")
     }

@@ -57,9 +57,11 @@ import graft.config.GraftConfig
   *    whose writer outlives it fails the epoch before its next block is
   *    sent (an in-thread check cannot interrupt a send blocked in the OS
   *    — the guarantee is bounded epochs, not bounded syscalls).
-  *  - ping-on-open (`connection.go:69-72`): the target is probed when the
-  *    write is built (`GET /ping`, native Ping/Pong, or a probe file), so
-  *    an unreachable target fails the query at start, not at first commit.
+  *  - ping-on-open (`connection.go:69-72`): the target is probed once per
+  *    query, when its first micro-batch builds the write (`GET /ping`,
+  *    native Ping/Pong, or a probe file), so an unreachable target fails
+  *    the query at start, before its first epoch writes anything. Later
+  *    epochs do not probe again: their blocks fail on their own.
   *  - a `wire`, `compression` or `insertFormat` outside its choices, a
   *    `batchSize` ≤ 0, or `compression=none` on the native wire fails
   *    `start()` with an IllegalArgumentException.
@@ -118,6 +120,12 @@ final class BatchInsertTable(path: String, batchSize: Int,
   override def schema(): StructType = new StructType()
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.STREAMING_WRITE)
+
+  /** Set once the target answered its ping. Spark builds the write again
+    * every time it plans a micro-batch, three times per epoch; a table is
+    * built once per `start()`, so the query pings once. */
+  @volatile private var pinged = false
+
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write = new Write {
@@ -134,7 +142,7 @@ final class BatchInsertTable(path: String, batchSize: Int,
           }
           val factory = BlockWriterFactory(path, batchSize, compression,
             maxExecutionTimeSec, info.schema(), http, insertFormat, native)
-          factory.ping()
+          if (!pinged) { factory.ping(); pinged = true }
           new BatchInsertStreamingWrite(factory)
         }
       }
@@ -262,8 +270,8 @@ final case class BlockWriterFactory(path: String, batchSize: Int,
     native: Option[NativeTarget] = None)
     extends StreamingDataWriterFactory {
 
-  /** Ping-on-open (`connection.go:69-72`), run driver-side when the write
-    * is built; the file target must accept a probe file. */
+  /** Ping-on-open (`connection.go:69-72`), run driver-side when a query's
+    * first write is built; the file target must accept a probe file. */
   def ping(): Unit = (native, http) match {
     case (Some(target), _) => target.ping()
     case (None, Some(target)) => target.ping()

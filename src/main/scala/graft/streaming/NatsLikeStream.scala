@@ -35,6 +35,30 @@ object NatsLikeStream {
   /** Reference `batchSize` (`main.go:26`). */
   val MaxRowsPerTrigger = 1000
 
+  /** Session conf `Service` sets around the `start()` of its block-sink
+    * query ([[dedupedRaw]] into `--sink blocks|http|native`). At
+    * [[MaxRowsPerTrigger]] = 1000 rows an epoch's fixed cost, paid again
+    * on every epoch, outweighs its per-row work:
+    *
+    *  - `spark.sql.shuffle.partitions` = 1: one dedup-state task handles
+    *    an epoch's 1000 rows, where one task per core writes a delta, a
+    *    checksum and their two `.crc` files per partition and opens one
+    *    sink connection per partition. A checkpoint that already exists
+    *    keeps the partition count its offset log records.
+    *  - the codegen factory mode = `NO_CODEGEN`: projections and
+    *    predicates run interpreted (whole-stage codegen stays on). Spark
+    *    caches compiled classes per `SparkContext` classloader, so every
+    *    service start compiled them again, and the late-event predicate
+    *    carries the watermark as a literal, so every epoch compiled one
+    *    more; interpreting 1000 rows costs less than compiling them.
+    *
+    * A started query keeps the conf it cloned, so `Service` restores the
+    * session's values after `start()`: its side streams and the batch
+    * surface keep the session defaults. */
+  val CadenceConf: Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> "1",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
   /** Reference `batchTimeout` (`main.go:27`). */
   val BatchTimeout: Trigger = Trigger.ProcessingTime("5 seconds")
 

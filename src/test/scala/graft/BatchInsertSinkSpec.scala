@@ -217,6 +217,30 @@ class BatchInsertSinkSpec extends SparkSpec {
     } finally ch.close()
   }
 
+  test("ping-on-open: a query pings its target once, however many epochs it runs") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val ch = new StubClickHouse()
+    try {
+      val src = MemoryStream[Env]
+      val q = src.toDF().writeStream
+        .format("graft.sinks.BatchInsertSinkProvider")
+        .option("url", s"ch://writer:secret@127.0.0.1:${ch.port}")
+        .option("table", "t")
+        .option("checkpointLocation", Files.createTempDirectory("graft_http_pings_cp").toString)
+        .start()
+      try (0 until 3).foreach { i =>
+        src.addData(envs(10L * i, 10): _*)
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(q.recentProgress.count(_.numInputRows > 0) === 3)
+      assert(ch.pings.get() === 1)
+      val lines = ch.inserts.asScala.toList
+        .flatMap(p => new String(p._3, "UTF-8").split("\n")).filter(_.nonEmpty)
+      assert(lines.size === 30)
+    } finally ch.close()
+  }
+
   test("ch:// HTTP wire path: a rejected block fails the epoch (at-least-once)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -13,8 +13,10 @@ import graft.sinks.{NativeBlockCodec, NativeFraming, NativeProto}
   * header block → data blocks → EndOfStream). Every inbound compressed
   * frame goes through [[NativeFraming.readFrame]], so CityHash128
   * checksums are VERIFIED server-side; decoded rows accumulate in
-  * [[rows]] for assertions. `failHello = true` turns it into an
-  * auth-rejecting server (Exception packet in place of the hello);
+  * [[rows]] and each block's decompressed body in [[blocks]] for
+  * assertions, and [[connections]] counts the connections accepted.
+  * `failHello = true` turns it into an auth-rejecting server (Exception
+  * packet in place of the hello);
   * `chatty = true` makes it interleave ProfileInfo and (uncompressed)
   * Log packets into the INSERT response, as a real server under
   * `send_logs_level` does — the client must skip them. `serverRevision`
@@ -37,14 +39,20 @@ final class NativeStubServer(schema: StructType, failHello: Boolean = false,
   /** (columnName → value) maps, one per decoded inserted row. */
   val rows = new ArrayBuffer[Map[String, Any]]()
   val queries = new ArrayBuffer[String]()
+  /** Each committed data block's decompressed body, in arrival order. */
+  val blocks = new ArrayBuffer[Array[Byte]]()
+  /** Connections accepted, a ping's included. */
+  @volatile var connections = 0
   val settings = new ArrayBuffer[(String, String)]()
   @volatile var framesSeen = 0
   @volatile var cancelsSeen = 0
   @volatile private var failedOnce = false
+  private var lastFrame: Array[Byte] = null
 
   private val acceptThread = new Thread(() => {
     try while (!server.isClosed) {
       val s = server.accept()
+      connections += 1
       serve(s) // sink writers connect sequentially in these specs
     } catch { case _: SocketException | _: EOFException => () }
   }, "native-stub-accept")
@@ -123,9 +131,11 @@ final class NativeStubServer(schema: StructType, failHello: Boolean = false,
             out.flush()
             // data blocks until the empty terminator
             val stmtRows = new ArrayBuffer[Map[String, Any]]()
+            val stmtBlocks = new ArrayBuffer[Array[Byte]]()
             var aborted = false
             var block = readDataPacket(in)
             while (!aborted && block.rows > 0) {
+              stmtBlocks += lastFrame
               val cols = block.columns
               (0 until block.rows).foreach { r =>
                 stmtRows += cols.map(c => c.name -> c.values(r)).toMap
@@ -153,6 +163,7 @@ final class NativeStubServer(schema: StructType, failHello: Boolean = false,
               while (drain.rows > 0) drain = readDataPacket(in)
             } else {
               rows ++= stmtRows
+              blocks ++= stmtBlocks
               // progress (5-field shape: every real server at the
               // negotiated revision appends written_rows/written_bytes —
               // the client desyncs here if it reads only 3) + chatter +
@@ -201,7 +212,8 @@ final class NativeStubServer(schema: StructType, failHello: Boolean = false,
     require(readVarint(in) == ClientData, "expected client data packet")
     readString(in) // temporary-table name
     framesSeen += 1
-    NativeBlockCodec.decode(NativeFraming.readFrame(in))
+    lastFrame = NativeFraming.readFrame(in)
+    NativeBlockCodec.decode(lastFrame)
   }
 
   def close(): Unit = server.close()

@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 import graft.model.Schemas
 import graft.pipeline.{Ddl, Ingest, Views}
@@ -22,14 +23,6 @@ class PipelineSpec extends SparkSpec {
       ("globex.crmabc.u3.chat7",
         "not json at all", ts("2024-02-29 23:59:59.999"), 3L)
     ).toDF("subject", "data", "metaTimestamp", "streamSeq")
-  }
-
-  /** Binds the reference table names to `wh`: a suite that ran earlier
-    * may have bootstrapped them at another warehouse, and IF NOT EXISTS
-    * keeps that one. */
-  private def freshTables(wh: String): Unit = {
-    Ddl.tables.foreach { case (name, _, _) => spark.sql(s"DROP TABLE IF EXISTS $name") }
-    Ddl.ensureTables(spark, wh)
   }
 
   /** Fills `table` the way `Service`'s streams do
@@ -92,7 +85,7 @@ class PipelineSpec extends SparkSpec {
     // the quote in the warehouse name exercises the LOCATION literal
     // escaping (a raw interpolation would fail the bootstrap parse)
     val wh = java.nio.file.Files.createTempDirectory("graft_ddl'wh").toString
-    freshTables(wh)
+    Ddl.ensureTables(spark, wh)
     Ddl.ensureTables(spark, wh) // init.sql re-run: IF NOT EXISTS, no error
     assert(Ddl.tables.forall { case (name, _, _) =>
       spark.catalog.tableExists(name) })
@@ -122,9 +115,35 @@ class PipelineSpec extends SparkSpec {
       Schemas.analytics.fieldNames.toSeq)
   }
 
+  test("Q9: a bootstrap on a second warehouse serves that warehouse's appends") {
+    def createTime = spark.sessionState.catalog
+      .getTableMetadata(TableIdentifier(Ddl.AllStreams)).createTime
+    val raw = Ingest.envelopeToRaw(envelopes)
+    val first = java.nio.file.Files.createTempDirectory("graft_ddl_first").toString
+    Ddl.ensureTables(spark, first)
+    appendAt(first, Ddl.AllStreams, raw)
+    Ddl.ensureTables(spark, first)
+    assert(spark.table(Ddl.AllStreams).count() === 3)
+    // a re-run on the same warehouse keeps its table
+    val created = createTime
+    Thread.sleep(5)
+    Ddl.ensureTables(spark, first)
+    assert(createTime === created)
+    // the same session bootstraps a second warehouse and serves its appends
+    val second = java.nio.file.Files.createTempDirectory("graft_ddl_second").toString
+    Ddl.ensureTables(spark, second)
+    assert(spark.table(Ddl.AllStreams).count() === 0)
+    appendAt(second, Ddl.AllStreams, raw.filter(col("sequence") === 1L))
+    Ddl.ensureTables(spark, second)
+    assert(spark.table(Ddl.AllStreams).select("sequence").collect().map(_.getLong(0))
+      === Array(1L))
+    // re-pointing the table leaves the first warehouse's files in place
+    assert(spark.read.parquet(s"$first/raw").count() === 3)
+  }
+
   test("ensureViews: SQL MV cascade resolves and matches Views.* (Q2-Q4)") {
     val wh = java.nio.file.Files.createTempDirectory("graft_mv_wh").toString
-    freshTables(wh)
+    Ddl.ensureTables(spark, wh)
     val raw = Ingest.envelopeToRaw(envelopes)
     val supprt = Ingest.subjectFilter(raw, "globex.supprt")
     val crmabc = Ingest.subjectFilter(raw, "globex.crmabc")

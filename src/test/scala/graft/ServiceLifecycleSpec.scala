@@ -7,7 +7,6 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch}
 import scala.jdk.CollectionConverters._
 import graft.config.GraftConfig
 import graft.logging.GraftLogger
-import graft.pipeline.Ddl
 import org.apache.spark.sql.execution.streaming.runtime.{StreamExecution, StreamingQueryWrapper}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
@@ -21,22 +20,6 @@ import org.scalatest.time.SpanSugar._
 class ServiceLifecycleSpec extends SparkSpec with TimeLimits {
   // a run that never returns fails its test instead of hanging the suite
   private implicit val signaler: Signaler = ThreadSignaler
-
-  // Service.run bootstraps the catalog tables at its warehouse; drop the
-  // ones this suite creates so later suites bootstrap their own locations.
-  private val views = Seq(Ddl.AnalyticsMv, Ddl.AllStreamsMv, Ddl.SupprtMv, Ddl.CrmabcMv)
-  private lazy val preexisting =
-    (views ++ Ddl.tables.map(_._1)).filter(spark.catalog.tableExists)
-
-  override def beforeAll(): Unit = { super.beforeAll(); preexisting }
-
-  override def afterAll(): Unit = {
-    // views first: they reference the tables
-    views.filterNot(preexisting.contains).foreach(n => spark.sql(s"DROP VIEW IF EXISTS $n"))
-    Ddl.tables.map(_._1).filterNot(preexisting.contains)
-      .foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
-    super.afterAll()
-  }
 
   private def env(seq: Long, subject: String, data: String, hhmm: String): String = {
     val quoted = data.replace("\"", "\\\"")

@@ -81,6 +81,19 @@ if [ -n "$conf_writes" ]; then
   echo "$conf_writes"
   exit 1
 fi
+# NO_CODEGEN in Spark's internal codegen factory-mode conf runs every
+# projection and predicate interpreted. Only the block-sink stream sets
+# it, around its own start() (NatsLikeStream.CadenceConf), where 1000-row
+# epochs cost less interpreted than compiled; the batch surface runs
+# generated code, which graft.CodegenPathSpec checks against eval. Fail
+# on the conf anywhere in src/main/scala but that constant's pair.
+factory_mode=$(grep -rnE 'spark\.sql\.codegen\.factoryMode|CODEGEN_FACTORY_MODE' src/main/scala \
+  | grep -vE '^src/main/scala/graft/streaming/NatsLikeStream\.scala:[0-9]+: *"spark\.sql\.codegen\.factoryMode" -> "NO_CODEGEN"\)$' || true)
+if [ -n "$factory_mode" ]; then
+  echo "gate: codegen factory mode set outside NatsLikeStream.CadenceConf:"
+  echo "$factory_mode"
+  exit 1
+fi
 # Each expression in src/main/scala/graft/expressions writes its kernel
 # once, as a companion-object method that eval and the generated code
 # both call. A Java loop in a doGenCode string is a second copy of a
