@@ -5,6 +5,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Streami
 import graft.config.GraftConfig
 import graft.logging.GraftLogger
 import graft.pipeline.Ingest
+import graft.queries.Tables
 import graft.streaming.{CheckpointCommits, CorpusStream, NatsLikeStream, SessionStream, TopKStream}
 
 
@@ -240,7 +241,7 @@ object Service {
       // verdicts go through the file sink, whose commit log makes them
       // exactly-once
       opts.get("delta").map { basePath =>
-        val baseDocs = spark.read.parquet(basePath).select("doc_id", "text")
+        val baseDocs = Tables.parquet(spark, basePath).select("doc_id", "text")
         log.info("delta dedup", "base" -> basePath)
         Stream("delta", "_checkpoint_delta", CorpusStream.deltaDedupEnvelopes(spark, envelopes,
           baseDocs).writeStream.outputMode("append").format("parquet")

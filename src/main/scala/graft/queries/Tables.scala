@@ -1,14 +1,67 @@
 package graft.queries
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.types.StructType
 
-/** Loaders for the driver-generated parquet corpus (TESTDATA.md). Plain
-  * parquet scans — filters/projections in the queries push down into these
-  * (verify with `.explain`: `PushedFilters`, pruned `ReadSchema`). */
+/** Loaders for the driver-generated parquet corpus (TESTDATA.md): parquet
+  * scans whose schema comes from one footer read on the driver
+  * ([[parquet]]), as the reference's DDL declares each table's schema
+  * once. Left to infer it, `spark.read.parquet` starts a one-task Spark job
+  * per read to open that same footer (about 85 ms per read on a warm
+  * 4-core `local` session). Filters/projections in the queries push down
+  * into these scans (verify with `.explain`: `PushedFilters`, pruned
+  * `ReadSchema`). */
 object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** A parquet file or directory scanned with [[footerSchema]]; every
+    * parquet read in `src/main/scala` goes through here (`tools/gate.sh`).
+    * With no data file to read a footer from (a missing path, an empty or
+    * partitioned directory), Spark infers the schema as before and raises
+    * its usual error where there is none. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  /** The schema `spark.read.parquet(path)` infers, without its Spark job;
+    * `None` when `path` matches no data file. Non-merging inference reads
+    * one footer: the file itself, or a directory's first data file in
+    * path order (hidden `_`/`.` names skipped, as Spark's file index skips
+    * them). A partitioned directory has no data file at its top, so its
+    * schema is left to inference. The footer goes through the conversion
+    * inference applies, `ParquetFileFormat.readSchemaFromFooter`: Spark's
+    * row-metadata schema if the writer left one, else the parquet types
+    * converted under the five session confs inference passes (e.g.
+    * `nanosAsLong`), the converter's other parameters at their defaults. */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(hadoopConf)
+    Option(fs.globStatus(p)).toSeq.flatten
+      .flatMap(s => if (s.isDirectory) fs.listStatus(s.getPath).toSeq else Seq(s))
+      .filter { s =>
+        val n = s.getPath.getName
+        s.isFile && !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+          n.endsWith("._COPYING_"))
+      }
+      .minByOption(_.getPath.toString).map { file =>
+        val footer = new Footer(file.getPath, ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(file, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+        ParquetFileFormat.readSchemaFromFooter(footer, new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = conf.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+          inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+          nanosAsLong = conf.legacyParquetNanosAsLong,
+          respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation))
+      }
+  }
 
   /** Total bytes of the files under the corpus dir (a driver-side file
     * walk, no Spark job); `None` when the walk fails. */

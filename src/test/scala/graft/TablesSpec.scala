@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.file.Files
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import graft.queries.Tables
 
@@ -11,12 +16,75 @@ import graft.queries.Tables
   */
 class TablesSpec extends SparkSpec {
 
-  private def fields(name: String): Map[String, DataType] = {
-    val df = name match {
-      case "events" => Tables.events(spark, Sf)
-      case other    => Tables.table(spark, Sf, other)
+  private val Names = Seq("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "events", "documents", "embeddings")
+
+  /** Every corpus present: the three driver SFs beside [[Sf]] and the
+    * benchmark's fixed corpus, all read-only. */
+  private val Corpora = {
+    val testdata = new java.io.File(Sf).getParent
+    (Seq("sf0.001", "sf0.01", "sf0.1").map(sf => s"$testdata/$sf") :+ "perfbench/data/corpus")
+      .filter(d => new java.io.File(d).isDirectory)
+  }
+
+  private def load(dir: String, name: String): DataFrame = name match {
+    case "events" => Tables.events(spark, dir)
+    case other    => Tables.table(spark, dir, other)
+  }
+
+  private def fields(name: String): Map[String, DataType] =
+    load(Sf, name).schema.fields.map(f => f.name -> f.dataType).toMap
+
+  test("every corpus table loads with the schema Spark infers") {
+    assert(Corpora.contains(Sf))
+    for (d <- Corpora; n <- Names) {
+      // events first: its ts dispatch sets the parquet conf both reads use
+      if (n == "events") Tables.events(spark, d)
+      val p = s"$d/$n.parquet"
+      assert(Tables.table(spark, d, n).schema === spark.read.parquet(p).schema, p)
     }
-    df.schema.fields.map(f => f.name -> f.dataType).toMap
+  }
+
+  test("loading every table and reading its schema starts no Spark job") {
+    val sc = spark.sparkContext
+    val started = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = started.put(
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      Names.foreach(load(Sf, _).schema)
+      sc.setJobDescription("marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      // the bus delivers job starts in order: all of the loads' jobs have
+      // arrived once the marker's has
+      val before = Iterator.continually(started.poll(30, TimeUnit.SECONDS)).map { d =>
+        assert(d != null, "the marker job's start never arrived"); d
+      }.takeWhile(_ != "marker").size
+      assert(before === 0)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a two-part directory written by Spark loads with the inferred schema") {
+    val dir = Files.createTempDirectory("graft_tables").resolve("docs").toString
+    val meta = new MetadataBuilder().putString("comment", "document id").build()
+    spark.range(0, 20, 1, 2)
+      .select(col("id").as("doc_id", meta), col("id").cast("string").as("text"))
+      .write.parquet(dir)
+    assert(new java.io.File(dir).list().count(_.startsWith("part-")) === 2)
+    val df = Tables.parquet(spark, dir)
+    assert(df.schema === spark.read.parquet(dir).schema)
+    assert(df.schema("doc_id").metadata === meta)
+    assert(df.count() === 20L)
+  }
+
+  test("a missing path fails as Spark's own read does") {
+    val missing = Files.createTempDirectory("graft_tables").resolve("absent").toString
+    val ours = intercept[Exception](Tables.parquet(spark, missing))
+    val spark0 = intercept[Exception](spark.read.parquet(missing))
+    assert(ours.getClass === spark0.getClass)
+    assert(ours.getMessage === spark0.getMessage)
   }
 
   test("events loads with ts canonicalized to TIMESTAMP (instant)") {

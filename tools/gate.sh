@@ -58,6 +58,18 @@ if [ -n "$builders" ]; then
   echo "$builders"
   exit 1
 fi
+# Every parquet read goes through graft.queries.Tables.parquet, which
+# gives the scan the schema of one footer read on the driver; a bare
+# spark.read.parquet infers it with a Spark job per read (about 85 ms of
+# fixed cost on every corpus table read). Fail on a parquet read in
+# src/main/scala outside queries/Tables.scala.
+parquet_reads=$(grep -rnE 'read\.(parquet\(|format\("parquet"\))' src/main/scala \
+  | grep -v '^src/main/scala/graft/queries/Tables\.scala:' || true)
+if [ -n "$parquet_reads" ]; then
+  echo "gate: parquet read outside graft/queries/Tables.scala:"
+  echo "$parquet_reads"
+  exit 1
+fi
 # Streaming operators read batch vs stream from their input's isStreaming
 # (one query runs both ways); a Boolean switch that callers must set to
 # match their input could disagree with it. Fail on a defaulted Boolean
