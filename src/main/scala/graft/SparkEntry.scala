@@ -1281,7 +1281,7 @@ object SparkEntry {
     // exact cosine verify on the deduped pair set.
     // ncells derives LINEARLY from the corpus (max(16, ceil(N/125)) —
     // the dedup curve, cells ∝ N so Σcellsize² ∝ N) in LOCKSTEP with
-    // Similarity.dupCentroids' in-plan derivation; the √N query-path
+    // Similarity.standInCentroids(e, dupCellsExpr); the √N query-path
     // curve stays with x19/x34.
     "x8_embedding_dups" -> (unitCte +
       s""", nc AS (SELECT GREATEST(16, CAST(CEIL(COUNT(*) / 125.0) AS BIGINT)) AS k FROM unit_t),
@@ -1417,7 +1417,8 @@ object SparkEntry {
         |  AND v.vts > c.ts - INTERVAL 1 HOUR AND v.vts <= c.ts
         |GROUP BY 1, 2, 3 ORDER BY 1, 2""".stripMargin,
 
-    // Same corpus-derived ncells as x8 (Similarity.standInCentroids).
+    // Corpus-derived ncells on the √N query curve, in lockstep with
+    // Similarity.standInCentroids(e, derivedCellsExpr).
     "x19_ann_ivf" -> (unitCte +
       s""", nc AS (SELECT GREATEST(16, CAST(FLOOR(SQRT(COUNT(*) / 8.0)) AS BIGINT)) AS k FROM unit_t),
          |cents AS (SELECT vec_id AS cid, u AS cu FROM unit_t, nc WHERE vec_id < k),

@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.Encoder
+import org.apache.spark.sql.{Column, DataFrame, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.functions.{col, posexplode, udaf}
 
 /** One scored neighbor row flowing through [[TopKByScore]]. */
 final case class Neighbor(cos: Double, neighbor_id: Long, label: Int)
@@ -52,4 +53,24 @@ final class TopKByScore(k: Int)
 
   override def outputEncoder: Encoder[Seq[Neighbor]] =
     ExpressionEncoder[Seq[Neighbor]]()
+}
+
+object TopKByScore {
+
+  /** The k best rows per `keys` group by (score DESC, id ASC) as
+    * (keys…, neighbor_id, label, cos, rank): the bounded-heap aggregate,
+    * then one `posexplode` of each group's ≤k buffer. `score` is a double,
+    * `id` a long and `payload` an int; the payload comes back as `label`,
+    * the score as `cos`, and `rank` is a long from 1. */
+  def ranked(df: DataFrame, keys: Seq[String], k: Int, score: Column,
+      id: Column, payload: Column): DataFrame = {
+    val topk = udaf(new TopKByScore(k), ExpressionEncoder[Neighbor]())
+    val ks = keys.map(col)
+    df.groupBy(ks: _*)
+      .agg(topk(score, id, payload).as("nbs"))
+      .select(ks :+ posexplode(col("nbs")).as(Seq("pos", "nb")): _*)
+      .select(ks ++ Seq(col("nb.neighbor_id").as("neighbor_id"),
+        col("nb.label").as("label"), col("nb.cos").as("cos"),
+        (col("pos") + 1).cast("long").as("rank")): _*)
+  }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.ChFunctions.dsum
 import graft.functions.SketchFunctions
 import graft.functions.TextFunctions._
+import graft.functions.TopKByScore
 import graft.queries.Tables
 import graft.util.OperatorCaches
 
@@ -450,17 +451,11 @@ object Curation {
     * the kept set is deterministic and the oracle's rank window —
     * fine at oracle scale — reproduces it exactly. */
   def sourceCap(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
     val d = docs(spark, sfDir)
-    val topk = udaf(new graft.functions.TopKByScore(SourceCap),
-      ExpressionEncoder[graft.functions.Neighbor]())
-    val kept = d
-      .groupBy("source")
-      .agg(topk(col("n_chars").cast("double"), col("doc_id"), lit(0))
-        .as("nbs"))
-      .select(col("source"), posexplode(col("nbs")).as(Seq("pos", "nb")))
-      .select(col("source"), col("nb.neighbor_id").as("doc_id"),
-        (col("pos") + 1).cast("long").as("src_rank"))
+    val kept = TopKByScore.ranked(d, Seq("source"), SourceCap,
+        col("n_chars").cast("double"), col("doc_id"), lit(0))
+      .select(col("source"), col("neighbor_id").as("doc_id"),
+        col("rank").as("src_rank"))
     d.select(col("doc_id"), col("source"), col("n_chars"))
       .join(kept, Seq("source", "doc_id"), "left")
       .withColumn("keep", col("src_rank").isNotNull)
@@ -903,7 +898,6 @@ object Curation {
     clusterQuotaSampleFrom(Tables.documentsParallel(spark, sfDir))
 
   private[graft] def clusterQuotaSampleFrom(docsDf: DataFrame): DataFrame = {
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
     val d = OperatorCaches.persist(docsDf.select(
       col("doc_id"),
       simhash64(col("text")).bitwiseAND(lit(Dedup.ClusterSigMask))
@@ -913,16 +907,10 @@ object Curation {
     val withSig = d.filter(col("cluster").isNotNull)
     val sizes = withSig.groupBy(col("cluster").as("k_cluster"))
       .agg(count(lit(1)).as("cluster_size"))
-    val topk = udaf(new graft.functions.TopKByScore(ClusterQuota),
-      ExpressionEncoder[graft.functions.Neighbor]())
-    val kept = withSig
-      .groupBy("cluster")
-      .agg(topk((-col("h52")).cast("double"), col("doc_id"), lit(0))
-        .as("nbs"))
-      .select(col("cluster").as("q_cluster"),
-        posexplode(col("nbs")).as(Seq("pos", "nb")))
-      .select(col("q_cluster"), col("nb.neighbor_id").as("doc_id"),
-        (col("pos") + 1).cast("long").as("q_rank"))
+    val kept = TopKByScore.ranked(withSig, Seq("cluster"), ClusterQuota,
+        (-col("h52")).cast("double"), col("doc_id"), lit(0))
+      .select(col("cluster").as("q_cluster"), col("neighbor_id").as("doc_id"),
+        col("rank").as("q_rank"))
     d.join(sizes, col("cluster") === col("k_cluster"), "left")
       .drop("k_cluster")
       .join(kept,

@@ -1,9 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
-import graft.functions.{Neighbor, TopKByScore}
+import graft.functions.TopKByScore
 import graft.functions.VectorFunctions.{dot, l2sq}
 import graft.util.OperatorCaches
 
@@ -20,9 +19,9 @@ import graft.util.OperatorCaches
   * [[NumSubspaces]]·[[CodebookSize]] precomputed dot products
   * (Jégou, Douze, Schmid, "Product Quantization for Nearest Neighbor
   * Search", TPAMI 2011 — [[adcTopK]] is the ADC scan alone, and
-  * [[ivfPqTopK]] is the full IVFADC: trained-cell routing
-  * ([[Similarity.ivfTopKTrained]]) with the ADC scan restricted to the
-  * probed cells).
+  * [[ivfPqTopK]] is the full IVFADC: x34's trained-cell probe
+  * ([[Similarity.ivfProbe]]) with the ADC scan restricted to the probed
+  * cells).
   *
   * Scale shape:
   *  - the codebook is [[NumSubspaces]]·[[CodebookSize]] = 128 rows — a
@@ -41,9 +40,10 @@ import graft.util.OperatorCaches
   *    [[Similarity.bruteForceTopK]]: per-query LUTs (M·K dots each) are
   *    built against the bounded codebook, broadcast, and ONE pass over
   *    the codes relation scores every (query, vector) pair with M array
-  *    lookups — no float vector is touched after encoding. Top-k is the
-  *    bounded-heap [[TopKByScore]] partial aggregate (shuffle carries
-  *    ≤ k rows per partition per query), never a corpus-wide rank window.
+  *    lookups — no float vector is touched after encoding. Top-k is
+  *    [[TopKByScore.ranked]], the bounded-heap partial aggregate (shuffle
+  *    carries ≤ k rows per partition per query), never a corpus-wide
+  *    rank window.
   *
   * Numerical determinism (the oracle contract): distances and LUT entries
   * are sequential left folds in array order ([[graft.expressions.VecL2Sq]]
@@ -144,16 +144,13 @@ object ProductQuantization {
     val codes = OperatorCaches.persist(codeWords(e))
     // ADC scan: one pass over the codes relation, M lookups per pair,
     // sequential fold over subspaces (bit-identical to the oracle's)
-    val topk = udaf(new TopKByScore(TopK), ExpressionEncoder[Neighbor]())
-    broadcast(queryLuts(e))
+    val pairs = broadcast(queryLuts(e))
       .join(codes, col("query_id") =!= col("vec_id"))
       .withColumn("adc", adcScore)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"), col("adc"))
-      .groupBy("query_id")
-      .agg(topk(col("adc"), col("neighbor_id"), lit(0)).as("nbs"))
-      .select(col("query_id"), posexplode(col("nbs")).as(Seq("pos", "nb")))
-      .select(col("query_id"), col("nb.neighbor_id").as("neighbor_id"),
-        col("nb.cos").as("adc"), (col("pos") + 1).cast("long").as("rank"))
+    TopKByScore.ranked(pairs, Seq("query_id"), TopK, col("adc"),
+        col("vec_id"), lit(0))
+      .select(col("query_id"), col("neighbor_id"), col("cos").as("adc"),
+        col("rank"))
       .orderBy("query_id", "rank")
   }
 
@@ -167,9 +164,9 @@ object ProductQuantization {
     * scan alone, x34 the routing alone).
     *
     * Composition (each piece already oracle-gated on its own):
-    *  - Lloyd-trained centroids ([[Similarity.kmeansTrain]], K on the
-    *    √(N/8) curve) + the two-level quantized ranking assign every
-    *    vector to its cell (crn = 1) and give each query its
+    *  - x34's probe, [[Similarity.ivfProbe]] over the Lloyd-trained
+    *    centroids ([[Similarity.kmeansTrain]], K on the √(N/8) curve),
+    *    assigns every vector to its cell and gives each query its
     *    nprobe-cell probe list;
     *  - the PQ encode ([[pqEncode]]) compresses the corpus to M codes
     *    per vector, joined with the cell assignment into the stored
@@ -178,16 +175,15 @@ object ProductQuantization {
     *    probe list into one broadcast-able (query, cell, lut) relation
     *    — ≤ |queries|·nprobe rows;
     *  - ONE hash join on the CELL key restricts the ADC scan to probed
-    *    cells' codes; top-k is the bounded-heap partial aggregate.
+    *    cells' codes; top-k is [[TopKByScore.ranked]].
     *
     * Scale shape: the cell id is the partition key of the stored codes
     * relation, so each query reads nprobe·N/K ∝ √N candidate CODE words
-    * (8 B each) instead of the corpus — the probe-volume curve measured
-    * for x34 (BASELINE.md round-10: ~2.5k candidates/query at sf10 vs
-    * 25k under fixed K) now over rows 64× narrower. No NLJ touches a
-    * corpus-sized relation: the only broadcasts are the codebook
-    * (M·K = 128 rows), the query LUT table, and the trainer's bounded
-    * centroid relations.
+    * (8 B each) instead of the corpus — x34's probe-volume curve
+    * (BASELINE.md round-10: ~2.5k candidates/query at sf10) over rows
+    * 64× narrower. No NLJ touches a corpus-sized relation: the only
+    * broadcasts are the codebook (M·K = 128 rows), the query LUT table,
+    * and the trainer's bounded centroid relations.
     *
     * Determinism: training, routing, encoding, LUTs, the ADC fold, and
     * the (adc DESC, id) tie-break are each the bit-exact constructions
@@ -195,34 +191,22 @@ object ProductQuantization {
     * hash-exact against the oracle's identical derivation. */
   def ivfPqTopK(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Similarity.normalized(spark, sfDir)
-    val ranked = OperatorCaches.persist(
-      Similarity.quantizedRanking(e,
-        Similarity.trainedCentroids(spark, sfDir), Similarity.NumProbes))
-    val assign = ranked.filter(col("crn") === 1)
-      .select(col("vec_id"), col("cid").as("cell"))
+    val (assign, probes) =
+      Similarity.ivfProbe(e, Similarity.trainedCentroids(spark, sfDir))
     // the stored IVF-PQ index: cell-keyed PQ code words
-    val codes = OperatorCaches.persist(codeWords(e).join(assign, "vec_id"))
-    val probes = ranked
-      .join(broadcast(Similarity.queryRows(e).select("vec_id")),
-        Seq("vec_id"), "left_semi")
-      .filter(col("crn") <= Similarity.NumProbes)
-      .select(col("vec_id").as("query_id"), col("cid").as("cell"))
+    val codes = OperatorCaches.persist(codeWords(e).join(
+      assign.select(col("neighbor_id").as("vec_id"), col("cell")), "vec_id"))
     // (query, probed cell, lut): ≤ |queries|·nprobe rows — the bounded
     // broadcast that makes the cell join one corpus-free hash probe
-    val qtab = probes.join(queryLuts(e), "query_id")
-    val topk = udaf(new TopKByScore(TopK), ExpressionEncoder[Neighbor]())
-    broadcast(qtab).join(codes, Seq("cell"))
+    val qtab = probes.select("query_id", "cell").join(queryLuts(e), "query_id")
+    val pairs = broadcast(qtab).join(codes, Seq("cell"))
       .filter(col("query_id") =!= col("vec_id"))
       .withColumn("adc", adcScore)
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("cell"), col("adc"))
-      .groupBy("query_id")
-      .agg(topk(col("adc"), col("neighbor_id"),
-        col("cell").cast("int")).as("nbs"))
-      .select(col("query_id"), posexplode(col("nbs")).as(Seq("pos", "nb")))
-      .select(col("query_id"), col("nb.neighbor_id").as("neighbor_id"),
-        col("nb.label").cast("long").as("cell"), col("nb.cos").as("adc"),
-        (col("pos") + 1).cast("long").as("rank"))
+    TopKByScore.ranked(pairs, Seq("query_id"), TopK, col("adc"),
+        col("vec_id"), col("cell").cast("int"))
+      .select(col("query_id"), col("neighbor_id"),
+        col("label").cast("long").as("cell"), col("cos").as("adc"),
+        col("rank"))
       .orderBy("query_id", "rank")
   }
 
@@ -230,25 +214,10 @@ object ProductQuantization {
     * x58 evaluation applied to [[ivfPqTopK]], closing the loop on the
     * capstone index: both the routing loss (a true neighbor in an
     * unprobed cell) and the quantization loss (ADC misranking inside a
-    * probed cell) land in one per-query `recall_ppm`. Same scale shape
-    * as x58: past the two scans under evaluation everything is
-    * |queries|·k-sized; the ppm arithmetic is exact integers, so the
-    * gate stays hash-exact. */
-  def ivfPqRecall(spark: SparkSession, sfDir: String): DataFrame = {
-    val k = Similarity.RecallK
-    val exact = Similarity.bruteForceTopK(spark, sfDir)
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id")
-    val approx = ivfPqTopK(spark, sfDir)
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id")
-    val hits = exact.join(approx, Seq("query_id", "neighbor_id"))
-      .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
-    exact.groupBy("query_id").agg(count(lit(1)).as("n_exact"))
-      .join(hits, Seq("query_id"), "left")
-      .withColumn("n_hits", coalesce(col("n_hits"), lit(0L)))
-      .withColumn("recall_ppm", expr(s"n_hits * 1000000 div $k"))
-      .select("query_id", "n_exact", "n_hits", "recall_ppm")
-      .orderBy("query_id")
-  }
+    * probed cell) land in one per-query `recall_ppm`. It is x58's
+    * [[Similarity.recallAtK]] over this ranking: past the two scans under
+    * evaluation everything is |queries|·k-sized; the ppm arithmetic is
+    * exact integers, so the gate stays hash-exact. */
+  def ivfPqRecall(spark: SparkSession, sfDir: String): DataFrame =
+    Similarity.recallAtK(spark, sfDir, ivfPqTopK(spark, sfDir))
 }

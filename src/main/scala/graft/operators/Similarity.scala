@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{Neighbor, TopKByScore}
+import graft.functions.TopKByScore
 import graft.functions.VectorFunctions._
 import graft.queries.Tables
 import graft.util.OperatorCaches
@@ -46,7 +46,7 @@ object Similarity {
     * relation 2-4 times (queries, candidates, fetch sides) — without the
     * materialization barrier, project-collapse re-normalizes the corpus
     * once per reference. */
-  private[operators] def normalized(spark: SparkSession, sfDir: String): DataFrame =
+  private[graft] def normalized(spark: SparkSession, sfDir: String): DataFrame =
     OperatorCaches.persist(Tables.embeddingsParallel(spark, sfDir)
       .withColumn("nrm", norm(col("embedding")))
       .select(col("vec_id"), col("label"),
@@ -65,15 +65,10 @@ object Similarity {
       .select(col("vec_id").as("query_id"), col("u").as("qu"))
     val c = e.select(col("vec_id").as("neighbor_id"), col("u").as("nu"),
       col("label"))
-    val topk = udaf(new TopKByScore(TopK), ExpressionEncoder[Neighbor]())
-    broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
+    val pairs = broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
       .withColumn("cos", dot(col("qu"), col("nu")))
-      .groupBy("query_id")
-      .agg(topk(col("cos"), col("neighbor_id"), col("label")).as("nbs"))
-      .select(col("query_id"), posexplode(col("nbs")).as(Seq("pos", "nb")))
-      .select(col("query_id"), col("nb.neighbor_id").as("neighbor_id"),
-        col("nb.label").as("label"), col("nb.cos").as("cos"),
-        (col("pos") + 1).cast("long").as("rank"))
+    TopKByScore.ranked(pairs, Seq("query_id"), TopK, col("cos"),
+        col("neighbor_id"), col("label"))
       .orderBy("query_id", "rank")
   }
 
@@ -95,17 +90,12 @@ object Similarity {
       col("u").as("nu"))
     // partial top-k per partition (bounded heap), not a per-query window:
     // a bucket is corpus/2^planes at scale — far too big for one task
-    val topk = udaf(new TopKByScore(3), ExpressionEncoder[Neighbor]())
-    broadcast(qs).join(cs, Seq("sig"))
+    val pairs = broadcast(qs).join(cs, Seq("sig"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos", dot(col("qu"), col("nu")))
-      .groupBy("sig", "query_id")
-      .agg(topk(col("cos"), col("neighbor_id"), lit(0)).as("nbs"))
-      .select(col("sig"), col("query_id"),
-        posexplode(col("nbs")).as(Seq("pos", "nb")))
-      .select(col("sig"), col("query_id"),
-        col("nb.neighbor_id").as("neighbor_id"), col("nb.cos").as("cos"),
-        (col("pos") + 1).cast("long").as("rank"))
+    TopKByScore.ranked(pairs, Seq("sig", "query_id"), 3, col("cos"),
+        col("neighbor_id"), lit(0))
+      .select("sig", "query_id", "neighbor_id", "cos", "rank")
       .orderBy("query_id", "rank")
   }
 
@@ -117,34 +107,30 @@ object Similarity {
     * query touches nprobe/K of the corpus instead of all of it. */
   def ivfTopK(spark: SparkSession, sfDir: String): DataFrame = {
     val e = normalized(spark, sfDir)
-    ivfTopKWith(e, standInCentroids(e))
+    ivfTopKWith(e, standInCentroids(e, derivedCellsExpr))
   }
 
-  /** Corpus-derived cell count for the STAND-IN centroid set of
-    * [[ivfTopK]] (the QUERY path; [[embeddingDups]] uses the linear
-    * [[dupCellsExpr]] curve instead): ncells = max(16, ⌊√(N/8)⌋) — the
+  /** The STAND-IN centroids: the first `cells(N)` unit vectors as (cid,
+    * cu), N a 1-row aggregate cross-joined into the plan (not a driver
+    * collect; the oracle derives it with a scalar subquery). Queries and
+    * [[lloydFrom]]'s init pass [[derivedCellsExpr]], dedup [[dupCellsExpr]]. */
+  private[graft] def standInCentroids(e: DataFrame, cells: Column => Column): DataFrame = {
+    val k = e.agg(cells(count(lit(1))).as("ncells"))
+    e.join(broadcast(k)).filter(col("vec_id") < col("ncells"))
+      .select(col("vec_id").as("cid"), col("u").as("cu"))
+  }
+
+  /** Corpus-derived cell count for the query path's stand-in centroids
+    * ([[ivfTopK]]): ncells = max(16, ⌊√(N/8)⌋) — the
     * √N-family sizing IVF deployments use (FAISS guidance is 4√N–16√N
     * cells; the /8 keeps the historical 16 cells at the test corpora's
     * N ≤ 2000, so the derivation is behavior-preserving there, while a
     * 20k-vector corpus gets 50 cells and 1e9 vectors ~11k — holding the
     * per-cell candidate volume Σcellsize² ≈ probes²·N²/ncells on a
-    * sub-quadratic curve). The count is a 1-row aggregate CROSS-JOINED
-    * into the plan (a one-row broadcast, not a driver-side collect), so
-    * the derivation stays declarative and the DuckDB oracle derives the
-    * identical value with a scalar subquery. Since round 10,
-    * [[kmeansTrain]]'s K rides the SAME curve (this relation seeds
-    * [[lloyd]]'s init) — the trained index otherwise kept a fixed 16
-    * cells at any corpus size, which made x34's nprobe=2 probe scan
-    * N/8 candidates per query (linear) instead of ∝ √N·nprobe/k·N ∝ √N.
-    * [[GraftProperties]] pins the derivation curve. */
-  private def standInCentroids(e: DataFrame): DataFrame = {
-    val k = e.agg(derivedCellsExpr(count(lit(1))).as("ncells"))
-    e.join(broadcast(k)).filter(col("vec_id") < col("ncells"))
-      .select(col("vec_id").as("cid"), col("u").as("cu"))
-  }
-
-  /** ncells as an expression over a corpus count — shared by
-    * [[standInCentroids]] and the property spec that pins the curve. */
+    * sub-quadratic curve). [[kmeansTrain]]'s K rides the SAME curve
+    * (these centroids seed [[lloyd]]'s init), so x34's nprobe=2 probe
+    * scans ∝ √N candidates per query, not N/8. [[GraftProperties]] pins
+    * the curve. */
   private[graft] def derivedCellsExpr(n: Column): Column =
     greatest(lit(NumCells.toLong),
       floor(sqrt(n.cast("double") / 8.0)).cast("long"))
@@ -167,13 +153,6 @@ object Similarity {
   private[graft] def dupCellsExpr(n: Column): Column =
     greatest(lit(NumCells.toLong),
       ceil(n.cast("double") / 125.0).cast("long"))
-
-  /** [[standInCentroids]] with the dedup cell curve ([[dupCellsExpr]]). */
-  private def dupCentroids(e: DataFrame): DataFrame = {
-    val k = e.agg(dupCellsExpr(count(lit(1))).as("ncells"))
-    e.join(broadcast(k)).filter(col("vec_id") < col("ncells"))
-      .select(col("vec_id").as("cid"), col("u").as("cu"))
-  }
 
   /** x34: [[ivfTopK]] over TRAINED cells — the end-to-end IVF a real
     * deployment runs: [[kmeansTrain]]'s Lloyd centroids replace the
@@ -273,16 +252,13 @@ object Similarity {
         (col("pos") + 1).cast("int").as("crn"))
   }
 
-  /** Shared IVF probe/rank pipeline over an arbitrary (cid, cu) centroid
-    * relation (bounded by K — the broadcast is legitimate). */
-  private def ivfTopKWith(e: DataFrame, cents: DataFrame): DataFrame = {
-    // assignment: nearest candidate centroid per vector (rank 1), probe
-    // list for queries (rank <= NumProbes) — one two-level ranking
-    // ([[quantizedRanking]]), two slices. The persist bounds the
-    // materialization at ~N rows (assignment) + |queries|·NumProbes
-    // (probes) and stops the two slices re-running the quantizer.
-    // Query membership rides on the ranking as an `is_q` flag (a pure
-    // predicate, no join).
+  /** The IVF probe of x19, x34, x105 and x108 over a K-bounded (cid, cu)
+    * centroid relation: (assign, probes) = every vector's nearest cell
+    * (neighbor_id, cell, nu) and each query's [[NumProbes]] nearest cells
+    * (query_id, cell, qu), two slices of one [[quantizedRanking]]. Query
+    * membership rides on the ranking as an `is_q` flag (a pure predicate,
+    * no join), so the persist holds N + |queries|·(NumProbes − 1) rows. */
+  private[graft] def ivfProbe(e: DataFrame, cents: DataFrame): (DataFrame, DataFrame) = {
     val ranked = OperatorCaches.persist(quantizedRanking(e, cents, NumProbes)
       .withColumn("is_q", queryPred)
       .filter(col("crn") === 1 ||
@@ -290,28 +266,30 @@ object Similarity {
     val assign = ranked.filter(col("crn") === 1)
       .select(col("vec_id").as("neighbor_id"), col("cid").as("cell"),
         col("u").as("nu"))
-    val probes = ranked.filter(col("crn") <= NumProbes && col("is_q"))
+    val probes = ranked.filter(col("is_q") && col("crn") <= NumProbes)
       .select(col("vec_id").as("query_id"), col("cid").as("cell"),
         col("u").as("qu"))
+    (assign, probes)
+  }
+
+  /** x19/x34: [[ivfProbe]], then the top-k over the probed cells. */
+  private def ivfTopKWith(e: DataFrame, cents: DataFrame): DataFrame = {
+    val (assign, probes) = ivfProbe(e, cents)
+    val pairs = broadcast(probes).join(assign, Seq("cell"))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .withColumn("cos", dot(col("qu"), col("nu")))
     // partial top-k per partition across the probed cells (a cell is
     // corpus/K at scale — never funnel it into one task per query); the
     // neighbor's cell rides in the heap payload (cid < NumCells fits int)
-    val topk = udaf(new TopKByScore(3), ExpressionEncoder[Neighbor]())
-    broadcast(probes).join(assign, Seq("cell"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", dot(col("qu"), col("nu")))
-      .groupBy("query_id")
-      .agg(topk(col("cos"), col("neighbor_id"), col("cell").cast("int")).as("nbs"))
-      .select(col("query_id"), posexplode(col("nbs")).as(Seq("pos", "nb")))
-      .select(col("query_id"),
-        col("nb.neighbor_id").as("neighbor_id"),
-        col("nb.label").cast("long").as("cell"), col("nb.cos").as("cos"),
-        (col("pos") + 1).cast("long").as("rank"))
+    TopKByScore.ranked(pairs, Seq("query_id"), 3, col("cos"),
+        col("neighbor_id"), col("cell").cast("int"))
+      .select(col("query_id"), col("neighbor_id"),
+        col("label").cast("long").as("cell"), col("cos"), col("rank"))
       .orderBy("query_id", "rank")
   }
 
   val NumCells = 16
-  private[operators] val NumProbes = 2
+  private[graft] val NumProbes = 2
 
   /** Probe count for [[embeddingDups]] — deliberately deeper than
     * [[NumProbes]] (a top-k QUERY can tolerate a missed neighbor; a
@@ -391,7 +369,7 @@ object Similarity {
   /** [[KmeansIters]] Lloyd rounds: (trained centroids, final-round
     * assignment). Pure DataFrame composition — no driver actions.
     *
-    * K is corpus-derived ([[standInCentroids]]'s √(N/8) curve, floor
+    * K is corpus-derived ([[derivedCellsExpr]]'s √(N/8) curve, floor
     * [[NumCells]]) — NOT a fixed constant. With fixed K=16 the trained
     * index's probe stage scanned nprobe/16 = N/8 of the corpus per query
     * at ANY corpus size; on the √ curve per-query candidate volume is
@@ -431,7 +409,7 @@ object Similarity {
   private[graft] def lloydFrom(e: DataFrame): (DataFrame, DataFrame) = {
     val vsum = udaf(new graft.functions.VecSumScaled(KmeansScale, Dim),
       ExpressionEncoder[Array[Double]]())
-    var cents = standInCentroids(e)
+    var cents = standInCentroids(e, derivedCellsExpr)
     var lastAssign: DataFrame = null
     for (_ <- 1 to KmeansIters) {
       val carr = cents.groupBy()
@@ -518,7 +496,7 @@ object Similarity {
     * flag — the relation a curation pipeline semi-joins against. */
   def semDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val e = normalized(spark, sfDir)
-    val cents = dupCentroids(e)
+    val cents = standInCentroids(e, dupCellsExpr)
     val assign = quantizedRanking(e, cents, 1).filter(col("crn") === 1)
       .select(col("vec_id"), col("u"), col("cid").as("cell"))
     // centroid similarity for the keep-priority ranking (the quantizer
@@ -563,7 +541,7 @@ object Similarity {
     * where cells are also the partition key. */
   def embeddingDups(spark: SparkSession, sfDir: String): DataFrame = {
     val e = normalized(spark, sfDir)
-    val cents = dupCentroids(e)
+    val cents = standInCentroids(e, dupCellsExpr)
     // two-level assignment ([[quantizedRanking]]) — with this op's
     // LINEAR cell curve the old brute-force matrix was the N²/125 term.
     // The unit vector RIDES THROUGH the cell join (u is selected here,
@@ -593,7 +571,7 @@ object Similarity {
       .orderBy("id_a", "id_b")
   }
 
-  /** Cutoff for [[annRecall]]'s recall@k (both rankings truncated to k). */
+  /** Cutoff for [[recallAtK]] (both rankings truncated to k). */
   val RecallK = 3
 
   /** x58: ANN index self-evaluation — recall@k of the IVF index
@@ -609,14 +587,19 @@ object Similarity {
     * corpus size; the cost IS the two scans under evaluation.
     * `recall_ppm` is exact integer arithmetic (hits·10⁶ div k), so the
     * gate stays hash-exact with no float division. */
-  def annRecall(spark: SparkSession, sfDir: String): DataFrame = {
+  def annRecall(spark: SparkSession, sfDir: String): DataFrame =
+    recallAtK(spark, sfDir, ivfTopK(spark, sfDir))
+
+  /** x58/x106: recall@[[RecallK]] of an approximate (query_id, neighbor_id,
+    * …, rank) ranking against [[bruteForceTopK]], per query. */
+  private[operators] def recallAtK(spark: SparkSession, sfDir: String,
+      approx: DataFrame): DataFrame = {
     val exact = bruteForceTopK(spark, sfDir)
       .filter(col("rank") <= RecallK)
       .select("query_id", "neighbor_id")
-    val approx = ivfTopK(spark, sfDir)
-      .filter(col("rank") <= RecallK)
-      .select("query_id", "neighbor_id")
-    val hits = exact.join(approx, Seq("query_id", "neighbor_id"))
+    val hits = exact
+      .join(approx.filter(col("rank") <= RecallK)
+        .select("query_id", "neighbor_id"), Seq("query_id", "neighbor_id"))
       .groupBy("query_id").agg(count(lit(1)).as("n_hits"))
     exact.groupBy("query_id").agg(count(lit(1)).as("n_exact"))
       .join(hits, Seq("query_id"), "left")
@@ -643,12 +626,12 @@ object Similarity {
     * pipelines (GPT-3 appendix C descendants) catch it.
     *
     * Shape for scale: the trained-IVF probe path, NOT brute force — the
-    * eval set probes its [[NumProbes]] nearest Lloyd cells
-    * ([[quantizedRanking]] over [[trainedCentroids]], K on the √(N/8)
-    * curve) and scans only those cells' members, so per-eval-vector work
-    * is ∝ √N and the full scan shape matches x34's audited plan: one
-    * persisted ranking pass, a broadcast of the |eval|·nprobe probe
-    * relation, one codegen'd [[graft.expressions.VecDot]] per candidate.
+    * eval set probes its [[NumProbes]] nearest Lloyd cells through x34's
+    * [[ivfProbe]] over [[trainedCentroids]] (K on the √(N/8) curve) and
+    * scans only those cells' members, so per-eval-vector work is ∝ √N
+    * and the scan shape is x34's audited plan: one persisted ranking
+    * pass, a broadcast of the |eval|·nprobe probe relation, one
+    * codegen'd [[graft.expressions.VecDot]] per candidate.
     * Recall semantics are x34's (a contaminant outside the probed cells
     * is missed — the oracle mirrors the identical probe pipeline, so the
     * gate stays hash-exact; x58/x106 are the recall audits for this
@@ -656,17 +639,7 @@ object Similarity {
     * partner), so the output is non-vacuous at any τ. */
   def semanticDecontaminate(spark: SparkSession, sfDir: String): DataFrame = {
     val e = normalized(spark, sfDir)
-    val ranked = OperatorCaches.persist(
-      quantizedRanking(e, trainedCentroids(spark, sfDir), NumProbes)
-        .withColumn("is_q", queryPred)
-        .filter(col("crn") === 1 ||
-          (col("is_q") && col("crn") <= NumProbes)))
-    val assign = ranked.filter(col("crn") === 1)
-      .select(col("vec_id").as("neighbor_id"), col("cid").as("cell"),
-        col("u").as("nu"))
-    val probes = ranked.filter(col("is_q") && col("crn") <= NumProbes)
-      .select(col("vec_id").as("query_id"), col("cid").as("cell"),
-        col("u").as("qu"))
+    val (assign, probes) = ivfProbe(e, trainedCentroids(spark, sfDir))
     // a (query, neighbor) pair can appear at most once: the neighbor's
     // cell is its unique crn=1 assignment, so no distinct is needed
     // before the count. max(struct) is the deterministic argmax (best

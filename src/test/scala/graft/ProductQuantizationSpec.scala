@@ -160,6 +160,32 @@ class ProductQuantizationSpec extends SparkSpec {
     OperatorCaches.release(spark)
   }
 
+  test("ivfProbe, the probe x19, x34, x105 and x108 share: every vector " +
+      "has exactly one cell, and each query probes NumProbes distinct " +
+      "cells, its own among them (stand-in and trained centroids)") {
+    import graft.operators.Similarity
+    val e = Similarity.normalized(spark, Sf)
+    val n = e.count()
+    Seq(Similarity.standInCentroids(e, Similarity.derivedCellsExpr),
+        Similarity.trainedCentroids(spark, Sf)).foreach { cents =>
+      val (assign, probes) = Similarity.ivfProbe(e, cents)
+      val cellOf = assign.select("neighbor_id", "cell").collect()
+        .map(r => r.getLong(0) -> r.getLong(1))
+      assert(cellOf.length === n)
+      assert(cellOf.map(_._1).distinct.length === n)
+      val own = cellOf.toMap
+      val probed = probes.select("query_id", "cell").collect()
+        .groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)) }
+      assert(probed.keySet === (0L until 10L).toSet)
+      probed.foreach { case (q, cells) =>
+        assert(cells.length === Similarity.NumProbes, s"query $q: $cells")
+        assert(cells.distinct.length === Similarity.NumProbes, s"query $q: $cells")
+        assert(cells.contains(own(q)), s"query $q: own cell ${own(q)} not in $cells")
+      }
+    }
+    OperatorCaches.release(spark)
+  }
+
   test("ivf-pq recall eval: recall_ppm equals the driver-side " +
       "intersection of the brute-force and IVF-PQ top-k outputs") {
     import graft.operators.Similarity

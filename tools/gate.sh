@@ -133,6 +133,34 @@ if [ -n "$param_defaults" ]; then
   echo "$param_defaults"
   exit 1
 fi
+# The bounded-heap top-k (graft.functions.TopKByScore) has one DataFrame
+# step, TopKByScore.ranked: the aggregate, the explode and the rank. A
+# `new TopKByScore(` elsewhere is another copy of that step (seven
+# operators once each wrote it out). Fail on one outside
+# functions/TopKByScore.scala.
+topk_sites=$(grep -rnE 'new (graft\.functions\.)?TopKByScore\(' src/main/scala \
+  | grep -v '^src/main/scala/graft/functions/TopKByScore\.scala:' || true)
+if [ -n "$topk_sites" ]; then
+  echo "gate: TopKByScore built outside TopKByScore.ranked:"
+  echo "$topk_sites"
+  exit 1
+fi
+# The IVF probe (assignment + query probe slices of one ranking, query
+# membership as an is_q flag) has one body, Similarity.ivfProbe, which
+# x19, x34, x105 and x108 call (each once spelled it out). Fail on an
+# is_q flag in src/main/scala outside that method.
+is_q_flags=$(find src/main/scala -name '*.scala' | sort | xargs awk '
+  FNR == 1 { d = "" }
+  /(^|[^A-Za-z0-9_])def [A-Za-z_]/ { d = $0 }
+  index($0, "withColumn(\"is_q\"") &&
+    !(FILENAME ~ /graft\/operators\/Similarity\.scala$/ && d ~ /def ivfProbe\(/) {
+    print FILENAME ":" FNR ":" $0
+  }')
+if [ -n "$is_q_flags" ]; then
+  echo "gate: is_q probe flag outside Similarity.ivfProbe:"
+  echo "$is_q_flags"
+  exit 1
+fi
 # Compile (main + test), then the analysis-only smoke: resolve every
 # query plan + entry() at sf0.001 (graft.Analyze -- df.schema only, no
 # execution, ~30 s warm). Round 7's events/timestamp_ntz environment
